@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.nio.charset.StandardCharsets.UTF_8
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line `{"metric":"total",...}`. The line is printed to
@@ -40,7 +39,6 @@ object Bench {
   private def parentMain(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = SparkEntry.queries.keys.toSeq // canonical iteration order
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -52,7 +50,7 @@ object Bench {
     val byFamily = names.groupBy(familyOf)
     Families.filter(byFamily.contains).foreach { fam =>
       val famNames = byFamily(fam)
-      val partial = runShardChild(fam, famNames, sfDir, cpus, shardDir)
+      val partial = runShardChild(fam, famNames, sfDir, shardDir)
       // merge; a name the child never reported = the shard died mid-query
       // (crash/OOM/timeout) — charge it as an error, never a fast success
       famNames.foreach { n =>
@@ -84,7 +82,7 @@ object Bench {
     * from the child's incrementally-appended TSV partial. Falls back to
     * an in-process run if the JVM cannot be spawned at all. */
   private def runShardChild(fam: String, famNames: Seq[String], sfDir: String,
-      cpus: String, shardDir: java.io.File)
+      shardDir: java.io.File)
       : Map[String, Either[String, Double]] = {
     val namesFile = new java.io.File(shardDir, s"$fam.names").getAbsolutePath
     val partialFile = new java.io.File(shardDir, s"$fam.tsv").getAbsolutePath
@@ -119,14 +117,14 @@ object Bench {
         System.err.println(s"[bench] $fam child exited ${proc.exitValue()} " +
           s"with no partial (log: ${logFile.getAbsolutePath}); " +
           "falling back in-process")
-        runShardInProcess(famNames, sfDir, cpus, partialFile)
+        runShardInProcess(famNames, sfDir, partialFile)
         readPartial(partialFile)
       } else partial
     } catch {
       case _: java.io.IOException =>
         // JVM spawn impossible in this environment — degrade to the
         // pre-r14 single-JVM behavior for this family
-        runShardInProcess(famNames, sfDir, cpus, partialFile)
+        runShardInProcess(famNames, sfDir, partialFile)
         readPartial(partialFile)
     }
   }
@@ -166,26 +164,51 @@ object Bench {
 
   private def childMain(args: Array[String]): Unit = {
     val Array(namesFile, sfDir, outFile) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = Files.readAllLines(Paths.get(namesFile)).toArray
       .map(_.toString.trim).filter(_.nonEmpty).toSeq
-    runShardInProcess(names, sfDir, cpus, outFile)
+    runShardInProcess(names, sfDir, outFile)
   }
 
   /** Run a list of queries in THIS JVM with a fresh SparkSession,
     * streaming one TSV line per result to `outFile` (append + flush, so
     * a crash mid-shard loses only the in-flight query). */
   private def runShardInProcess(names: Seq[String], sfDir: String,
-      cpus: String, outFile: String): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC so the TIMESTAMP_NTZ → TIMESTAMP normalization in
-      // Tables.events is a bitwise no-op (matches Verify and the specs)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", scratchLocalDir())
-      .getOrCreate()
+      outFile: String): Unit = {
+    val spark = warmSession(sfDir, names)
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      queries.get(name) match {
+        case None => appendTsv(outFile, "E", name, "unknown query name")
+        case Some(fn) =>
+          try {
+            val t1 = timedRead(spark, sfDir, fn)
+            // Attribution guard: even inside a ~25-query family shard a
+            // contended box can throw a phantom outlier. Any reading past
+            // the threshold gets ONE in-shard re-run and reports the min;
+            // a genuinely slow query stays slow on the re-run so real
+            // regressions still surface. BOTH readings are kept (ADVICE
+            // r12): the published value is the min and the discarded
+            // first reading rides the "rerun" audit object.
+            val t =
+              if (t1 > RerunThresholdSec) {
+                rerunReadings(name) = t1
+                appendTsv(outFile, "R", name, t1.toString)
+                try math.min(t1, timedRead(spark, sfDir, fn))
+                catch { case _: Throwable => t1 }
+              } else t1
+            appendTsv(outFile, "T", name, t.toString)
+          } catch {
+            case e: Throwable => appendTsv(outFile, "E", name, errMsg(e))
+          }
+      }
+    }
+    stopQuietly(spark)
+  }
+
+  /** A fresh [[GraftSession]] warmed, untimed, for timing `names` at
+    * `sfDir` — the sweep's shards and [[BenchOne]] both start here. */
+  private[graft] def warmSession(sfDir: String, names: Seq[String]): SparkSession = {
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     quietSweepLoggers()
     Preflight.check(spark, sfDir).foreach(w => System.err.println(s"[bench] $w"))
@@ -251,53 +274,32 @@ object Bench {
         }
       }
     }
-    names.foreach { name =>
-      queries.get(name) match {
-        case None => appendTsv(outFile, "E", name, "unknown query name")
-        case Some(fn) =>
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            // Full materialization: execute the query's own physical plan
-            // and drain every output row. A plain df.count() lets Catalyst
-            // prune every unreferenced column; toRdd executes the plan
-            // with the query's full output schema.
-            // untimed finally: cache cleanup is refresh-cycle bookkeeping,
-            // not query cost — and without it each dedup/packing query's
-            // caches would inflate memory pressure on every query after it
-            try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); (System.nanoTime() - t0) / 1e9 }
-            finally CacheScope.release()
-          }
-          try {
-            // untimed GC before every first reading, not only the
-            // re-run: the r15 sweep's >3x first readings (cns 7.6x,
-            // dwd 5.8x) charged earlier queries' heap debt to
-            // whichever heavy query ran next — collection is shard
-            // bookkeeping, not query cost
-            System.gc()
-            val t1 = once()
-            // Attribution guard: even inside a ~25-query family shard a
-            // contended box can throw a phantom outlier. Any reading past
-            // the threshold gets ONE in-shard re-run and reports the min;
-            // a genuinely slow query stays slow on the re-run so real
-            // regressions still surface. BOTH readings are kept (ADVICE
-            // r12): the published value is the min and the discarded
-            // first reading rides the "rerun" audit object.
-            val t =
-              if (t1 > RerunThresholdSec) {
-                rerunReadings(name) = t1
-                appendTsv(outFile, "R", name, t1.toString)
-                // escape accumulated JVM state before the re-run — the
-                // untimed full GC resets the cheap half of any heap debt
-                // so the re-run measures the query, not the shard's debt
-                System.gc()
-                try math.min(t1, once()) catch { case _: Throwable => t1 }
-              } else t1
-            appendTsv(outFile, "T", name, t.toString)
-          } catch {
-            case e: Throwable => appendTsv(outFile, "E", name, errMsg(e))
-          }
-      }
-    }
+    spark
+  }
+
+  /** One timed reading: an untimed full GC, then the query's own physical
+    * plan executed and every output row drained. The GC runs before
+    * every reading, not only the re-run: the r15 sweep's >3x first
+    * readings (cns 7.6x, dwd 5.8x) charged earlier queries' heap debt
+    * to whichever heavy query ran next, and the ContextCleaner only
+    * reclaims shuffle/broadcast state when a GC fires — collection is
+    * shard bookkeeping, not query cost. A plain df.count() lets Catalyst
+    * prune every unreferenced column; toRdd executes the plan with the
+    * query's full output schema. The cache release is untimed too:
+    * cleanup is refresh-cycle bookkeeping, and without it each
+    * dedup/packing query's caches would inflate memory pressure on every
+    * query after it. */
+  private[graft] def timedRead(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Double = {
+    System.gc()
+    val t0 = System.nanoTime()
+    try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); (System.nanoTime() - t0) / 1e9 }
+    finally CacheScope.release()
+  }
+
+  /** Tail armor: quiet the loggers and stop Spark, so a result line
+    * printed after this is the last output a bounded tail sees. */
+  private[graft] def stopQuietly(spark: SparkSession): Unit = {
     spark.sparkContext.setLogLevel("ERROR")
     try spark.stop() catch { case _: Throwable => () }
   }
@@ -467,7 +469,11 @@ object Bench {
       .replaceAll("^\\s*\\[[A-Z0-9_.]+\\]", "")
       .replaceAll("\\s+", " ").trim.take(60)
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal with quote, backslash and ALL control chars
+    * (< 0x20) escaped — Verify's oracle_sql.json uses it too, where a tab
+    * or CR in an oracle query would otherwise make the file unparseable
+    * and zero the correctness check. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
     case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
   } + "\""

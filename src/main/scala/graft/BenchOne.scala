@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Isolated per-query timing: `runMain graft.BenchOne <sfDir> <query> [runs]`
   * times ONE SparkEntry query `runs` times (default 3) in a fresh session
-  * with [[Bench]]'s exact pinned config and materialization (toRdd drain,
-  * CacheScope release between runs, untimed warmup). Exists because the
+  * with [[Bench]]'s exact session, untimed warm-up and timed reading
+  * ([[Bench.warmSession]], [[Bench.timedRead]]). Exists because the
   * full [[Bench]] sweep interleaves 90+ queries whose memory pressure and
   * GC cross-contaminate per-query numbers — attributing a single query's
   * regression needs a clean repeated measurement (VERDICT r8: is
@@ -15,61 +13,10 @@ object BenchOne {
     val sfDir = args(0)
     val name = args(1)
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Bench.scratchLocalDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.quietSweepLoggers()
-    // Every warm-up statement individually guarded: in r10 the summaries
-    // warm-up threw (broken events encoding) OUTSIDE any try and killed
-    // the whole tool — exactly when an isolated probe of the surviving
-    // documents-side queries was needed most (VERDICT r10 §wrong 2).
-    def warm(step: => Unit): Unit =
-      try step catch { case _: Throwable => () }
-    warm(spark.range(1000000).selectExpr("sum(id)").collect())
-    warm(Tables.summaries(spark, sfDir).limit(1).count())
-    // Bench's untimed once-per-refresh artifacts (mirrors + ANN
-    // indexes): without this, run 1 of a serving query on a cold
-    // scratch would time the index BUILD, not the page/probe.
-    warm(graft.sources.ServingMirrors.atiSummaries(spark, sfDir))
-    warm(graft.sources.ServingMirrors.ctiSummaries(spark, sfDir))
-    warm(ExtShared.ivfIndexFor(spark, sfDir))
-    warm(ExtShared.ivfLabelIndexFor(spark, sfDir))
-    warm(ExtShared.pqIndexFor(spark, sfDir))
-    warm(ExtShared.ivfPqIndexFor(spark, sfDir))
-    warm(ExtShared.lshIndexFor(spark, sfDir))
     val fn = SparkEntry.queries(name)
-    // Same untimed per-query JIT warm as the sweep (Bench.warmQuerySfDir):
-    // without it run 1 prices C2 compilation, not the query.
-    Bench.warmQuerySfDir(sfDir).foreach { wd =>
-      warm(
-        try fn(spark, wd).queryExecution.toRdd.foreach(_ => ())
-        finally CacheScope.release())
-    }
-    val times = (1 to runs).map { _ =>
-      // untimed GC before every reading — Bench's convention: the
-      // ContextCleaner only reclaims shuffle/broadcast state when a GC
-      // fires, and with a pre-sized 16g heap organic GCs are rare
-      // enough that runs otherwise degrade ~2x each as debris piles up
-      // (measured r21: ms 2.6/6.2/13.3 without, stable with)
-      System.gc()
-      val t0 = System.nanoTime()
-      // elapsed is captured before the cache release so the measured
-      // span matches Bench's convention (release is untimed there too)
-      try {
-        fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
-        (System.nanoTime() - t0) / 1e9
-      } finally CacheScope.release()
-    }
-    // Same tail armor as [[Bench]]: quiet the loggers and stop Spark
-    // BEFORE the result line so it is the last output a bounded tail sees.
-    spark.sparkContext.setLogLevel("ERROR")
-    try spark.stop() catch { case _: Throwable => () }
+    val spark = Bench.warmSession(sfDir, Seq(name))
+    val times = (1 to runs).map(_ => Bench.timedRead(spark, sfDir, fn))
+    Bench.stopQuietly(spark)
     println(f"[benchone] $name @ $sfDir: ${times.map(t => f"$t%.2f").mkString(", ")} sec (min ${times.min}%.2f)")
   }
 }

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ext.{Bpe, Chat, Curation, Dedup, Graph, Multimodal, Packing, Sampling, Similarity, TextAnalysis, Unigram, WordPiece}
+import graft.ext.{Similarity, TextAnalysis}
 
 import ExtShared._
 

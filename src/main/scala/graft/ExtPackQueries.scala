@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ext.{Bpe, Chat, Curation, Dedup, Graph, Multimodal, Packing, Sampling, Similarity, TextAnalysis, Unigram, WordPiece}
+import graft.ext.{Curation, Dedup, Packing, Sampling, Similarity, TextAnalysis, Unigram, WordPiece}
 
 import ExtShared._
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ext.{Bpe, Chat, Curation, Dedup, Graph, Multimodal, Packing, Sampling, Similarity, TextAnalysis, Unigram, WordPiece}
+import graft.ext.{Bpe, Dedup, Multimodal, Similarity, Unigram, WordPiece}
 
 /** Shared Spark <-> DuckDB dialect bridge for the ExtQueries family
   * files: the hash/CTE/fixture helpers and the memoized on-disk store

@@ -47,12 +47,13 @@ object Tables {
     * samples parked during `mvd`). A round-robin exchange of the seed
     * rows costs microseconds at this size and unlocks the whole box.
     *
-    * Scale discipline: the spread fires ONLY when the whole file is
-    * small (default < 64 MB, `spark.graft.spreadScanMaxBytes`), so at
-    * production scale — where the table has at least one split per
-    * core by construction — this is the identity and no corpus-sized
-    * input is ever shuffled. Size is taken from the local file;
-    * non-local paths (no cheap size probe) skip the spread. There is
+    * Scale discipline: the spread fires ONLY when the table is one
+    * regular local file under [[SpreadMaxBytes]], so at production
+    * scale — where the table has at least one split per core by
+    * construction — this is the identity and no corpus-sized input is
+    * ever shuffled. Directories (a Spark-written parquet table, whose
+    * `Files.size` is the inode's, not the data's) and non-local paths
+    * (no cheap size probe) skip the spread. There is
     * deliberately NO lower size bound (r22): the spread must fire at
     * EVERY test SF so the plan shape is scale-invariant — the bench's
     * untimed sf0.001 JIT warm then compiles exactly the generated
@@ -62,16 +63,20 @@ object Tables {
     * never reach this code — [[SpreadTables]] gates by table. */
   private def spread(spark: SparkSession, path: String,
                      df: DataFrame): DataFrame = {
-    val bytes =
-      try java.nio.file.Files.size(java.nio.file.Paths.get(path))
-      catch { case _: Exception => -1L }
-    val maxBytes = spark.conf.getOption("spark.graft.spreadScanMaxBytes")
-      .map(_.toLong).getOrElse(64L * 1024 * 1024)
+    val small =
+      try {
+        val file = java.nio.file.Paths.get(path)
+        java.nio.file.Files.isRegularFile(file) &&
+          java.nio.file.Files.size(file) < SpreadMaxBytes
+      } catch { case _: Exception => false }
     val cores = spark.sparkContext.defaultParallelism
-    if (bytes >= 0 && bytes < maxBytes && cores > 1)
+    if (small && cores > 1)
       df.repartition(cores)
     else df
   }
+
+  /** Largest single-file table [[spread]] still round-robins. */
+  private val SpreadMaxBytes = 64L * 1024 * 1024
 
   def region(s: SparkSession, d: String): DataFrame = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = read(s, d, "nation")

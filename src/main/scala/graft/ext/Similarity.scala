@@ -1086,7 +1086,7 @@ object Similarity {
   private def writeIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
                               qz: DataFrame, path: String, m: Int,
                               subDim: Int, pqStride: Int,
-                              attrCols: Seq[String] = Nil): Unit = {
+                              attrCols: Seq[String]): Unit = {
     import org.apache.spark.sql.expressions.Window
     val cents = spark.read.parquet(s"$path/centroids")
     // residual = vector − its cell's centroid, exact integer subtract;
@@ -1222,7 +1222,7 @@ object Similarity {
 
   private def readIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
                              path: String,
-                             attrFields: Seq[org.apache.spark.sql.types.StructField] = Nil)
+                             attrFields: Seq[org.apache.spark.sql.types.StructField])
       : DataFrame = {
     // Explicit schema: the cid PARTITION column must stay LongType so
     // the pruning predicate needs no cast (readCells discipline)

@@ -122,7 +122,6 @@ object HtmlTextUtil {
   /** Decode one `&...;` reference at `i`; unknown forms emit verbatim.
     * Returns the index after the consumed input. */
   private def entity(s: String, i: Int, out: java.lang.StringBuilder): Int = {
-    val n = s.length
     val semi = s.indexOf(';', i + 1)
     // entities are short; a far-away ';' means this '&' is literal
     if (semi < 0 || semi - i > 10) { out.append('&'); return i + 1 }

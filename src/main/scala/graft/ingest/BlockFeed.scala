@@ -1,9 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-
-import graft.model.Schemas
 
 /** Adapters producing the canonical block-feed shape (FIXTURES.md §A,
   * Schemas.blockFeed) from raw inputs.
@@ -116,8 +114,6 @@ object BlockFeed {
   /** Map the driver `events` table to the canonical feed shape.
     * Addresses are LongType user ids in this mapping. */
   def fromEvents(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
     events.select(
       expr("event_id div 8").cast("long").as("height"),
       (col("event_id") % 8).cast("int").as("seq_in_block"),

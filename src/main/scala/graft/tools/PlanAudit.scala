@@ -2,18 +2,15 @@ package graft.tools
 
 /** Ad-hoc plan audit: prints a physical-plan digest (exchanges,
   * broadcasts, window-group limits, cartesian products, scans) for the
-  * named queries. Run: sbt "runMain graft.tools.PlanAudit <sfDir> q1 q2".
+  * named queries, planned on the bench's [[graft.GraftSession]]. Run:
+  * sbt "runMain graft.tools.PlanAudit <sfDir> q1 q2".
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1).toSeq
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("planaudit")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.local.dir", graft.Bench.scratchLocalDir())
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus)
+      .appName("planaudit").getOrCreate()
     try names.foreach { n =>
       val plan = graft.SparkEntry.queries(n)(spark, sfDir)
         .queryExecution.executedPlan.toString

@@ -8,9 +8,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * (`plans/rNN/<query>_<tag>.txt`). Run:
   * sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <tag> q1 q2 ...".
   *
-  * Uses [[graft.Bench]]'s pinned session shape (local[cpus], shuffle
-  * partitions = cpus) so the captured plan is the one the bench
-  * actually executes, not a 4-core variant.
+  * Uses [[graft.GraftSession]], the bench's session shape, so the
+  * captured plan is the one the bench actually executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,15 +17,9 @@ object PlanDump {
     val outDir = args(1)
     val tag = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     Files.createDirectories(Paths.get(outDir))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").appName("plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .config("spark.local.dir", graft.Bench.scratchLocalDir())
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus)
+      .appName("plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try names.foreach { n =>
       try {

@@ -20,9 +20,14 @@ class PlanSpec extends SparkSpec {
     * the scan-parallelism floor's round-robin spread of a tiny seed
     * table (Tables.spread, r22) — it fires at every SF precisely so
     * these test-scale plans match the bench-scale plans, and it is the
-    * one exchange a narrow per-document pipeline is allowed. */
-  private def opExchanges(p: String): Int =
-    count(p, "Exchange") - count(p, "Exchange RoundRobinPartitioning")
+    * one exchange a narrow per-document pipeline is allowed. Only ONE
+    * spread is tolerated: a second round-robin exchange is a leaked
+    * `repartition()`, not the scan floor. */
+  private def opExchanges(p: String): Int = {
+    val spreads = count(p, "Exchange RoundRobinPartitioning")
+    assert(spreads <= 1, s"expected at most the one scan spread in:\n$p")
+    count(p, "Exchange") - spreads
+  }
 
   test("b1 account page: top-k via TakeOrderedAndProject, cursor pushed to scan") {
     val p = plan("b1a")
@@ -58,10 +63,19 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text repetition: narrow per-document map — no joins, only the sort exchange") {
-    val p = plan("tr")
-    assert(!p.contains("Join"), s"repetition must stay per-document:\n$p")
-    assert(opExchanges(p) == 1, // the final orderBy only
-      s"expected a single (sort) exchange in:\n$p")
+    // also over documents written as a Spark parquet DIRECTORY, whose
+    // Files.size is the inode's: the scan spread must not fire there
+    val dirSf = java.nio.file.Files.createTempDirectory("trplan").toString
+    spark.read.parquet(s"$sf/documents.parquet")
+      .write.parquet(s"$dirSf/documents.parquet")
+    try for ((d, spreads) <- Seq(sf -> 1, dirSf -> 0)) {
+      val p = SparkEntry.queries("tr")(spark, d).queryExecution.executedPlan.toString
+      assert(!p.contains("Join"), s"repetition must stay per-document:\n$p")
+      assert(opExchanges(p) == 1, // the final orderBy only
+        s"expected a single (sort) exchange in:\n$p")
+      assert(count(p, "Exchange RoundRobinPartitioning") == spreads,
+        s"expected $spreads scan spread(s) over $d in:\n$p")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirSf))
   }
 
   test("dsir: bucket-bounded count tables broadcast; the probe never shuffle-joins") {

@@ -201,7 +201,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("cross-split contamination keeps only pairs spanning splits") {
-    import org.apache.spark.sql.functions._
     val pairs = Seq((1L, 2L, 10), (3L, 4L, 12), (5L, 6L, 16))
       .toDF("doc_a", "doc_b", "n_matching")
     val splits = Seq(1L -> "train", 2L -> "test", 3L -> "train",
@@ -267,7 +266,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("sourceOverlap: pairwise distinct-shingle Jaccard by hand, zero pairs absent") {
-    import org.apache.spark.sql.functions._
     // A: {abc,bcd,cde} (the second doc repeats a shingle — distinct per
     // source), B: {bcd,cde,def}, C: {xyz,yzw} — A∩B = 2, A∩C = B∩C = ∅
     val docs = Seq(

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.SparkSpec
 import graft.functions.MediaHeaderUtil
 
 /** Byte-level fixtures for the FLAC STREAMINFO parse — the
@@ -8,7 +9,7 @@ import graft.functions.MediaHeaderUtil
   * hand-assembled and every extracted value asserted against
   * hand-computed numbers. Sample decode is explicitly out of scope
   * (no JVM FLAC codec); this is the routing/stats metadata pass. */
-class FlacHeaderSpec extends org.scalatest.funsuite.AnyFunSuite {
+class FlacHeaderSpec extends SparkSpec {
 
   /** Build fLaC + STREAMINFO-first-block bytes for the given fields. */
   private def flac(sampleRate: Int, channels: Int, bits: Int,
@@ -61,9 +62,6 @@ class FlacHeaderSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("featuresBatched routes FLAC to the container branch") {
-    import org.apache.spark.sql.SparkSession
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val payload = flac(8000, 1, 16, 12345L)
     val rows = Multimodal.featuresBatched(

@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Image perceptual-hash dedup (dhashOf / dhashBatched /
   * nearDupImages): hand-derived hashes on constructed rasters —

@@ -188,7 +188,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("temperatureMix: sqrt-flattened rates, low-resource kept whole, monotone in target") {
-    import org.apache.spark.sql.functions._
     // A n=9 (s=3), B n=4 (s=2), C n=1 (s=1): S=6. targetRows=6 ->
     // rates 333333 / 500000 / 1000000 ppm — the sqrt flattening gives
     // the small group a HIGHER rate than its share (1e6 vs A's 1/3),

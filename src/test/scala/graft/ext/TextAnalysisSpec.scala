@@ -223,7 +223,6 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("pplBuckets: per-language value thresholds, ties share a tier, 1-doc lang is head") {
-    import org.apache.spark.sql.functions._
     // en: six docs of varying fluency (identical twins 15/16 pin the
     // ties-share-a-tier contract); zz: a single doc — its only value IS
     // the 1/3 cut, so it lands head
@@ -338,7 +337,6 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("scriptProfile: eight scripts, digits/space split, astral, ties, none") {
-    import org.apache.spark.sql.functions._
     val docs = Seq(
       (1L, "hello мир"),      // latin 5, cyr 3, space 1 -> latin, 5000/9
       (2L, "こんにちは漢字"),   // kana 5, han 2 -> kana
@@ -375,7 +373,6 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("dsirWeights: degenerate one-bucket arithmetic, identity, and ordering") {
-    import org.apache.spark.sql.functions._
     // buckets=1: every gram lands in bucket 0, so ct=nt and cr=nr —
     // st = bitlen((nt+1) div (nt+1)) = 1 bit per gram, ditto sr, and
     // n_grams = 2*words - 1 (unigrams + bigrams). Pins the totals,
@@ -406,7 +403,6 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("nbTrain/nbScore: add-one log-odds by hand arithmetic; stored artifact") {
-    import org.apache.spark.sql.functions._
     // good "a a b", bad "b c": cg a=2 b=1; cb b=1 c=1; ng=3 nb=2 vocab=3
     val good = Seq((0L, "a a b")).toDF("id", "text")
     val bad = Seq((1L, "b c")).toDF("id", "text")

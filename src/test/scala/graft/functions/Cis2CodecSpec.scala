@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 
 /** The `SparkSessionExtensions` registration route
   * (`spark.sql.extensions=graft.functions.GraftSparkExtensions`) — the
@@ -19,10 +19,8 @@ class ExtensionsSpec extends SparkSpec {
     spark.sparkContext // ensure the shared context exists first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .withExtensions(new GraftSparkExtensions)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       val viaSql = s.sql(

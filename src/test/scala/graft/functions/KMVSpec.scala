@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 import graft.ext.Text
 

@@ -280,7 +280,6 @@ class TfRecordSpec extends SparkSpec {
   }
 
   test("read quarantines a rotted file but keeps its intact prefix") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft-tfr2")
     Files.write(dir.resolve("ok.tfrecord"), encodeRecord("fine".getBytes))
     val rot = encodeRecord("head".getBytes) ++ encodeRecord("tail".getBytes)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
 import graft.SparkSpec

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 
 import graft.SparkSpec
-import graft.ingest.{BlockFeed, BlockIngest}
+import graft.ingest.BlockIngest
 import graft.model.Schemas
 
 /** End-to-end streaming test: feed parquet → Structured Streaming →
@@ -101,7 +101,6 @@ class BlockStreamPipelineSpec extends SparkSpec {
     assert(q("SELECT COUNT(*) FROM bindings WHERE address = 99").head.head == 1)
 
     // cross-check every table against the pure batch derivation
-    val feed = BlockFeed // (symmetry note: stream used raw mkFeed rows)
     val full = mkFeed(0 until 10)
     val expSummaries = BlockIngest.summaries(full).collect()
       .map(r => (r.getLong(0), r.getString(4))).toSet
