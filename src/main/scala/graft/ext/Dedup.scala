@@ -800,7 +800,7 @@ object Dedup {
                       path: String, minMatches: Int = 8,
                       maxBucket: Int = 4096): DataFrame = {
     val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head
+    val meta = spark.read.parquet(s"$path/meta").head()
     val (k, nh, bands, parts) = (meta.getInt(0), meta.getInt(1),
       meta.getInt(2), meta.getInt(3))
     val bb = graft.CacheScope.persistTracked(
@@ -847,7 +847,7 @@ object Dedup {
     graft.sources.StoreCompaction.assertNotCompacting(spark, path)
     if (graft.sources.StoreCompaction.isApplied(spark, path, batchId)) false
     else {
-      val meta = spark.read.parquet(s"$path/meta").head
+      val meta = spark.read.parquet(s"$path/meta").head()
       // local persist, not CacheScope: the write below materializes
       // inside this call (appendCellIndex's reasoning)
       val bb = lshBuckets(batch, content, id, meta.getInt(0), meta.getInt(1),

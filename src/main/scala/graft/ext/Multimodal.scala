@@ -1114,20 +1114,25 @@ object Multimodal {
   // registry and CONSTRUCTS a fresh reader — for JPEG a native-state
   // allocation — per call. Sniffing the two magic numbers and reusing a
   // per-thread reader does exactly what `ImageIO.read` does internally
-  // (`setInput(iis, true, true)` + `read(0, defaultReadParam)` — same
-  // reader class, the first registered one, so the decoded raster is
-  // bit-identical), minus the per-frame registry walk and construction.
-  // Unknown/damaged magic falls through to stock `ImageIO.read`, which
-  // also stays the quarantine path (any throw -> None).
+  // (`setInput(iis, true, true)` + `read(0, defaultReadParam)`), minus
+  // the per-frame registry walk and construction. A thread's reader for
+  // a magic number is the one `ImageIO.read` picks by sniffing the first
+  // such payload (`ImageIO.getImageReaders(iis)`) and then serves every
+  // later payload with that magic: the same class `ImageIO.read` would
+  // pick as long as the registered PNG/JPEG readers decide on the magic
+  // alone, as the JDK's do (MultimodalSpec pins the class). Unknown or
+  // damaged magic falls through to stock `ImageIO.read`, which also
+  // stays the quarantine path (any throw -> None).
   private val pooledReaders =
     ThreadLocal.withInitial[java.util.HashMap[String, javax.imageio.ImageReader]](
       () => new java.util.HashMap)
 
-  private def pooledReader(fmt: String): javax.imageio.ImageReader = {
+  private[ext] def pooledReader(fmt: String,
+      iis: javax.imageio.stream.ImageInputStream): javax.imageio.ImageReader = {
     val m = pooledReaders.get()
     var r = m.get(fmt)
     if (r == null) {
-      r = javax.imageio.ImageIO.getImageReadersByFormatName(fmt).next()
+      r = javax.imageio.ImageIO.getImageReaders(iis).next()
       m.put(fmt, r)
     }
     r
@@ -1144,7 +1149,7 @@ object Multimodal {
       new java.io.ByteArrayInputStream(payload))
     try {
       if (fmt != null) {
-        val reader = pooledReader(fmt)
+        val reader = pooledReader(fmt, iis)
         try {
           reader.setInput(iis, true, true)
           Option(reader.read(0, reader.getDefaultReadParam))

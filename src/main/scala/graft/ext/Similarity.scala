@@ -500,7 +500,7 @@ object Similarity {
     }
     val selected = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long)] // (step, vid, score)
-    val remaining = scala.collection.mutable.ArrayBuffer(pool: _*)
+    val remaining = scala.collection.mutable.ArrayBuffer.from(pool)
     for (step <- 1L to math.min(k.toLong, pool.length.toLong)) {
       val best = remaining.map { c =>
         val maxsim =

@@ -681,7 +681,7 @@ object TextAnalysis {
   def dsirScoreStored(df: DataFrame, content: Column, id: Column,
                       modelDir: String): DataFrame = {
     val model = df.sparkSession.read.parquet(modelDir)
-    val meta = model.select("buckets", "nt", "nr").head
+    val meta = model.select("buckets", "nt", "nr").head()
     val buckets = meta.getInt(0)
     val nt = meta.getLong(1); val nr = meta.getLong(2)
     gramBuckets(df, content, id, buckets)

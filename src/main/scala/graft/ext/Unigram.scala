@@ -189,8 +189,8 @@ object Unigram {
     val bounds = List.newBuilder[Int]
     var p = L
     while (p > 0) { bounds += p; p = back(p) }
-    val cuts = (0 :: bounds.result().reverse).sliding(2).toSeq
-    (cuts.map { case List(a, b) => cps.slice(a, b).mkString },
+    val cuts = 0 :: bounds.result().reverse
+    (cuts.zip(cuts.tail).map { case (a, b) => cps.slice(a, b).mkString },
       dpc(L), dpn(L))
   }
 

@@ -30,7 +30,7 @@ object JpegGray {
     * Dimensions must be multiples of 8 so every MCU is a full block and
     * no edge-extension arithmetic enters the exactness argument. */
   def encodeConst(w: Int, h: Int, v: Int): Array[Byte] =
-    encodeBlocks(w, h, Array.fill((w / 8) * (h / 8))(v))
+    encodeBlocks(w, h, IndexedSeq.fill((w / 8) * (h / 8))(v))
 
   /** Generalization of [[encodeConst]]: each 8×8 MCU gets its OWN
     * constant gray value (`blocks` in MCU scan order — left to right,

@@ -16,7 +16,7 @@ import graft.model.Schemas
   *  - ids are deterministic (`height*2^20 + seq`), so writes are
   *    idempotent under task retry — no `monotonically_increasing_id`,
   *    no driver round-trips (replaces `RETURNING id`, main.rs:219);
-  *  - fan-outs are `explode` (Generator) — narrow, no shuffle;
+  *  - fan-outs are `explode`/`inline` (Generator) — narrow, no shuffle;
   *  - the only shuffles are the keyed aggregations (token supply, key
   *    bindings), both keyed on bounded-cardinality keys with map-side
   *    partial aggregation;
@@ -32,33 +32,56 @@ object BlockIngest {
   def withId(feed: DataFrame): DataFrame =
     feed.withColumn("id", summaryId(col("height"), col("seq_in_block")))
 
-  private def envelope: Column =
+  // Per-feed-row columns shared by the table derivations below and the
+  // single-pass sink projection (TransactionalSink.blockRows).
+
+  /** The `summaries` JSON envelope of one feed row. */
+  def envelope: Column =
     when(col("is_special"), concat(lit("{\"Right\":"), col("payload_json"), lit("}")))
       .otherwise(concat(lit("{\"Left\":"), col("payload_json"), lit("}")))
+
+  /** The row's affected accounts, deduped per summary (`ati`). */
+  def distinctAccounts: Column = array_distinct(col("affected_accounts"))
+
+  /** The row's affected contracts, deduped per summary (`cti`). */
+  def distinctContracts: Column = array_distinct(col("affected_contracts"))
+
+  /** The row's CIS-2 supply deltas as an array of
+    * `struct(seq, index, subindex, token_id, delta)`: `mint` adds,
+    * `burn` subtracts, every other kind is dropped; `seq` is the event's
+    * position in `cis2_events` (the `posexplode` position). */
+  def cis2DeltaArray: Column =
+    filter(
+      transform(col("cis2_events"), (e, i) =>
+        when(e("kind").isin("mint", "burn"), struct(
+          i.as("seq"),
+          e("index").as("index"),
+          e("subindex").as("subindex"),
+          e("token_id").as("token_id"),
+          when(e("kind") === "burn", concat(lit("-"), e("amount")))
+            .otherwise(e("amount")).as("delta")))),
+      _.isNotNull)
+
+  /** The account a key-binding snapshot belongs to: the sender, or for
+    * account creation (no sender) the created account = first affected
+    * address (main.rs:686-701, 730-758). */
+  def bindingAddress: Column =
+    coalesce(col("sender"), col("affected_accounts").getItem(0))
 
   /** `summaries`: one row per feed item, JSON envelope preserved
     * byte-compatibly (`{"Left":…}` user tx / `{"Right":…}` protocol
     * event, main.rs:99-109). */
-  def summaries(feed: DataFrame): DataFrame =
-    withId(feed).select(
-      col("id"),
-      col("block_hash").as("block"),
-      col("block_time_ms").as("timestamp"),
-      col("height"),
-      envelope.as("summary"))
+  def summaries(feed: DataFrame): DataFrame = withId(feed).select(summaryCols: _*)
+
+  private def summaryCols: Seq[Column] = Seq(col("id"), col("block_hash").as("block"),
+    col("block_time_ms").as("timestamp"), col("height"), envelope.as("summary"))
 
   /** `summaries` plus the sender column (the reference derives it from
     * the JSON on the read path, `sender_account()`, postgres.rs:51-62;
     * null for protocol events and credential deployments). One
     * projection — no self-join, single parquet scan. */
   def summariesWithSender(feed: DataFrame): DataFrame =
-    withId(feed).select(
-      col("id"),
-      col("block_hash").as("block"),
-      col("block_time_ms").as("timestamp"),
-      col("height"),
-      envelope.as("summary"),
-      col("sender"))
+    withId(feed).select(summaryCols :+ col("sender"): _*)
 
   /** `ati` fan-out: one row per (deduped affected account, summary) —
     * the explode of `affected_addresses()` (main.rs:322-329, 357-413).
@@ -67,13 +90,13 @@ object BlockIngest {
     * shuffle. */
   def ati(feed: DataFrame): DataFrame =
     withId(feed).select(
-      explode(array_distinct(col("affected_accounts"))).as("account"),
+      explode(distinctAccounts).as("account"),
       col("id").as("summary"))
 
   /** `cti` fan-out (main.rs:331-352). */
   def cti(feed: DataFrame): DataFrame =
     withId(feed).select(
-      explode(array_distinct(col("affected_contracts"))).as("c"),
+      explode(distinctContracts).as("c"),
       col("id").as("summary"))
       .select(col("c.index").as("index"), col("c.subindex").as("subindex"), col("summary"))
 
@@ -90,16 +113,7 @@ object BlockIngest {
     * has a natural PK, so replays dedup instead of double-applying;
     * SURVEY §7.4 exactly-once). */
   def cis2DeltaRows(feedWithId: DataFrame): DataFrame =
-    feedWithId.select(col("id").as("summary"),
-        posexplode(col("cis2_events")).as(Seq("seq", "e")))
-      .where(col("e.kind").isin("mint", "burn"))
-      .select(
-        col("summary"), col("seq"),
-        col("e.index").as("index"),
-        col("e.subindex").as("subindex"),
-        col("e.token_id").as("token_id"),
-        when(col("e.kind") === "burn", concat(lit("-"), col("e.amount")))
-          .otherwise(col("e.amount")).as("delta"))
+    feedWithId.select(col("id").as("summary"), inline(cis2DeltaArray))
 
   /** `cis2_tokens`: full-history running supply as arbitrary-precision
     * decimal strings (NUMERIC(80,0) analog; exceeds Decimal(38), SURVEY
@@ -119,11 +133,7 @@ object BlockIngest {
   def keyBindings(feed: DataFrame): DataFrame =
     withId(feed)
       .where(col("key_bindings").isNotNull)
-      // the binding snapshot belongs to the account whose keys changed:
-      // the sender, or for account creation (no sender) the created
-      // account = first affected address (main.rs:686-701, 730-758).
-      .select(coalesce(col("sender"), col("affected_accounts").getItem(0)).as("address"),
-        col("id"), col("key_bindings"))
+      .select(bindingAddress.as("address"), col("id"), col("key_bindings"))
       .groupBy("address")
       .agg(max_by(col("key_bindings"), col("id")).as("kb"))
       .select(col("address"), explode(col("kb")).as("b"))

@@ -46,7 +46,7 @@ object AsOfJoin {
     val lTagged = left.select(
       leftKey.as("__k"), leftTime.as("__t"), lit(1).as("__tag"),
       lit(Long.MaxValue).as("__tb"), lit(null).cast(pType).as("__p"),
-      struct(left.columns.map(col): _*).as("__l"))
+      struct(left.columns.toSeq.map(col): _*).as("__l"))
     val lType = lTagged.schema("__l").dataType
 
     val unioned = lTagged.unionByName(

@@ -170,9 +170,9 @@ object TfRecord {
     * the rename-free direct write is fine for an export directory the
     * caller owns (idempotent re-export = overwrite). */
   def write(df: DataFrame, payloadCol: String, dir: String): Long =
-    export(df, payloadCol, dir).map(_.records).sum
+    exportShards(df, payloadCol, dir).map(_.records).sum
 
-  /** Per-shard stats from one [[export]] pass — the manifest row for
+  /** Per-shard stats from one [[exportShards]] pass — the manifest row for
     * one part-file. `hash64` folds the per-record payload hashes
     * ([[payloadHash64]]) with XOR, so the shard fingerprint is
     * order-independent and mergeable: the DATASET fingerprint is the
@@ -180,7 +180,7 @@ object TfRecord {
   case class Shard(file: String, records: Long, payloadBytes: Long,
                    hash64: Long)
 
-  private def export(df: DataFrame, payloadCol: String,
+  private def exportShards(df: DataFrame, payloadCol: String,
                      dir: String): Seq[Shard] = {
     val spark = df.sparkSession
     // Configuration is not serializable; ship its explicit entries and
@@ -245,7 +245,7 @@ object TfRecord {
     * like [[writeBatch]] replay). */
   def writeWithManifest(df: DataFrame, payloadCol: String,
                         dir: String): Seq[Shard] = {
-    val shards = export(df, payloadCol, dir)
+    val shards = exportShards(df, payloadCol, dir)
     writeManifest(df, shards, dir)
     shards
   }
@@ -323,7 +323,7 @@ object TfRecord {
       .map(_._2)
     import spark.implicits._
     val shardDf = spark.createDataset(placed).toDF("payload")
-    val shards = export(shardDf, "payload", dir)
+    val shards = exportShards(shardDf, "payload", dir)
     writeManifest(df, shards, dir)
     shards
   }

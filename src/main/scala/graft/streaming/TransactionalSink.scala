@@ -7,21 +7,27 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.BlockIngest
-import graft.model.Schemas
 
 /** Exactly-once JDBC sink for the block-feed stream — the Spark analog of
   * the reference's per-block transactional writer (insert_block,
   * main.rs:543-574; "each block is one DB transaction", README.md:41-44)
   * with the retry/replay semantics of its use_db loop (lib.rs:284-361).
   *
-  * **Per-block atomic visibility.** All rows derived from one block —
-  * summaries, ati, cti, cis2 deltas + supply, key bindings — are written
-  * in ONE JDBC transaction: the batch is repartitioned by `height` so a
-  * single task owns every row of a block, rows are sorted by height
-  * within the partition, and the writer commits once per block on a
-  * single connection (commit-by-height). A crash or kill at any point
-  * leaves every block either fully visible in all five tables or not
-  * visible at all — never a block with `summaries` present but `ati`
+  * **One pass per micro-batch.** Like `insert_block`, which derives every
+  * table row of a block in one pass, the batch is ONE narrow projection
+  * of the feed ([[blockRows]]): per feed row its summary, the deduped
+  * affected accounts and contracts, the mint/burn deltas and the
+  * key-binding address — the same `BlockIngest` columns the batch
+  * derivations explode. One feed scan, one shuffle.
+  *
+  * **Per-block atomic visibility.** That projection is repartitioned by
+  * `height` so a single task owns every row of a block (the guarantee
+  * for arbitrary inputs: file sources and batch backfill) and sorted by
+  * `(height, id)`; the writer fans each block's rows out to summaries,
+  * ati, cti, cis2 deltas + supply and key bindings and commits them in
+  * ONE JDBC transaction on a single connection. A crash or kill at any
+  * point leaves every block either fully visible in all five tables or
+  * not visible at all — never a block with `summaries` present but `ati`
   * missing. Blocks commit in height order within a partition; across
   * partitions order is not guaranteed, which is why the streaming
   * CHECKPOINT (not the A11 max-height query) is the resume authority
@@ -40,16 +46,20 @@ import graft.model.Schemas
   *    arithmetic — NUMERIC(80,0) analog), so replays add nothing twice.
   *    The supply read-modify-write is an optimistic CAS
   *    (`UPDATE … WHERE total_supply = <read value>`, savepoint-guarded
-  *    insert race) so two partitions touching the same token converge;
-  *    a deadlock abort fails the task and the idempotent retry heals;
-  *  - key bindings are pre-reduced to the LATEST snapshot per (address,
-  *    BLOCK) — per block, not per batch, so every block transaction
-  *    carries its own snapshot and the all-five-tables atomic-visibility
-  *    invariant holds for bindings too (a reader between two commits of
-  *    one batch never sees block N present with block N's binding
-  *    missing). Across blocks and replayed batches the src_id
-  *    last-write-wins guards make older snapshots no-ops, matching the
-  *    reference's final state (main.rs:506-540).
+  *    insert race) so two partitions touching the same token converge
+  *    when they do not deadlock. Open: two partitions that both read a
+  *    hot token's row hold S locks and deadlock on the upgrade to X
+  *    (Derby SQLState 40001); the task fails and its retry can deadlock
+  *    again, so a large backfill with a hot token aborts;
+  *  - key bindings are reduced to the LATEST snapshot per (address,
+  *    BLOCK) — the last row per address in id order — per block, not per
+  *    batch, so every block transaction carries its own snapshot and the
+  *    all-five-tables atomic-visibility invariant holds for bindings too
+  *    (a reader between two commits of one batch never sees block N
+  *    present with block N's binding missing). Across blocks and
+  *    replayed batches the src_id last-write-wins guards make older
+  *    snapshots no-ops, matching the reference's final state
+  *    (main.rs:506-540).
   *
   * Driver requirement: `executeBatch` per-statement counts MUST be real
   * row counts — the CIS-2 supply fold depends on them. A driver
@@ -61,60 +71,29 @@ import graft.model.Schemas
   */
 object TransactionalSink extends Serializable {
 
-  private def heightOfId(id: org.apache.spark.sql.Column) =
-    shiftright(id, Schemas.SeqBits)
+  /** The write frame of a feed batch (Schemas.blockFeed, with or without
+    * id): one row per feed item carrying everything its block
+    * transaction writes, hash-partitioned by `height` and sorted by
+    * `(height, id)` within each partition. */
+  def blockRows(feed: DataFrame): DataFrame =
+    BlockIngest.withId(feed).select(
+      col("height"), col("id"), col("block_hash"), col("block_time_ms"),
+      BlockIngest.envelope.as("summary"),
+      BlockIngest.distinctAccounts.as("accounts"),
+      BlockIngest.distinctContracts.as("contracts"),
+      BlockIngest.cis2DeltaArray.as("deltas"),
+      BlockIngest.bindingAddress.as("address"), col("key_bindings"))
+      .repartition(col("height"))
+      .sortWithinPartitions(col("height"), col("id"))
 
   /** Write one micro-batch of feed rows (Schemas.blockFeed + id) into
     * the serving DB with per-block atomicity. Pure function of the
     * batch — usable from foreachBatch (streaming) or directly (batch
     * backfill, A13). */
-  def writeBatch(feedBatch: DataFrame, url: String, dialect: Dialect): Unit = {
-    val withId = BlockIngest.withId(feedBatch)
-
-    val summaries = BlockIngest.summaries(feedBatch).select(
-      col("height"), lit(0).as("tag"),
-      col("id").as("s_id"), col("block").as("s_block"),
-      col("timestamp").as("s_ts"), col("summary").as("s_summary"))
-
-    val ati = BlockIngest.ati(feedBatch).select(
-      heightOfId(col("summary")).as("height"), lit(1).as("tag"),
-      col("account").as("a_account"), col("summary").as("a_summary"))
-
-    val cti = BlockIngest.cti(feedBatch).select(
-      heightOfId(col("summary")).as("height"), lit(2).as("tag"),
-      col("index").as("c_idx"), col("subindex").as("c_subidx"),
-      col("summary").as("c_summary"))
-
-    val deltas = BlockIngest.cis2DeltaRows(withId).select(
-      heightOfId(col("summary")).as("height"), lit(3).as("tag"),
-      col("summary").as("d_summary"), col("seq").as("d_seq"),
-      col("index").as("d_idx"), col("subindex").as("d_subidx"),
-      col("token_id").as("d_token"), col("delta").as("d_delta"))
-
-    // Latest snapshot per (address, block): each block transaction writes
-    // its own snapshot (atomic visibility); src_id LWW guards resolve
-    // across blocks.
-    val bindings = withId
-      .where(col("key_bindings").isNotNull)
-      .select(coalesce(col("sender"), col("affected_accounts").getItem(0)).as("address"),
-        col("id"), col("key_bindings"))
-      .groupBy(col("address"), heightOfId(col("id")).as("b_height"))
-      .agg(max_by(struct(col("id"), col("key_bindings")), col("id")).as("w"))
-      .select(col("address"), col("w.id").as("id"), explode(col("w.key_bindings")).as("b"))
-      .select(heightOfId(col("id")).as("height"), lit(4).as("tag"),
-        col("address").as("b_address"), col("id").as("b_src"),
-        col("b.credential_index").as("b_cred"), col("b.key_index").as("b_key"),
-        col("b.public_key").as("b_pub"), col("b.is_simple_account").as("b_simple"))
-
-    val all = Seq(summaries, ati, cti, deltas, bindings)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-
-    all.repartition(col("height"))
-      .sortWithinPartitions(col("height"), col("tag"))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) writePartition(rows, url, dialect)
-      }
-  }
+  def writeBatch(feedBatch: DataFrame, url: String, dialect: Dialect): Unit =
+    blockRows(feedBatch).foreachPartition { (rows: Iterator[Row]) =>
+      if (rows.nonEmpty) writePartition(rows, url, dialect)
+    }
 
   /** One connection per partition; one transaction (commit) per block. */
   private def writePartition(rows: Iterator[Row], url: String, dialect: Dialect): Unit = {
@@ -141,36 +120,31 @@ object TransactionalSink extends Serializable {
     } finally c.close()
   }
 
-  /** All writes of one block, in the reference's insert order
-    * (main.rs:543-574): summaries → ati → cti → cis2 → bindings. */
+  /** All writes of one block (its feed rows in id order), in the
+    * reference's insert order (main.rs:543-574): summaries → ati → cti →
+    * cis2 → bindings. */
   private def writeBlock(c: Connection, st: BlockStatements, rows: Seq[Row]): Unit = {
-    val byTag = rows.groupBy(_.getAs[Int]("tag"))
-
-    byTag.getOrElse(0, Nil).foreach { r =>
-      st.insSummary.add(Seq(r.getAs[Long]("s_id"), r.getAs[String]("s_block"),
-        r.getAs[Long]("s_ts"), r.getAs[Long]("height"), r.getAs[String]("s_summary")))
+    rows.foreach { r =>
+      st.insSummary.add(Seq(r.getAs[Long]("id"), r.getAs[String]("block_hash"),
+        r.getAs[Long]("block_time_ms"), r.getAs[Long]("height"), r.getAs[String]("summary")))
     }
     st.insSummary.executeBatch()
 
-    byTag.getOrElse(1, Nil).foreach { r =>
-      st.insAti.add(Seq(r.getAs[Long]("a_account"), r.getAs[Long]("a_summary")))
-    }
+    rows.foreach(r => items[Long](r, "accounts").foreach(a => st.insAti.add(Seq(a, r.getAs[Long]("id")))))
     st.insAti.executeBatch()
 
-    byTag.getOrElse(2, Nil).foreach { r =>
-      st.insCti.add(Seq(r.getAs[Long]("c_idx"), r.getAs[Long]("c_subidx"),
-        r.getAs[Long]("c_summary")))
-    }
+    rows.foreach(r => items[Row](r, "contracts").foreach { k =>
+      st.insCti.add(Seq(k.getAs[Long]("index"), k.getAs[Long]("subindex"), r.getAs[Long]("id")))
+    })
     st.insCti.executeBatch()
 
     // CIS-2: batched conditional inserts; executeBatch update counts say
     // which deltas are NEW in this transaction — only those fold into
     // the running supply (replay inserts 0 ⇒ applies 0).
-    val deltaRows = byTag.getOrElse(3, Nil)
-    deltaRows.foreach { r =>
-      st.insDelta.add(Seq(r.getAs[Long]("d_summary"), r.getAs[Int]("d_seq"),
-        r.getAs[Long]("d_idx"), r.getAs[Long]("d_subidx"),
-        r.getAs[String]("d_token"), r.getAs[String]("d_delta")))
+    val deltaRows = rows.flatMap(r => items[Row](r, "deltas").map(r.getAs[Long]("id") -> _))
+    deltaRows.foreach { case (id, d) =>
+      st.insDelta.add(Seq(id, d.getAs[Int]("seq"), d.getAs[Long]("index"),
+        d.getAs[Long]("subindex"), d.getAs[String]("token_id"), d.getAs[String]("delta")))
     }
     val inserted = st.insDelta.executeBatch()
     // The supply fold is only sound with REAL per-statement counts; a
@@ -182,31 +156,48 @@ object TransactionalSink extends Serializable {
         "counts are required (disable driver batch rewriting, e.g. " +
         "pgjdbc reWriteBatchedInserts)")
     val acc = scala.collection.mutable.LinkedHashMap.empty[(Long, Long, String), BigInteger]
-    deltaRows.zip(inserted).foreach { case (r, n) =>
+    deltaRows.zip(inserted).foreach { case ((_, d), n) =>
       if (n == 1) {
-        val key = (r.getAs[Long]("d_idx"), r.getAs[Long]("d_subidx"),
-          r.getAs[String]("d_token"))
-        val d = new BigInteger(r.getAs[String]("d_delta"))
-        acc.updateWith(key)(v => Some(v.getOrElse(BigInteger.ZERO).add(d)))
+        val key = (d.getAs[Long]("index"), d.getAs[Long]("subindex"), d.getAs[String]("token_id"))
+        val v = new BigInteger(d.getAs[String]("delta"))
+        acc.updateWith(key)(cur => Some(cur.getOrElse(BigInteger.ZERO).add(v)))
       }
     }
     acc.foreach { case (key, d) => applySupply(c, st, key, d) }
 
-    byTag.getOrElse(4, Nil).foreach { r =>
-      val (addr, id) = (r.getAs[Long]("b_address"), r.getAs[Long]("b_src"))
-      st.delBindings.setLong(1, addr); st.delBindings.setLong(2, id)
-      st.delBindings.executeUpdate()
-      st.insBinding.setLong(1, addr); st.insBinding.setLong(2, id)
-      st.insBinding.setInt(3, r.getAs[Int]("b_cred"))
-      st.insBinding.setInt(4, r.getAs[Int]("b_key"))
-      st.insBinding.setString(5, r.getAs[String]("b_pub"))
-      st.insBinding.setBoolean(6, r.getAs[Boolean]("b_simple"))
-      st.insBinding.setLong(7, addr); st.insBinding.setLong(8, id)
-      st.insBinding.setLong(9, addr); st.insBinding.setLong(10, id)
-      st.insBinding.setInt(11, r.getAs[Int]("b_cred"))
-      st.insBinding.setInt(12, r.getAs[Int]("b_key"))
-      st.insBinding.executeUpdate()
+    // Latest snapshot per address in this block: the rows are in id
+    // order, so the last one per address wins.
+    val latest = scala.collection.mutable.LinkedHashMap.empty[Long, Row]
+    rows.foreach { r =>
+      if (!r.isNullAt(r.fieldIndex("key_bindings"))) latest(r.getAs[Long]("address")) = r
     }
+    latest.foreach { case (addr, r) =>
+      val id = r.getAs[Long]("id")
+      items[Row](r, "key_bindings").foreach { b =>
+        val (cred, key) = (b.getAs[Int]("credential_index"), b.getAs[Int]("key_index"))
+        bind(st.delBindings, addr, id).executeUpdate()
+        bind(st.insBinding, addr, id, cred, key, b.getAs[String]("public_key"),
+          b.getAs[Boolean]("is_simple_account"), addr, id, addr, id, cred, key).executeUpdate()
+      }
+    }
+  }
+
+  /** Binds `values` to the statement's parameters, in order. */
+  private def bind(ps: PreparedStatement, values: Any*): PreparedStatement = {
+    values.zipWithIndex.foreach {
+      case (l: Long, i) => ps.setLong(i + 1, l)
+      case (n: Int, i) => ps.setInt(i + 1, n)
+      case (s: String, i) => ps.setString(i + 1, s)
+      case (b: Boolean, i) => ps.setBoolean(i + 1, b)
+      case (other, i) => ps.setObject(i + 1, other)
+    }
+    ps
+  }
+
+  /** The elements of an array field; none when it is null (as `explode`). */
+  private def items[T](r: Row, field: String): Seq[T] = {
+    val i = r.fieldIndex(field)
+    if (r.isNullAt(i)) Nil else r.getSeq[T](i)
   }
 
   /** Optimistic read-modify-write of one token's running supply:
@@ -220,20 +211,14 @@ object TransactionalSink extends Serializable {
     val (i, s, t) = key
     var done = false
     while (!done) {
-      st.selTok.setLong(1, i); st.selTok.setLong(2, s); st.selTok.setString(3, t)
-      val rs = st.selTok.executeQuery()
+      val rs = bind(st.selTok, i, s, t).executeQuery()
       if (rs.next()) {
         val cur = rs.getString(1)
-        st.updTok.setString(1, new BigInteger(cur).add(d).toString)
-        st.updTok.setLong(2, i); st.updTok.setLong(3, s); st.updTok.setString(4, t)
-        st.updTok.setString(5, cur)
-        done = st.updTok.executeUpdate() == 1
+        done = bind(st.updTok, new BigInteger(cur).add(d).toString, i, s, t, cur).executeUpdate() == 1
       } else {
         val sp = c.setSavepoint()
         try {
-          st.insTok.setLong(1, i); st.insTok.setLong(2, s); st.insTok.setString(3, t)
-          st.insTok.setString(4, d.toString)
-          st.insTok.executeUpdate()
+          bind(st.insTok, i, s, t, d.toString).executeUpdate()
           done = true
         } catch {
           case _: SQLException => c.rollback(sp) // lost the insert race; retry as update
@@ -252,22 +237,9 @@ object TransactionalSink extends Serializable {
     private val keyIdx = keys.map(cols.indexOf)
     val ps: PreparedStatement = c.prepareStatement(sql)
 
-    private def set(i: Int, v: Any): Unit = v match {
-      case l: Long => ps.setLong(i, l)
-      case n: Int => ps.setInt(i, n)
-      case s: String => ps.setString(i, s)
-      case b: Boolean => ps.setBoolean(i, b)
-      case other => ps.setObject(i, other)
-    }
-
     /** Bind one row (values in `cols` order) and add it to the batch. */
-    def add(values: Seq[Any]): Unit = {
-      values.zipWithIndex.foreach { case (v, i) => set(i + 1, v) }
-      if (rebindKeys) keyIdx.zipWithIndex.foreach { case (ki, i) =>
-        set(values.size + i + 1, values(ki))
-      }
-      ps.addBatch()
-    }
+    def add(values: Seq[Any]): Unit =
+      bind(ps, (if (rebindKeys) values ++ keyIdx.map(values) else values): _*).addBatch()
     def executeBatch(): Array[Int] = ps.executeBatch()
     def close(): Unit = ps.close()
   }

@@ -143,6 +143,16 @@ class MultimodalSpec extends SparkSpec {
     assert(feats.find(_.media_id == 3L).get.width == 16)
   }
 
+  test("pooled image reader is the reader ImageIO.read selects (PNG, JPEG)") {
+    def stream(b: Array[Byte]) = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(b))
+    Seq("png" -> encoded("png", 7, 5, 0x102030),
+        "jpeg" -> encoded("jpg", 16, 8, 0x808080)).foreach { case (fmt, bytes) =>
+      val selected = javax.imageio.ImageIO.getImageReaders(stream(bytes)).next()
+      assert(Multimodal.pooledReader(fmt, stream(bytes)).getClass == selected.getClass, fmt)
+    }
+  }
+
   test("partitioning does not change batched results") {
     val ds = (payloads :+ ((4L, gifBytes, "image/gif")))
       .map { case (id, b, m) => MediaRow(id, b, m) }.toDS()
