@@ -143,11 +143,32 @@ object Bench {
     * fast local storage is the standard production layout (guide §2.1:
     * local disk can be the tighter shuffle limit); env-parameterised
     * (`SPARK_GRAFT_LOCAL_DIR`) for hosts where RAM-backed shuffle is
-    * wrong, falling back to the JVM default tmpdir. */
-  def scratchLocalDir(): String = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-    .orElse(Option("/dev/shm/graft-local")
-      .filter(_ => new java.io.File("/dev/shm").isDirectory))
-    .getOrElse(System.getProperty("java.io.tmpdir"))
+    * wrong, falling back to the JVM default tmpdir.
+    *
+    * Each JVM gets its own `<root>/<pid>` (memoized, so every session of
+    * one process agrees): a killed bench shard can never clean up its
+    * `blockmgr-*` directories, and on tmpfs those hold RAM until reboot.
+    * The first call therefore deletes every numeric sibling whose
+    * process is gone ([[sweepDeadProcessDirs]]). */
+  def scratchLocalDir(): String = localDir
+
+  private lazy val localDir: String = {
+    val root = new java.io.File(sys.env.get("SPARK_GRAFT_LOCAL_DIR")
+      .orElse(Option("/dev/shm/graft-local")
+        .filter(_ => new java.io.File("/dev/shm").isDirectory))
+      .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft-local"))
+    sweepDeadProcessDirs(root)
+    new java.io.File(root, ProcessHandle.current.pid.toString).getPath
+  }
+
+  /** Delete the `<root>/<pid>` scratch directories of processes that no
+    * longer exist; live processes' directories and non-numeric entries
+    * stay. Exposed for GraftSessionSpec. */
+  private[graft] def sweepDeadProcessDirs(root: java.io.File): Unit =
+    Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(d => d.isDirectory && d.getName.matches("\\d{1,18}") &&
+        ProcessHandle.of(d.getName.toLong).isEmpty)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
 
   /** The smallest sibling SF dir used for the untimed per-query JIT
     * warm, or None when the bench already targets it (a same-data warm

@@ -1368,7 +1368,7 @@ object Similarity {
     * pruning — and appended into its `cid=` partitions. Only the
     * appended rows shuffle; rebuilding the corpus-sized cells because
     * 0.1% of vectors arrived would be the mirror-overwrite mistake
-    * [[graft.sources.BucketedMirror.append]] exists to avoid.
+    * [[graft.sources.BucketedMirror.appendOnce]] exists to avoid.
     *
     * Replay-safe for `foreachBatch` at TWO granularities: an
     * `_applied_batches/<batchId>` marker under the index root

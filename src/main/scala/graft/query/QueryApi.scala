@@ -12,138 +12,135 @@ import org.apache.spark.sql.functions._
   * broadcast once the paged side is filtered down.
   *
   * All pages are ordered by id — the clustered-key order the reference
-  * documents (ORDER BY ati.id, postgres.rs:100-118).
+  * documents (ORDER BY ati.id, postgres.rs:100-118). The account and
+  * contract pages are one query shape over two index tables that differ
+  * only in the key predicate (`query_account`/`query_contract`,
+  * postgres.rs:100-181): each public page entry is one line over a
+  * private builder that takes that predicate.
   */
 object QueryApi {
+
+  /** The reference page row shape. */
+  private val PageCols = Seq("id", "block", "timestamp", "height", "summary")
+
+  private def accountKey(account: Column): Column = col("account") === account
+
+  private def contractKey(index: Long, subindex: Long): Column =
+    col("index") === index && col("subindex") === subindex
+
+  /** The keyset cursor on the index table's summary id. */
+  private def cursor(from: Long, ascending: Boolean): Column =
+    if (ascending) col("summary") >= from else col("summary") <= from
+
+  private def order(c: String, ascending: Boolean): Column =
+    if (ascending) col(c).asc else col(c).desc
 
   /** B1/B2 — `query_account`: summaries affecting one account, keyset
     * cursor `from`, ascending or descending (postgres.rs:100-181).
     * Returns the reference row shape (id, block, timestamp, height,
     * summary). */
   def accountTransactions(ati: DataFrame, summaries: DataFrame, account: Column,
-                          from: Long, limit: Option[Int], ascending: Boolean): DataFrame = {
-    val cursor =
-      if (ascending) col("summary") >= from else col("summary") <= from
-    val page = ati.where(col("account") === account && cursor)
-    val joined = page.join(summaries, page("summary") === summaries("id"))
-      .select(summaries("id"), summaries("block"), summaries("timestamp"),
-        summaries("height"), summaries("summary"))
-    val sorted = joined.orderBy(if (ascending) col("id").asc else col("id").desc)
-    limit.fold(sorted)(sorted.limit)
-  }
+                          from: Long, limit: Option[Int], ascending: Boolean): DataFrame =
+    scanPage(ati, summaries, accountKey(account), from, limit, ascending)
 
   /** B3 — `query_contract`: composite-key variant (postgres.rs:120-181). */
   def contractTransactions(cti: DataFrame, summaries: DataFrame, index: Long, subindex: Long,
-                           from: Long, limit: Option[Int], ascending: Boolean): DataFrame = {
-    val cursor =
-      if (ascending) col("summary") >= from else col("summary") <= from
-    val page = cti.where(col("index") === index && col("subindex") === subindex && cursor)
-    val joined = page.join(summaries, page("summary") === summaries("id"))
-      .select(summaries("id"), summaries("block"), summaries("timestamp"),
-        summaries("height"), summaries("summary"))
-    val sorted = joined.orderBy(if (ascending) col("id").asc else col("id").desc)
+                           from: Long, limit: Option[Int], ascending: Boolean): DataFrame =
+    scanPage(cti, summaries, contractKey(index, subindex), from, limit, ascending)
+
+  /** The scan page: the keyed, cursor-bounded index rows joined to
+    * `summaries` on the FK and ordered by id, top-`limit` when given. */
+  private def scanPage(index: DataFrame, summaries: DataFrame, key: Column,
+                       from: Long, limit: Option[Int], ascending: Boolean): DataFrame = {
+    val page = index.where(key && cursor(from, ascending))
+    val sorted = page.join(summaries, page("summary") === summaries("id"))
+      .select(PageCols.map(summaries(_)): _*)
+      .orderBy(order("id", ascending))
     limit.fold(sorted)(sorted.limit)
   }
 
-  /** The page's summary-id plan on the account-bucketed mirror: bucket
-    * pruning on the `account = ?` literal (only the account's bucket
-    * files are read) and top-`limit` by cursor order — orderBy+limit
-    * fuse to `TakeOrderedAndProject`, so the plan has ZERO Exchange.
-    * Split out of [[accountPageServed]] so ServingPageSpec can assert
-    * both properties on the exact plan the serving path executes.
-    * `account` must be a LITERAL (any address type the mirror carries —
-    * long fixture or 32-byte binary): bucket pruning evaluates the
-    * predicate against the bucket hash at planning time, which a
-    * non-literal column reference defeats. */
+  /** The account page's summary-id plan on the account-bucketed mirror
+    * ([[pageIds]]). `account` must be a LITERAL (any address type the
+    * mirror carries — long fixture or 32-byte binary). */
   def accountPageIds(atiMirror: DataFrame, account: Column, from: Long,
-                     limit: Int, ascending: Boolean): DataFrame = {
-    val cursor =
-      if (ascending) col("summary") >= from else col("summary") <= from
-    val ord = if (ascending) col("summary").asc else col("summary").desc
-    atiMirror.where(col("account") === account && cursor)
-      .orderBy(ord).limit(limit)
-      .select("summary")
-  }
+                     limit: Int, ascending: Boolean): DataFrame =
+    pageIds(atiMirror, accountKey(account), from, limit, ascending)
 
-  /** B1/B2 SERVING path over bucketed mirrors — the btree analog of the
-    * reference's `<0.5 s` account page (postgres.rs:94-99, served by the
-    * m0001 btree): `atiMirror` is bucketed by account and `summariesMirror`
-    * by id ([[graft.sources.ServingMirrors]]), so
-    *  1. the account+cursor probe ([[accountPageIds]]) reads ONLY the
-    *     account's bucket files (bucket pruning on the `account = ?`
-    *     literal) with the cursor pushed into the sorted row groups, and
+  /** The contract page's summary-id plan on the cti mirror, bucketed by
+    * the leading composite key `index` ([[pageIds]]). */
+  def contractPageIds(ctiMirror: DataFrame, index: Long, subindex: Long,
+                      from: Long, limit: Int, ascending: Boolean): DataFrame =
+    pageIds(ctiMirror, contractKey(index, subindex), from, limit, ascending)
+
+  /** The id probe: bucket pruning on the key's leading literal (only
+    * that key's bucket files are read) and top-`limit` by cursor order —
+    * orderBy+limit fuse to `TakeOrderedAndProject`, so the plan has ZERO
+    * Exchange. Public through the two entries above so ServingPageSpec
+    * can assert both properties on the exact plan the serving path
+    * executes. The key must compare against LITERALS: bucket pruning
+    * evaluates the predicate against the bucket hash at planning time,
+    * which a non-literal column reference defeats. */
+  private def pageIds(indexMirror: DataFrame, key: Column, from: Long,
+                      limit: Int, ascending: Boolean): DataFrame =
+    indexMirror.where(key && cursor(from, ascending))
+      .orderBy(order("summary", ascending)).limit(limit)
+      .select("summary")
+
+  /** B1/B2 SERVING path over the bucketed mirrors ([[servedPage]]). */
+  def accountPageServed(atiMirror: DataFrame, summariesMirror: DataFrame,
+                        account: Column, from: Long, limit: Int,
+                        ascending: Boolean): DataFrame =
+    servedPage(atiMirror, summariesMirror, accountKey(account), from, limit, ascending)
+
+  /** B3 SERVING path over the bucketed mirrors ([[servedPage]]). */
+  def contractPageServed(ctiMirror: DataFrame, summariesMirror: DataFrame,
+                         index: Long, subindex: Long, from: Long, limit: Int,
+                         ascending: Boolean): DataFrame =
+    servedPage(ctiMirror, summariesMirror, contractKey(index, subindex), from,
+      limit, ascending)
+
+  /** The SERVING page — the btree analog of the reference's `<0.5 s`
+    * page (postgres.rs:94-99, served by the m0001 btree): the index
+    * mirror is bucketed by the key ([[graft.sources.ServingMirrors]])
+    * and the summaries mirror by id, so
+    *  1. the key+cursor probe ([[pageIds]]) reads ONLY the key's bucket
+    *     files with the cursor pushed into the sorted row groups, and
     *  2. the page's ≤`limit` summary ids become a LITERAL `id IN (…)`
     *     predicate on the summaries scan — bucket-pruned AND row-group-
     *     skipped (the mirror is id-sorted), the Spark spelling of the
     *     reference's per-id pkey lookups.
-    * EAGER, unlike the other builders here: calling it runs the id job
-    * now (two bounded jobs total, like the reference's two index reads).
-    * The driver-side id collect is bounded by the PAGE SIZE (≤ `limit`
-    * rows, like the nprobe centroid collect in
-    * [[graft.ext.Similarity.annIvfIndexedVec]]) — never by the data.
-    * ServingPageSpec pins both scans' pruning and zero-Exchange plans,
-    * and CORRECTNESS rows b1/b2_served pin equality with
-    * [[accountTransactions]]. For the unbounded iterate surface (B4)
-    * use [[accountTransactions]]/[[contractTransactions]] — a full-page
-    * collect there would be data-sized. */
-  def accountPageServed(atiMirror: DataFrame, summariesMirror: DataFrame,
-                        account: Column, from: Long, limit: Int,
-                        ascending: Boolean): DataFrame = {
-    // ati carries at most one row per (account, summary), and every
-    // summary id resolves (FK), so ordering the ati side by summary and
-    // cutting the page BEFORE the lookup is exactly join-order-limit.
-    val ids = accountPageIds(atiMirror, account, from, limit, ascending)
-      .collect().map(_.getLong(0)).toSeq
-    servedLookup(summariesMirror, ids, limit, ascending)
-  }
-
-  /** The contract-side id plan — same shape as [[accountPageIds]] on
-    * the cti mirror (bucketed by the leading composite key `index`):
-    * bucket pruning on the `index = ?` literal, zero Exchange. */
-  def contractPageIds(ctiMirror: DataFrame, index: Long, subindex: Long,
-                      from: Long, limit: Int, ascending: Boolean): DataFrame = {
-    val cursor =
-      if (ascending) col("summary") >= from else col("summary") <= from
-    val ord = if (ascending) col("summary").asc else col("summary").desc
-    ctiMirror.where(col("index") === index && col("subindex") === subindex &&
-        cursor)
-      .orderBy(ord).limit(limit)
-      .select("summary")
-  }
-
-  /** B3 SERVING path — [[accountPageServed]]'s contract twin
-    * (postgres.rs:120-181 over the cti PK btree), probing the shared
-    * id-bucketed summaries mirror with the page's literal id set. Same
-    * eager two-job contract; ServingPageSpec pins the plans. */
-  def contractPageServed(ctiMirror: DataFrame, summariesMirror: DataFrame,
-                         index: Long, subindex: Long, from: Long, limit: Int,
-                         ascending: Boolean): DataFrame = {
-    val ids = contractPageIds(ctiMirror, index, subindex, from, limit,
-      ascending).collect().map(_.getLong(0)).toSeq
-    servedLookup(summariesMirror, ids, limit, ascending)
-  }
-
-  /** The shared page lookup: a LITERAL `id IN (…)` probe of the
-    * id-bucketed, id-sorted summaries mirror — bucket-pruned and
-    * row-group-skipped. The id dedup guards the serving path against a
-    * REPLAYED mirror generation (the
+    * The id dedup guards against a REPLAYED mirror generation (the
     * [[graft.sources.BucketedMirror.appendOnce]] crash window commits
     * data files before the marker, so a replay can duplicate one
     * batch's rows until compaction): duplicate rows are byte-identical,
     * and because the mirror is BUCKETED by id the aggregation's
     * required distribution is already satisfied by the scan — the
-    * dedup adds a HashAggregate but NO Exchange, preserving the
-    * zero-Exchange page plan ServingPageSpec pins. The final
-    * limit(limit) fuses the output order into TakeOrderedAndProject
-    * (no Sort exchange). */
-  private def servedLookup(summariesMirror: DataFrame, ids: Seq[Long],
-                           limit: Int, ascending: Boolean): DataFrame =
+    * dedup adds a HashAggregate but NO Exchange. The final limit fuses
+    * the output order into TakeOrderedAndProject (no Sort exchange).
+    *
+    * EAGER, unlike the other builders here: calling it runs the id job
+    * now (two bounded jobs total, like the reference's two index reads).
+    * The driver-side id collect is bounded by the PAGE SIZE (≤ `limit`
+    * rows, like the nprobe centroid collect in
+    * [[graft.ext.Similarity.annIvfIndexedVec]]) — never by the data.
+    * The index side carries at most one row per (key, summary) and every
+    * summary id resolves (FK), so cutting the page BEFORE the lookup is
+    * exactly join-order-limit. ServingPageSpec pins both scans' pruning
+    * and zero-Exchange plans and equality with the scan page; the
+    * CORRECTNESS rows `b1s`/`b2s`/`b3s` pin it against DuckDB. For the
+    * unbounded iterate surface (B4) use the scan page — a full-page
+    * collect there would be data-sized. */
+  private def servedPage(indexMirror: DataFrame, summariesMirror: DataFrame,
+                         key: Column, from: Long, limit: Int,
+                         ascending: Boolean): DataFrame = {
+    val ids = pageIds(indexMirror, key, from, limit, ascending)
+      .collect().map(_.getLong(0)).toSeq
     summariesMirror.where(col("id").isin(ids: _*))
-      .select(col("id"), col("block"), col("timestamp"), col("height"),
-        col("summary"))
+      .select(PageCols.map(col): _*)
       .dropDuplicates("id")
-      .orderBy(if (ascending) col("id").asc else col("id").desc)
+      .orderBy(order("id", ascending))
       .limit(limit)
+  }
 
   /** B5 — row decode: project fields out of the JSON envelope, SILENTLY
     * DROPPING rows whose summary fails to parse — the reference's
@@ -300,13 +297,12 @@ object QueryApi {
     * sender is null for protocol events → kept). */
   def changeFeed(ati: DataFrame, summariesWithSender: DataFrame, account: Column,
                  afterId: Long, pageSize: Int): DataFrame = {
-    val page = ati.where(col("account") === account && col("summary") > afterId)
+    val page = ati.where(accountKey(account) && col("summary") > afterId)
     val sws = summariesWithSender
     page.join(sws, page("summary") === sws("id"))
       .where(sws("sender").isNull || sws("sender") =!= account)
-      .select(sws("id"), sws("block"), sws("timestamp"), sws("height"),
-        sws("summary"), sws("sender"))
-      .orderBy(col("id").asc)
+      .select((PageCols :+ "sender").map(sws(_)): _*)
+      .orderBy(order("id", ascending = true))
       .limit(pageSize)
   }
 
@@ -314,11 +310,10 @@ object QueryApi {
     * queries migration m0003 optimizes; m0003-...sql:1-12). */
   def accountTransactionsInRange(ati: DataFrame, summaries: DataFrame, account: Column,
                                  lo: Column, hi: Column, rangeCol: String): DataFrame = {
-    val page = ati.where(col("account") === account)
+    val page = ati.where(accountKey(account))
     page.join(summaries, page("summary") === summaries("id"))
       .where(summaries(rangeCol).between(lo, hi))
-      .select(summaries("id"), summaries("block"), summaries("timestamp"),
-        summaries("height"), summaries("summary"))
-      .orderBy(col("id").asc)
+      .select(PageCols.map(summaries(_)): _*)
+      .orderBy(order("id", ascending = true))
   }
 }

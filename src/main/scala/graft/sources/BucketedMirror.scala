@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable}
 import org.apache.spark.sql.functions.col
 
 /** Bucketed serving mirror — the co-located-join layout for the hot
@@ -34,60 +37,52 @@ object BucketedMirror {
   def write(df: DataFrame, name: String, path: String, bucketCol: String,
             buckets: Int, sortCols: Seq[String] = Nil): Unit = {
     require(buckets > 0, "buckets must be positive")
-    val spark = df.sparkSession
     // saveAsTable(Overwrite) on an existing external table can leave
     // stale files at the path; drop-then-write is the idempotent form.
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val w = df.write
-      .mode(SaveMode.Overwrite)
-      .format("parquet")
-      .option("path", path)
-      .bucketBy(buckets, bucketCol)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(name)
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS $name")
+    save(df.write.mode(SaveMode.Overwrite).option("path", path),
+      BucketSpec(buckets, Seq(bucketCol), sortCols), name)
   }
 
-  /** Incremental refresh: append a delta (e.g. one ingest micro-batch's
-    * new rows) to an existing mirror under the SAME bucket spec — each
-    * append adds one file per touched bucket, and bucket pruning /
-    * shuffle elision keep working across all appended files because the
-    * file→bucket assignment is the same hash. This is how the mirror
-    * tracks a continuously-ingesting upstream (the reference's btree is
-    * maintained per insert; here the unit is the micro-batch): call it
-    * from `foreachBatch` on the ingest stream. Compact periodically with
-    * [[write]] — every append adds a file per bucket, and serving reads
-    * degrade as files accumulate (same trade-off as btree page splits
-    * vs. vacuum). The bucket spec MUST match the original write; Spark
-    * rejects a mismatched append. Readers in OTHER sessions cache the
-    * table's file listing — they must `spark.catalog.refreshTable(name)`
-    * to see new generations (the writing session refreshes itself). */
-  def append(df: DataFrame, name: String, bucketCol: String, buckets: Int,
-             sortCols: Seq[String] = Nil): Unit = {
-    // hard requirement, not a convenience: Append+saveAsTable on a
-    // MISSING table silently CTASes a new managed table at the
-    // warehouse dir — after a session restart (catalog lost) a resumed
-    // ingest stream would orphan the external mirror's entire history
-    // and serve only post-restart rows. Re-register (write) first.
-    require(df.sparkSession.catalog.tableExists(name),
-      s"append target '$name' is not in the catalog — run BucketedMirror.write " +
-        "to (re)register the mirror before appending")
-    val w = df.write
-      .mode(SaveMode.Append)
-      .format("parquet")
-      .bucketBy(buckets, bucketCol)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(name)
+  /** The one bucketed parquet `saveAsTable` behind [[write]],
+    * [[appendOnce]] and [[compact]]. */
+  private def save(w: DataFrameWriter[Row], spec: BucketSpec,
+                   name: String): Unit = {
+    val b = w.format("parquet").bucketBy(spec.numBuckets,
+      spec.bucketColumnNames.head, spec.bucketColumnNames.tail: _*)
+    (if (spec.sortColumnNames.nonEmpty)
+      b.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
+    else b).saveAsTable(name)
   }
 
-  /** REPLAY-SAFE [[append]] for `foreachBatch`: Structured Streaming
-    * re-delivers the last micro-batch after a restart (the batch may
-    * have committed to the sink before the checkpoint advanced), and a
-    * plain append would duplicate its rows in the mirror. This is the
-    * standard batchId-dedup pattern: a marker file per applied batch
-    * under the mirror's own path (`_applied_batches/<id>` — the `_`
-    * prefix hides the directory from Spark's file listing, like
-    * `_spark_metadata`), checked before appending. Returns false when
-    * the batch was already applied (the replay no-op).
+  private def catalogMeta(spark: SparkSession, name: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(name))
+
+  /** Incremental, REPLAY-SAFE refresh for `foreachBatch`: append a delta
+    * (one ingest micro-batch's new rows) to an existing mirror under the
+    * table's OWN catalog bucket spec — each append adds one file per
+    * touched bucket, and bucket pruning / shuffle elision keep working
+    * across all appended files because the file→bucket assignment is
+    * the same hash. This is how the mirror tracks a
+    * continuously-ingesting upstream (the reference's btree is
+    * maintained per insert; here the unit is the micro-batch). Compact
+    * periodically with [[compact]] — every append adds a file per
+    * bucket, and serving reads degrade as files accumulate (same
+    * trade-off as btree page splits vs. vacuum). Readers in OTHER
+    * sessions cache the table's file listing — they must
+    * `spark.catalog.refreshTable(name)` to see new generations (the
+    * writing session refreshes itself).
+    *
+    * Structured Streaming re-delivers the last micro-batch after a
+    * restart (the batch may have committed to the sink before the
+    * checkpoint advanced), and a plain append would duplicate its rows.
+    * This is the standard batchId-dedup pattern, on the marker ledger
+    * the index stores share ([[StoreCompaction.isApplied]] /
+    * [[StoreCompaction.commitMarker]]: `_applied_batches/<id>` under the
+    * mirror's own path — the `_` prefix hides the directory from Spark's
+    * file listing, like `_spark_metadata`), checked before appending.
+    * Returns false when the batch was already applied (the replay
+    * no-op).
     *
     * Honest bound: the marker commits AFTER the data files, so a crash
     * BETWEEN the two replays one batch's rows into the mirror — the
@@ -96,10 +91,10 @@ object BucketedMirror {
     * unique id — exchange-free on the id-bucketed mirror — so a
     * duplicated generation can shorten a page below `limit` but never
     * surfaces a row twice; StreamingSoakSpec pins this), and the
-    * periodic [[write]] compaction squashes it;
-    * a deployment needing exact files would anti-join the delta on the
-    * unique id instead, at the cost of a mirror scan per batch. The
-    * DB sink beside this call needs no marker: its conditional inserts
+    * periodic compaction squashes it; a deployment needing exact files
+    * would anti-join the delta on the unique id instead, at the cost of
+    * a mirror scan per batch. The DB sink beside this call needs no
+    * marker: its conditional inserts
     * ([[graft.streaming.TransactionalSink]]) are row-idempotent.
     *
     * Compacting with a raw [[write]] is only safe while the ingest
@@ -107,27 +102,29 @@ object BucketedMirror {
     * with the data files, so an in-flight batch replayed across it
     * would no longer be recognized as applied. A live deployment uses
     * [[compact]], which carries the markers into the new generation. */
-  def appendOnce(df: DataFrame, name: String, batchId: Long, bucketCol: String,
-                 buckets: Int, sortCols: Seq[String] = Nil): Boolean = {
+  def appendOnce(df: DataFrame, name: String, batchId: Long): Boolean = {
     val spark = df.sparkSession
+    // hard requirement, not a convenience: Append+saveAsTable on a
+    // MISSING table silently CTASes a new managed table at the
+    // warehouse dir — after a session restart (catalog lost) a resumed
+    // ingest stream would orphan the external mirror's entire history
+    // and serve only post-restart rows. Re-register (write) first.
     require(spark.catalog.tableExists(name),
       s"append target '$name' is not in the catalog — run BucketedMirror.write " +
         "to (re)register the mirror before appending")
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-      .location
-    val markers = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(loc), "_applied_batches")
-    val fs = markers.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-    if (fs.exists(marker)) false
+    val meta = catalogMeta(spark, name)
+    val root = meta.location.toString
+    if (StoreCompaction.isApplied(spark, root, batchId)) false
     else {
-      append(df, name, bucketCol, buckets, sortCols)
-      fs.mkdirs(markers)
-      fs.create(marker, false).close()
+      save(df.write.mode(SaveMode.Append), bucketSpecOf(meta), name)
+      StoreCompaction.commitMarker(spark, root, batchId)
       true
     }
   }
+
+  private def bucketSpecOf(meta: CatalogTable): BucketSpec =
+    meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
+      s"'${meta.identifier.table}' is not a bucketed mirror"))
 
   /** STREAM-SAFE compaction: squash the mirror's accumulated append
     * generations (one file per bucket per micro-batch — the btree
@@ -165,17 +162,11 @@ object BucketedMirror {
   def compact(spark: SparkSession, name: String): String = {
     require(spark.catalog.tableExists(name),
       s"compact target '$name' is not in the catalog")
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-    val spec = meta.bucketSpec.getOrElse(
-      throw new IllegalArgumentException(s"'$name' is not a bucketed mirror"))
-    val oldLoc = new org.apache.hadoop.fs.Path(meta.location)
+    val meta = catalogMeta(spark, name)
+    val spec = bucketSpecOf(meta)
+    val oldLoc = new Path(meta.location)
     val fs = oldLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def listMarkers(): Set[String] = {
-      val dir = new org.apache.hadoop.fs.Path(oldLoc, "_applied_batches")
-      if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath.getName).toSet
-      else Set.empty
-    }
+    def listMarkers(): Set[String] = StoreCompaction.appliedMarkers(fs, oldLoc)
     val applied = listMarkers()
     val GenRe = "(.*)_gen(\\d+)$".r
     val newLoc = oldLoc.toString match {
@@ -200,29 +191,16 @@ object BucketedMirror {
     // neither the exchange nor the bucket layout (observed: writer
     // tasks = file-packing count, several files per bucket). A plain
     // scan exposes no partitioning, so the exchange always stands.
-    val bucketCols = spec.bucketColumnNames.map(col)
-    val w = spark.read.schema(spark.table(name).schema)
+    val snapshot = spark.read.schema(spark.table(name).schema)
       .parquet(oldLoc.toString)
-      .repartition(spec.numBuckets, bucketCols: _*)
-      .write
-      .mode(SaveMode.Overwrite)
-      .format("parquet")
-      .option("path", newLoc)
-      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-        spec.bucketColumnNames.tail: _*)
-    (if (spec.sortColumnNames.nonEmpty)
-      w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-    else w).saveAsTable(tmpName)
-    val newMarkers = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(newLoc), "_applied_batches")
-    fs.mkdirs(newMarkers)
-    applied.foreach { id =>
-      fs.create(new org.apache.hadoop.fs.Path(newMarkers, id), false).close()
-    }
+      .repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
+    save(snapshot.write.mode(SaveMode.Overwrite).option("path", newLoc),
+      spec, tmpName)
+    applied.foreach(id => StoreCompaction.commitMarker(spark, newLoc, id.toLong))
     val now = listMarkers()
     if (now != applied) {
       spark.sql(s"DROP TABLE IF EXISTS $tmpName")
-      fs.delete(new org.apache.hadoop.fs.Path(newLoc), true)
+      fs.delete(new Path(newLoc), true)
       throw new IllegalStateException(
         s"compaction of '$name' raced appends of batch(es) " +
           s"${(now -- applied).toSeq.sorted.mkString(",")} — retry")

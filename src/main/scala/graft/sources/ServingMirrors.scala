@@ -26,45 +26,21 @@ import graft.Tables
   */
 object ServingMirrors {
 
+  /** Fixture bucket count; part of the table/path key below. */
+  private val Buckets = 16
+
   /** Table/path key for a scale dir: [[Scratch.key]] over the
-    * canonicalized path + data fingerprint + the BUCKET COUNT. Two
-    * spellings of one directory share a mirror; distinct directories,
-    * regenerated data, or a different `buckets` parameter each get
-    * their own tables — the previous name-only memo would silently
-    * hand back mirrors built with another call's bucket spec. */
-  private def keyOf(sfDir: String, buckets: Int): String =
-    Scratch.key(sfDir, s"b$buckets")
-
-  private def scratch(key: String): String = Scratch.dir("serve", key)
-
-  /** Write-if-absent: the catalog is the memo (see object doc). */
-  private def ensure(spark: SparkSession, name: String, path: String,
-                     df: => DataFrame, bucketCol: String, buckets: Int,
-                     sortCols: Seq[String]): Unit =
-    if (!spark.catalog.tableExists(name))
-      BucketedMirror.write(df, name, path, bucketCol, buckets, sortCols)
-
-  private def summariesMirror(spark: SparkSession, sfDir: String, key: String,
-                              buckets: Int): String = {
-    val sumT = s"graft_summaries_serve_$key"
-    ensure(spark, sumT, s"${scratch(key)}/summaries",
-      Tables.summaries(spark, sfDir), "id", buckets, Seq("id"))
-    sumT
-  }
+    * canonicalized path + data fingerprint + the bucket count. Two
+    * spellings of one directory share a mirror; distinct directories or
+    * regenerated data each get their own tables. */
+  private def keyOf(sfDir: String): String = Scratch.key(sfDir, s"b$Buckets")
 
   /** The (ati, summaries) serving mirrors for `sfDir`, building them on
     * first use (per catalog). Must be read through the catalog
     * ([[BucketedMirror.table]]) to keep the bucket metadata. */
-  def atiSummaries(spark: SparkSession, sfDir: String,
-                   buckets: Int = 16): (DataFrame, DataFrame) = synchronized {
-    val key = keyOf(sfDir, buckets)
-    val atiT = s"graft_ati_serve_$key"
-    ensure(spark, atiT, s"${scratch(key)}/ati",
-      Tables.ati(spark, sfDir), "account", buckets,
+  def atiSummaries(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    withSummaries(spark, sfDir, "ati", Tables.ati(spark, sfDir), "account",
       Seq("account", "summary"))
-    val sumT = summariesMirror(spark, sfDir, key, buckets)
-    (BucketedMirror.table(spark, atiT), BucketedMirror.table(spark, sumT))
-  }
 
   /** The (cti, summaries) serving mirrors — the CONTRACT side of the
     * same btree analog (the reference's `cti` PK serves B3 pages,
@@ -72,14 +48,26 @@ object ServingMirrors {
     * composite (index, subindex)), sorted (index, subindex, summary) so
     * one contract's rows sit contiguous within its bucket. The
     * summaries mirror is SHARED with [[atiSummaries]]. */
-  def ctiSummaries(spark: SparkSession, sfDir: String,
-                   buckets: Int = 16): (DataFrame, DataFrame) = synchronized {
-    val key = keyOf(sfDir, buckets)
-    val ctiT = s"graft_cti_serve_$key"
-    ensure(spark, ctiT, s"${scratch(key)}/cti",
-      Tables.cti(spark, sfDir), "index", buckets,
+  def ctiSummaries(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    withSummaries(spark, sfDir, "cti", Tables.cti(spark, sfDir), "index",
       Seq("index", "subindex", "summary"))
-    val sumT = summariesMirror(spark, sfDir, key, buckets)
-    (BucketedMirror.table(spark, ctiT), BucketedMirror.table(spark, sumT))
+
+  /** The `side` index mirror and the summaries mirror it pages into. */
+  private def withSummaries(spark: SparkSession, sfDir: String, side: String,
+                            index: => DataFrame, bucketCol: String,
+                            sortCols: Seq[String]): (DataFrame, DataFrame) = synchronized {
+    val key = keyOf(sfDir)
+    (mirror(spark, key, side, index, bucketCol, sortCols),
+      mirror(spark, key, "summaries", Tables.summaries(spark, sfDir), "id", Seq("id")))
+  }
+
+  /** Write-if-absent: the catalog is the memo (see object doc). */
+  private def mirror(spark: SparkSession, key: String, t: String, df: => DataFrame,
+                     bucketCol: String, sortCols: Seq[String]): DataFrame = {
+    val name = s"graft_${t}_serve_$key"
+    if (!spark.catalog.tableExists(name))
+      BucketedMirror.write(df, name, s"${Scratch.dir("serve", key)}/$t",
+        bucketCol, Buckets, sortCols)
+    BucketedMirror.table(spark, name)
   }
 }

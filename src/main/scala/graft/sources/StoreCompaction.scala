@@ -121,6 +121,16 @@ object StoreCompaction {
     fs.create(new Path(markers, batchId.toString), true).close()
   }
 
+  /** The per-batch marker names under `root` (watermark files excluded)
+    * — the set a compaction snapshots and re-checks for racing appends. */
+  private[sources] def appliedMarkers(fs: FileSystem, root: Path): Set[String] = {
+    val markers = new Path(root, MarkerDir)
+    if (fs.exists(markers))
+      fs.listStatus(markers).map(_.getPath.getName)
+        .filterNot(_.startsWith("_")).toSet
+    else Set.empty
+  }
+
   /** Refuse an append while a compaction holds the store (r17 ADVICE):
     * without this, an append racing the rename window reads the absent
     * live dir as an EMPTY bootstrap history and silently re-appends
@@ -276,12 +286,7 @@ object StoreCompaction {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(root, sub)
     require(fs.exists(live), s"nothing to compact: $live does not exist")
-    val markers = new Path(root, MarkerDir)
-    def listMarkers(): Set[String] =
-      if (fs.exists(markers))
-        fs.listStatus(markers).map(_.getPath.getName)
-          .filterNot(_.startsWith("_")).toSet
-      else Set.empty
+    def listMarkers(): Set[String] = appliedMarkers(fs, root)
     // raise the sentinel FIRST: appends starting after this point fail
     // loudly at their own first touch; appends already past their
     // sentinel check are caught by the marker re-lists below. Overwrite

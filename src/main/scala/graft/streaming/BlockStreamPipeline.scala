@@ -38,15 +38,7 @@ object BlockStreamPipeline {
       .schema(Schemas.blockFeed(org.apache.spark.sql.types.LongType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(feedDir)
-
-    val writer = feed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TransactionalSink.writeBatch(batch, url, dialect)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("2 seconds")))
-      .start()
+    run(feed, checkpointDir, url, dialect, availableNow)
   }
 
   /** Start the pipeline over a registered
@@ -66,6 +58,11 @@ object BlockStreamPipeline {
       .option("maxBlocksPerTrigger", maxBlocksPerTrigger.toString)
       .option("partitions", partitions.toString)
       .load()
+    run(feed, checkpointDir, url, dialect, availableNow)
+  }
+
+  private def run(feed: DataFrame, checkpointDir: String, url: String,
+                  dialect: Dialect, availableNow: Boolean): StreamingQuery = {
     val writer = feed.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -34,25 +34,25 @@ class CacheHygieneSpec extends SparkSpec {
   test("each cache-using query leaves no net persistent RDDs after release") {
     CacheScope.release() // drain whatever earlier suites left tracked
     cacheUsers.foreach { name =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       SparkEntry.queries(name)(spark, sf)
         .queryExecution.toRdd.foreach(_ => ())
       CacheScope.release()
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
       assert(leaked.isEmpty, s"$name leaked persistent RDDs: $leaked")
     }
   }
 
   test("tracking engages: the persisted intermediate exists until release") {
     CacheScope.release()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     SparkEntry.queries("dl")(spark, sf)
       .queryExecution.toRdd.foreach(_ => ())
-    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val during = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(during.nonEmpty,
       "the signature frame should be persisted while the query is live")
     CacheScope.release()
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty)
   }
 
   test("the JSONL corpus reader's split cache releases too") {
@@ -62,18 +62,18 @@ class CacheHygieneSpec extends SparkSpec {
       """{"doc_id":1,"text":"hello"}
         |{oops not json
         |""".stripMargin)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val res = graft.sources.TextCorpus.readJsonl(spark, dir.toString)
     assert(res.docs.count() == 1 && res.corrupt.count() == 1)
     CacheScope.release()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(leaked.isEmpty, s"readJsonl leaked persistent RDDs: $leaked")
     org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("components frees each round's checkpoint as the next materializes") {
     CacheScope.release()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     import spark.implicits._
     // a 64-node chain forces several star-contraction rounds
     val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
@@ -81,10 +81,10 @@ class CacheHygieneSpec extends SparkSpec {
     out.queryExecution.toRdd.foreach(_ => ())
     // only the FINAL round's edge set may still hold blocks (it backs
     // the returned plan); earlier rounds must already be gone
-    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val during = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(during.size <= 2,
       s"expected at most the final round's checkpoint alive, got: $during")
     CacheScope.release()
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty)
   }
 }

@@ -165,7 +165,7 @@ class BpeSpec extends SparkSpec {
     val m = Bpe.learn(hostile, col("text"), nMerges = 4)
     assert(m.vocab.contains("0x41>"))
     val ids = Bpe.encode(hostile, col("doc_id"), col("text"), m)
-      .orderBy("doc_id").select("input_ids").as[Seq[Long]].head
+      .orderBy("doc_id").select("input_ids").as[Seq[Long]].head()
     assert(Bpe.decodeIds(ids, m) == "<0x41>a <0x41>b")
   }
 

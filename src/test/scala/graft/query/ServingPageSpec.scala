@@ -1,25 +1,30 @@
 package graft.query
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.{SparkSpec, Tables}
 import graft.sources.ServingMirrors
 
-/** Pins the SERVING-path claims [[QueryApi.accountPageServed]] makes —
+/** Pins the SERVING-path claims [[QueryApi.accountPageServed]] and
+  * [[QueryApi.contractPageServed]] make —
   * the plan properties that make it the btree analog of the reference's
   * <0.5 s account page (postgres.rs:94-99):
-  *  (a) the id probe reads ONLY the account's bucket of the ati mirror
+  *  (a) the id probe reads ONLY the key's bucket of the index mirror
   *      (`SelectedBucketsCount: 1 out of N` — bucket pruning on the
-  *      account literal) and plans zero Exchange (TakeOrderedAndProject,
+  *      key literal) and plans zero Exchange (TakeOrderedAndProject,
   *      not a sorted shuffle);
   *  (b) the summaries lookup is bucket-pruned by the literal `id IN (…)`
   *      page and also plans zero Exchange;
-  *  (c) the served page equals the scan-path [[QueryApi.accountTransactions]]
-  *      row-for-row, both directions (the CORRECTNESS rows
-  *      b1/b2_served additionally pin this against DuckDB).
+  *  (c) the served page equals the scan path row-for-row for both keys
+  *      (account and contract) at the first page, the last page and a
+  *      mid-history keyset cursor both ways (the CORRECTNESS rows
+  *      `b1s`/`b2s`/`b3s` additionally pin this against DuckDB).
   */
 class ServingPageSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
-  private val account = org.apache.spark.sql.functions.lit(7L)
+  private val account = lit(7L)
   private lazy val mirrors = ServingMirrors.atiSummaries(spark, sf)
 
   /** Build `df`'s executed plan with auto-disabling of bucketed scans
@@ -61,16 +66,6 @@ class ServingPageSpec extends SparkSpec {
       s"expected limit+sort fusion in:\n$p")
   }
 
-  test("served page equals the scan path, ascending") {
-    val (atiM, sumM) = mirrors
-    val served = QueryApi.accountPageServed(atiM, sumM, account, 0L, 50,
-        ascending = true).collect().map(_.toSeq).toSeq
-    val scanned = QueryApi.accountTransactions(Tables.ati(spark, sf),
-        Tables.summaries(spark, sf), org.apache.spark.sql.functions.lit(account),
-        0L, Some(50), ascending = true).collect().map(_.toSeq).toSeq
-    assert(served.nonEmpty && served == scanned)
-  }
-
   test("contract id probe: one bucket selected, zero Exchange") {
     val (ctiM, _) = ServingMirrors.ctiSummaries(spark, sf)
     val p = bucketVisiblePlan(
@@ -81,23 +76,59 @@ class ServingPageSpec extends SparkSpec {
       s"contract id probe must be a shuffle-free top-k:\n$p")
   }
 
-  test("served contract page equals the scan path") {
+  test("contract lookup: bucket-pruned id IN page, zero Exchange") {
     val (ctiM, sumM) = ServingMirrors.ctiSummaries(spark, sf)
-    val served = QueryApi.contractPageServed(ctiM, sumM, 7L, 1L, 0L, 50,
-        ascending = true).collect().map(_.toSeq).toSeq
-    val scanned = QueryApi.contractTransactions(Tables.cti(spark, sf),
-        Tables.summaries(spark, sf), 7L, 1L, 0L, Some(50),
-        ascending = true).collect().map(_.toSeq).toSeq
-    assert(served.nonEmpty && served == scanned)
+    val p = bucketVisiblePlan(
+      QueryApi.contractPageServed(ctiM, sumM, 7L, 1L, 0L, 50, ascending = true))
+    assert(p.contains("SelectedBucketsCount"),
+      s"id IN (…) page must engage bucket pruning on the id mirror:\n$p")
+    assert(!p.contains("Exchange") && p.contains("TakeOrderedAndProject"),
+      s"contract summaries lookup must be a shuffle-free top-k:\n$p")
   }
 
-  test("served page equals the scan path, descending") {
+  /** A served-vs-scan case: the key's own summary ids, and its served and
+    * scan pages as functions of (cursor, ascending). */
+  private case class Key(label: String, rows: DataFrame,
+      served: (Long, Boolean) => DataFrame,
+      scanned: (Long, Boolean) => DataFrame)
+
+  private def accountKey: Key = {
     val (atiM, sumM) = mirrors
-    val served = QueryApi.accountPageServed(atiM, sumM, account, Long.MaxValue,
-        50, ascending = false).collect().map(_.toSeq).toSeq
-    val scanned = QueryApi.accountTransactions(Tables.ati(spark, sf),
-        Tables.summaries(spark, sf), org.apache.spark.sql.functions.lit(account),
-        Long.MaxValue, Some(50), ascending = false).collect().map(_.toSeq).toSeq
-    assert(served.nonEmpty && served == scanned)
+    Key("account 7", Tables.ati(spark, sf).where(col("account") === 7L),
+      QueryApi.accountPageServed(atiM, sumM, account, _, 50, _),
+      QueryApi.accountTransactions(Tables.ati(spark, sf),
+        Tables.summaries(spark, sf), account, _, Some(50), _))
   }
+
+  private def contractKey: Key = {
+    val (ctiM, sumM) = ServingMirrors.ctiSummaries(spark, sf)
+    Key("contract (7, 1)", Tables.cti(spark, sf)
+        .where(col("index") === 7L && col("subindex") === 1L),
+      QueryApi.contractPageServed(ctiM, sumM, 7L, 1L, _, 50, _),
+      QueryApi.contractTransactions(Tables.cti(spark, sf),
+        Tables.summaries(spark, sf), 7L, 1L, _, Some(50), _))
+  }
+
+  // (test, key, directions): each direction is checked at its first page
+  // (cursor 0 ascending, Long.MaxValue descending) and at a mid-history
+  // keyset cursor (the median of the key's own summary ids).
+  for ((name, key, directions) <- Seq[(String, () => Key, Seq[Boolean])](
+      ("served page equals the scan path, ascending", () => accountKey,
+        Seq(true)),
+      ("served page equals the scan path, descending", () => accountKey,
+        Seq(false)),
+      ("served contract page equals the scan path", () => contractKey,
+        Seq(true, false))))
+    test(name) {
+      val k = key()
+      val ids = k.rows.select("summary").collect().map(_.getLong(0)).sorted
+      assert(ids.nonEmpty, s"${k.label} has no rows in $sf")
+      val mid = ids(ids.length / 2)
+      for (asc <- directions; from <- Seq(if (asc) 0L else Long.MaxValue, mid)) {
+        val got = k.served(from, asc).collect().map(_.toSeq).toSeq
+        val want = k.scanned(from, asc).collect().map(_.toSeq).toSeq
+        assert(got.nonEmpty && got == want,
+          s"${k.label} from $from ascending=$asc: served $got, scanned $want")
+      }
+    }
 }

@@ -79,19 +79,18 @@ class BucketedMirrorSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("compact before any appendOnce: no markers to carry, elision survives") {
     // the soak covers compaction with carried markers mid-stream; this
-    // is the other lifecycle edge — a mirror maintained only by raw
-    // appends (no _applied_batches directory exists at all)
+    // is the other lifecycle edge — a freshly written mirror (no
+    // _applied_batches directory exists at all)
     val name = "ati_compact_edge"
     try {
       BucketedMirror.write(ati, name, path(name), "account",
         buckets = 8, sortCols = Seq("account", "id"))
-      BucketedMirror.append(summaries.select($"account", $"id",
-        $"id" + 1000000L as "height"), name, "account", 8,
-        Seq("account", "id"))
       val newLoc = BucketedMirror.compact(spark, name)
       assert(newLoc.endsWith("_gen1"))
+      assert(!new java.io.File(new java.net.URI(newLoc).getPath,
+        "_applied_batches").exists())
       val t = BucketedMirror.table(spark, name)
-      assert(t.count() == 2000 + 200)
+      assert(t.count() == 2000)
       val p = t.groupBy("account").count().queryExecution.executedPlan.toString
       assert(!p.contains("Exchange"),
         s"bucketed groupBy must still elide the shuffle after compact:\n$p")

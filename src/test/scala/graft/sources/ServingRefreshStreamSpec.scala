@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import graft.SparkSpec
 
 /** End-to-end: a Structured Streaming ingest keeps a bucketed serving
-  * mirror fresh through `foreachBatch` + [[BucketedMirror.append]] —
+  * mirror fresh through `foreachBatch` + [[BucketedMirror.appendOnce]] —
   * the wiring a deployment uses so the reference's "indexer writes,
   * proxy reads" split holds with the mirror as the read side. Each
   * micro-batch appends one file generation per touched bucket; the
@@ -39,9 +39,9 @@ class ServingRefreshStreamSpec extends SparkSpec with BeforeAndAfterAll {
       .writeStream
       .option("checkpointLocation",
         new java.io.File(dir, "ckpt").getAbsolutePath)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        BucketedMirror.append(batch, "stream_serve_m", "account",
-          buckets = 8, sortCols = Seq("account", "summary"))
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        BucketedMirror.appendOnce(batch, "stream_serve_m", batchId)
+        ()
       }
       .start()
     try {

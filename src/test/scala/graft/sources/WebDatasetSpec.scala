@@ -285,7 +285,7 @@ class WebDatasetSpec extends SparkSpec {
     Files.write(Paths.get(outDir, "part-00000.tar"), bytes)
     val got = read(spark, outDir)
     assert(got.entries.count() == 1)
-    assert(new String(got.entries.select("payload").as[Array[Byte]].head) == "zero")
+    assert(new String(got.entries.select("payload").as[Array[Byte]].head()) == "zero")
     val rot = got.corrupt.collect()
     assert(rot.length == 1 && rot(0).getString(2).contains("checksum"))
   }

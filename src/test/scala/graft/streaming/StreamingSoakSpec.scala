@@ -60,10 +60,8 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     * idempotent) + replay-safe mirror appends (batchId idempotent). */
   private def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     TransactionalSink.writeBatch(batch, url, Dialect.Derby)
-    BucketedMirror.appendOnce(BlockIngest.ati(batch), AtiMirror, batchId,
-      "account", buckets = 8, sortCols = Seq("account", "summary"))
-    BucketedMirror.appendOnce(BlockIngest.summaries(batch), SumMirror, batchId,
-      "id", buckets = 8, sortCols = Seq("id"))
+    BucketedMirror.appendOnce(BlockIngest.ati(batch), AtiMirror, batchId)
+    BucketedMirror.appendOnce(BlockIngest.summaries(batch), SumMirror, batchId)
   }
 
   private def startPipeline(): StreamingQuery =
@@ -114,8 +112,7 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // (the restart above exercises whatever replay actually happened;
     // this pins the contract deterministically)
     val full = mkFeed(0 until 12)
-    assert(!BucketedMirror.appendOnce(BlockIngest.ati(full), AtiMirror, 0L,
-      "account", buckets = 8, sortCols = Seq("account", "summary")))
+    assert(!BucketedMirror.appendOnce(BlockIngest.ati(full), AtiMirror, 0L))
 
     spark.catalog.refreshTable(AtiMirror)
     spark.catalog.refreshTable(SumMirror)
@@ -199,10 +196,8 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       }
       def applyB(batch: DataFrame, batchId: Long): Unit = {
         TransactionalSink.writeBatch(batch, dbUrl, Dialect.Derby)
-        BucketedMirror.appendOnce(BlockIngest.ati(batch), atiM, batchId,
-          "account", buckets = 8, sortCols = sort)
-        BucketedMirror.appendOnce(BlockIngest.summaries(batch), sumM, batchId,
-          "id", buckets = 8, sortCols = Seq("id"))
+        BucketedMirror.appendOnce(BlockIngest.ati(batch), atiM, batchId)
+        BucketedMirror.appendOnce(BlockIngest.summaries(batch), sumM, batchId)
       }
       def start(): StreamingQuery = spark.readStream
         .schema(Schemas.blockFeed(org.apache.spark.sql.types.LongType))
@@ -239,7 +234,7 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         .map(_.getPath.getName.toLong).toSet
       assert(carried.contains(0L), s"marker for batch 0 not carried: $carried")
       assert(!BucketedMirror.appendOnce(BlockIngest.ati(mkFeed(0 until 2)),
-        atiM, 0L, "account", buckets = 8, sortCols = sort),
+        atiM, 0L),
         "batch 0 was re-applied across the compaction")
 
       // restart from the same checkpoint; drain the rest into gen1
@@ -307,8 +302,8 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // before the marker, the batch replays — one generation's rows are
     // duplicated in the mirror. The appendOnce scaladoc claims serving
     // reads tolerate this (ids are unique, the page probe dedups on
-    // id); simulate the window with two raw append() calls of the same
-    // delta and pin the claim.
+    // id); simulate the window by applying the same delta under two
+    // batch ids and pin the claim.
     import spark.implicits._
     val atiM = "soak_dup_ati_m"
     val sumM = "soak_dup_sum_m"
@@ -326,12 +321,10 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       val sumDelta = Seq((5L, "b3", 30L, 2L, "s5"))
         .toDF("id", "block", "timestamp", "height", "summary")
       // the replayed generation: same delta appended twice
-      BucketedMirror.append(delta, atiM, "account", 8,
-        Seq("account", "summary"))
-      BucketedMirror.append(delta, atiM, "account", 8,
-        Seq("account", "summary"))
-      BucketedMirror.append(sumDelta, sumM, "id", 8, Seq("id"))
-      BucketedMirror.append(sumDelta, sumM, "id", 8, Seq("id"))
+      Seq(0L, 1L).foreach { id =>
+        BucketedMirror.appendOnce(delta, atiM, id)
+        BucketedMirror.appendOnce(sumDelta, sumM, id)
+      }
 
       val page = QueryApi.accountPageServed(
         BucketedMirror.table(spark, atiM), BucketedMirror.table(spark, sumM),
