@@ -88,17 +88,26 @@ object BlockIngest {
     * Dedup is per-summary (`array_distinct`), mirroring the reference's
     * per-summary `seen` set (main.rs:826-856) — cheap, narrow, no
     * shuffle. */
-  def ati(feed: DataFrame): DataFrame =
-    withId(feed).select(
-      explode(distinctAccounts).as("account"),
-      col("id").as("summary"))
+  def ati(feed: DataFrame): DataFrame = atiPages(feed).select("account", "summary")
 
   /** `cti` fan-out (main.rs:331-352). */
-  def cti(feed: DataFrame): DataFrame =
-    withId(feed).select(
-      explode(distinctContracts).as("c"),
-      col("id").as("summary"))
-      .select(col("c.index").as("index"), col("c.subindex").as("subindex"), col("summary"))
+  def cti(feed: DataFrame): DataFrame = ctiPages(feed).select("index", "subindex", "summary")
+
+  /** `ati` with each summary's page columns beside the key (`block`,
+    * `timestamp`, `height`, the envelope as `body`): the row of the
+    * page-ordered serving mirror ([[graft.sources.ServingMirrors]]). One
+    * projection of the feed row — no join; a summary is stored once per
+    * affected account. */
+  def atiPages(feed: DataFrame): DataFrame =
+    withId(feed).select(explode(distinctAccounts).as("account") +: pageCols: _*)
+
+  /** `cti` with the page columns, as [[atiPages]]. */
+  def ctiPages(feed: DataFrame): DataFrame =
+    withId(feed).select(explode(distinctContracts).as("c") +: pageCols: _*)
+      .select("c.*", "summary", "block", "timestamp", "height", "body")
+
+  private def pageCols: Seq[Column] = Seq(col("id").as("summary"), col("block_hash").as("block"),
+    col("block_time_ms").as("timestamp"), col("height"), envelope.as("body"))
 
   /** Per-batch CIS-2 supply deltas: signed decimal-string amounts keyed by
     * `(index, subindex, token_id)`. `mint` adds, `burn` subtracts,

@@ -1,5 +1,7 @@
 package graft.query
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -59,87 +61,69 @@ object QueryApi {
     limit.fold(sorted)(sorted.limit)
   }
 
-  /** The account page's summary-id plan on the account-bucketed mirror
-    * ([[pageIds]]). `account` must be a LITERAL (any address type the
+  /** The account page plan on the account-bucketed page mirror
+    * ([[pagePlan]]). `account` must be a LITERAL (any address type the
     * mirror carries — long fixture or 32-byte binary). */
   def accountPageIds(atiMirror: DataFrame, account: Column, from: Long,
                      limit: Int, ascending: Boolean): DataFrame =
-    pageIds(atiMirror, accountKey(account), from, limit, ascending)
+    pagePlan(atiMirror, accountKey(account), from, limit, ascending)
 
-  /** The contract page's summary-id plan on the cti mirror, bucketed by
-    * the leading composite key `index` ([[pageIds]]). */
+  /** The contract page plan on the cti page mirror, bucketed by the
+    * leading composite key `index` ([[pagePlan]]). */
   def contractPageIds(ctiMirror: DataFrame, index: Long, subindex: Long,
                       from: Long, limit: Int, ascending: Boolean): DataFrame =
-    pageIds(ctiMirror, contractKey(index, subindex), from, limit, ascending)
+    pagePlan(ctiMirror, contractKey(index, subindex), from, limit, ascending)
 
-  /** The id probe: bucket pruning on the key's leading literal (only
-    * that key's bucket files are read) and top-`limit` by cursor order —
-    * orderBy+limit fuse to `TakeOrderedAndProject`, so the plan has ZERO
-    * Exchange. Public through the two entries above so ServingPageSpec
-    * can assert both properties on the exact plan the serving path
-    * executes. The key must compare against LITERALS: bucket pruning
-    * evaluates the predicate against the bucket hash at planning time,
-    * which a non-literal column reference defeats. */
-  private def pageIds(indexMirror: DataFrame, key: Column, from: Long,
-                      limit: Int, ascending: Boolean): DataFrame =
-    indexMirror.where(key && cursor(from, ascending))
+  /** The page plan over a PAGE-ORDERED mirror (index rows carrying their
+    * summary's page columns, [[graft.sources.ServingMirrors]]), in the
+    * reference row shape: bucket pruning on the key's leading literal
+    * (only that key's bucket file is read) and top-`limit` by cursor
+    * order — orderBy+limit fuse to `TakeOrderedAndProject`, so the plan
+    * has ZERO Exchange. Public through the two entries above so
+    * ServingPageSpec can pin both on the plan the serving path runs. The
+    * key must compare against LITERALS: bucket pruning evaluates the
+    * predicate against the bucket hash at planning time. */
+  private def pagePlan(pages: DataFrame, key: Column, from: Long,
+                       limit: Int, ascending: Boolean): DataFrame =
+    pages.where(key && cursor(from, ascending))
       .orderBy(order("summary", ascending)).limit(limit)
-      .select("summary")
+      .select(col("summary").as("id"), col("block"), col("timestamp"),
+        col("height"), col("body").as("summary"))
 
-  /** B1/B2 SERVING path over the bucketed mirrors ([[servedPage]]). */
+  /** B1/B2 SERVING path over the account page mirror ([[servedPage]]).
+    * `summariesMirror` is not read: the page mirror carries the page
+    * columns itself (the parameter stays for existing callers). */
   def accountPageServed(atiMirror: DataFrame, summariesMirror: DataFrame,
                         account: Column, from: Long, limit: Int,
                         ascending: Boolean): DataFrame =
-    servedPage(atiMirror, summariesMirror, accountKey(account), from, limit, ascending)
+    servedPage(accountPageIds(atiMirror, account, from, limit, ascending))
 
-  /** B3 SERVING path over the bucketed mirrors ([[servedPage]]). */
+  /** B3 SERVING path over the contract page mirror ([[servedPage]]);
+    * `summariesMirror` is not read, as in [[accountPageServed]]. */
   def contractPageServed(ctiMirror: DataFrame, summariesMirror: DataFrame,
                          index: Long, subindex: Long, from: Long, limit: Int,
                          ascending: Boolean): DataFrame =
-    servedPage(ctiMirror, summariesMirror, contractKey(index, subindex), from,
-      limit, ascending)
+    servedPage(contractPageIds(ctiMirror, index, subindex, from, limit, ascending))
 
   /** The SERVING page — the btree analog of the reference's `<0.5 s`
-    * page (postgres.rs:94-99, served by the m0001 btree): the index
-    * mirror is bucketed by the key ([[graft.sources.ServingMirrors]])
-    * and the summaries mirror by id, so
-    *  1. the key+cursor probe ([[pageIds]]) reads ONLY the key's bucket
-    *     files with the cursor pushed into the sorted row groups, and
-    *  2. the page's ≤`limit` summary ids become a LITERAL `id IN (…)`
-    *     predicate on the summaries scan — bucket-pruned AND row-group-
-    *     skipped (the mirror is id-sorted), the Spark spelling of the
-    *     reference's per-id pkey lookups.
-    * The id dedup guards against a REPLAYED mirror generation (the
-    * [[graft.sources.BucketedMirror.appendOnce]] crash window commits
-    * data files before the marker, so a replay can duplicate one
-    * batch's rows until compaction): duplicate rows are byte-identical,
-    * and because the mirror is BUCKETED by id the aggregation's
-    * required distribution is already satisfied by the scan — the
-    * dedup adds a HashAggregate but NO Exchange. The final limit fuses
-    * the output order into TakeOrderedAndProject (no Sort exchange).
+    * page (postgres.rs:94-99, one index-ordered read): one bucket-pruned
+    * scan of one file of the (key, summary)-sorted page mirror, the
+    * cursor pushed into its row groups — one Spark job, no shuffle.
     *
-    * EAGER, unlike the other builders here: calling it runs the id job
-    * now (two bounded jobs total, like the reference's two index reads).
-    * The driver-side id collect is bounded by the PAGE SIZE (≤ `limit`
-    * rows, like the nprobe centroid collect in
-    * [[graft.ext.Similarity.annIvfIndexedVec]]) — never by the data.
-    * The index side carries at most one row per (key, summary) and every
-    * summary id resolves (FK), so cutting the page BEFORE the lookup is
-    * exactly join-order-limit. ServingPageSpec pins both scans' pruning
-    * and zero-Exchange plans and equality with the scan page; the
-    * CORRECTNESS rows `b1s`/`b2s`/`b3s` pin it against DuckDB. For the
-    * unbounded iterate surface (B4) use the scan page — a full-page
-    * collect there would be data-sized. */
-  private def servedPage(indexMirror: DataFrame, summariesMirror: DataFrame,
-                         key: Column, from: Long, limit: Int,
-                         ascending: Boolean): DataFrame = {
-    val ids = pageIds(indexMirror, key, from, limit, ascending)
-      .collect().map(_.getLong(0)).toSeq
-    summariesMirror.where(col("id").isin(ids: _*))
-      .select(PageCols.map(col): _*)
-      .dropDuplicates("id")
-      .orderBy(order("id", ascending))
-      .limit(limit)
+    * EAGER, unlike the other builders here: calling it runs that job now
+    * and returns the ≤`limit` rows as a local DataFrame, so the caller's
+    * `collect` runs no second job. Repeated ids are dropped here, in the
+    * driver: a REPLAYED mirror generation (the
+    * [[graft.sources.BucketedMirror.appendOnce]] crash window) duplicates
+    * rows until compaction, so a page can come back shorter than `limit`
+    * but never shows a row twice. A dedup inside the plan would read the
+    * whole bucket or add a stage. ServingPageSpec pins the plan, the one
+    * job and equality with the scan page; the CORRECTNESS rows
+    * `b1s`/`b2s`/`b3s` pin it against DuckDB. For the unbounded iterate
+    * surface (B4) use the scan page. */
+  private def servedPage(plan: DataFrame): DataFrame = {
+    val rows = plan.collect().toSeq.distinctBy(_.getLong(0))
+    plan.sparkSession.createDataFrame(rows.asJava, plan.schema)
   }
 
   /** B5 — row decode: project fields out of the JSON envelope, SILENTLY

@@ -31,7 +31,10 @@ import org.apache.spark.sql.functions.col
   */
 object BucketedMirror {
 
-  /** Write/refresh `df` as an external bucketed table. `sortCols`
+  /** Write/refresh `df` as an external bucketed table, one file per
+    * non-empty bucket: rows are clustered by bucket first, as in
+    * [[compact]] (otherwise every writer task writes its own file per
+    * bucket, and a one-bucket read opens one file per task). `sortCols`
     * additionally sorts within each bucket file (serving queries that
     * scan one key's rows in id order read them sequentially). */
   def write(df: DataFrame, name: String, path: String, bucketCol: String,
@@ -40,7 +43,8 @@ object BucketedMirror {
     // saveAsTable(Overwrite) on an existing external table can leave
     // stale files at the path; drop-then-write is the idempotent form.
     df.sparkSession.sql(s"DROP TABLE IF EXISTS $name")
-    save(df.write.mode(SaveMode.Overwrite).option("path", path),
+    save(df.repartition(buckets, col(bucketCol)).write.mode(SaveMode.Overwrite)
+      .option("path", path),
       BucketSpec(buckets, Seq(bucketCol), sortCols), name)
   }
 
@@ -87,13 +91,12 @@ object BucketedMirror {
     * Honest bound: the marker commits AFTER the data files, so a crash
     * BETWEEN the two replays one batch's rows into the mirror — the
     * same at-least-once tail every non-transactional file sink has.
-    * The serving reads tolerate it (the page lookup dedups on the
-    * unique id — exchange-free on the id-bucketed mirror — so a
-    * duplicated generation can shorten a page below `limit` but never
-    * surfaces a row twice; StreamingSoakSpec pins this), and the
-    * periodic compaction squashes it; a deployment needing exact files
-    * would anti-join the delta on the unique id instead, at the cost of
-    * a mirror scan per batch. The DB sink beside this call needs no
+    * The serving reads tolerate it (the served page drops repeated ids
+    * in the driver, so a duplicated generation can shorten a page below
+    * `limit` but never surfaces a row twice; StreamingSoakSpec pins
+    * this), and the periodic compaction squashes it; a deployment
+    * needing exact files would anti-join the delta on the unique id
+    * instead, at the cost of a mirror scan per batch. The DB sink beside this call needs no
     * marker: its conditional inserts
     * ([[graft.streaming.TransactionalSink]]) are row-idempotent.
     *

@@ -171,15 +171,19 @@ object TransactionalSink extends Serializable {
     rows.foreach { r =>
       if (!r.isNullAt(r.fieldIndex("key_bindings"))) latest(r.getAs[Long]("address")) = r
     }
+    // Deletes before inserts is safe: a delete only drops older snapshots.
     latest.foreach { case (addr, r) =>
       val id = r.getAs[Long]("id")
-      items[Row](r, "key_bindings").foreach { b =>
+      val bs = items[Row](r, "key_bindings")
+      if (bs.nonEmpty) bind(st.delBindings, addr, id).addBatch()
+      bs.foreach { b =>
         val (cred, key) = (b.getAs[Int]("credential_index"), b.getAs[Int]("key_index"))
-        bind(st.delBindings, addr, id).executeUpdate()
         bind(st.insBinding, addr, id, cred, key, b.getAs[String]("public_key"),
-          b.getAs[Boolean]("is_simple_account"), addr, id, addr, id, cred, key).executeUpdate()
+          b.getAs[Boolean]("is_simple_account"), addr, id, addr, id, cred, key).addBatch()
       }
     }
+    st.delBindings.executeBatch()
+    st.insBinding.executeBatch()
   }
 
   /** Binds `values` to the statement's parameters, in order. */

@@ -1,5 +1,7 @@
 package graft.query
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -10,12 +12,12 @@ import graft.sources.ServingMirrors
   * [[QueryApi.contractPageServed]] make —
   * the plan properties that make it the btree analog of the reference's
   * <0.5 s account page (postgres.rs:94-99):
-  *  (a) the id probe reads ONLY the key's bucket of the index mirror
+  *  (a) the page plan reads ONLY the key's bucket of the page mirror
   *      (`SelectedBucketsCount: 1 out of N` — bucket pruning on the
   *      key literal) and plans zero Exchange (TakeOrderedAndProject,
   *      not a sorted shuffle);
-  *  (b) the summaries lookup is bucket-pruned by the literal `id IN (…)`
-  *      page and also plans zero Exchange;
+  *  (b) a served page, from the served call through its collect, runs
+  *      exactly one Spark job;
   *  (c) the served page equals the scan path row-for-row for both keys
   *      (account and contract) at the first page, the last page and a
   *      mid-history keyset cursor both ways (the CORRECTNESS rows
@@ -48,20 +50,7 @@ class ServingPageSpec extends SparkSpec {
     assert(p.contains("SelectedBucketsCount: 1 out of 16"),
       s"account literal must prune to one bucket:\n$p")
     assert(!p.contains("Exchange"),
-      s"id probe must not shuffle (TakeOrderedAndProject):\n$p")
-    assert(p.contains("TakeOrderedAndProject"),
-      s"expected limit+sort fusion in:\n$p")
-  }
-
-  test("summaries lookup: bucket-pruned id IN page, zero Exchange") {
-    val (atiM, sumM) = mirrors
-    val p = bucketVisiblePlan(
-      QueryApi.accountPageServed(atiM, sumM, account, 0L, 50,
-        ascending = true))
-    assert(p.contains("SelectedBucketsCount"),
-      s"id IN (…) page must engage bucket pruning on the id mirror:\n$p")
-    assert(!p.contains("Exchange"),
-      s"summaries lookup must not shuffle:\n$p")
+      s"page plan must not shuffle (TakeOrderedAndProject):\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       s"expected limit+sort fusion in:\n$p")
   }
@@ -73,17 +62,43 @@ class ServingPageSpec extends SparkSpec {
     assert(p.contains("SelectedBucketsCount: 1 out of 16"),
       s"index literal must prune to one bucket:\n$p")
     assert(!p.contains("Exchange") && p.contains("TakeOrderedAndProject"),
-      s"contract id probe must be a shuffle-free top-k:\n$p")
+      s"contract page plan must be a shuffle-free top-k:\n$p")
   }
 
-  test("contract lookup: bucket-pruned id IN page, zero Exchange") {
+  /** Spark jobs started from the served call `page` through its
+    * collect: a listener counts the job starts of one job group, read
+    * after the listener bus has delivered every event. */
+  private def servedJobs(page: => DataFrame): Int = {
+    val sc = spark.sparkContext
+    val group = s"served-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "served page")
+    try {
+      page.collect()
+      ListenerBusDrain(sc)
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("served account page runs one Spark job") {
+    val (atiM, sumM) = mirrors
+    assert(servedJobs(QueryApi.accountPageServed(atiM, sumM, account, 0L, 50,
+      ascending = true)) == 1)
+  }
+
+  test("served contract page runs one Spark job") {
     val (ctiM, sumM) = ServingMirrors.ctiSummaries(spark, sf)
-    val p = bucketVisiblePlan(
-      QueryApi.contractPageServed(ctiM, sumM, 7L, 1L, 0L, 50, ascending = true))
-    assert(p.contains("SelectedBucketsCount"),
-      s"id IN (…) page must engage bucket pruning on the id mirror:\n$p")
-    assert(!p.contains("Exchange") && p.contains("TakeOrderedAndProject"),
-      s"contract summaries lookup must be a shuffle-free top-k:\n$p")
+    assert(servedJobs(QueryApi.contractPageServed(ctiM, sumM, 7L, 1L, 0L, 50,
+      ascending = true)) == 1)
   }
 
   /** A served-vs-scan case: the key's own summary ids, and its served and

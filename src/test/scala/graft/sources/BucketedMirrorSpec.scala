@@ -46,6 +46,16 @@ class BucketedMirrorSpec extends SparkSpec with BeforeAndAfterAll {
     assert(raw == viaCatalog)
   }
 
+  test("write lands at most one file per bucket") {
+    // the fixture frame spans the 4-core session's partitions; without
+    // clustering by bucket each writer task would write its own file
+    // per bucket (up to 4 × 8)
+    assert(ati.rdd.getNumPartitions > 1)
+    val files = new java.io.File(path("ati_b")).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files <= 8, s"expected one file per bucket, got $files")
+  }
+
   test("aggregation on the bucket key plans with no shuffle") {
     val agg = BucketedMirror.table(spark, "ati_b")
       .groupBy("account").agg(count("*").as("n"), max("id").as("last_id"))

@@ -17,8 +17,9 @@ import graft.sources.BucketedMirror
   * transactional DB sink AND the bucketed serving mirrors in the same
   * `foreachBatch` (the deployment shape: "indexer writes, proxy reads"
   * with the mirror as the read side), across many micro-batches with a
-  * MID-STREAM stop/restart. After recovery the SERVED page — bucket-
-  * pruned mirror probe, id-set lookup — must equal the pure batch
+  * MID-STREAM stop/restart. After recovery the SERVED page — one
+  * bucket-pruned scan of the page mirror
+  * ([[BlockIngest.atiPages]] deltas) — must equal the pure batch
   * derivation over the full feed, and a re-delivered batch must be a
   * mirror no-op ([[BucketedMirror.appendOnce]]).
   */
@@ -29,12 +30,10 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private val feedDir = s"$root/feed"
   private val ckpt = s"$root/ckpt"
   private val url = s"jdbc:derby:$root/db;create=true"
-  private val AtiMirror = "soak_ati_m"
-  private val SumMirror = "soak_sum_m"
+  private val PageMirror = "soak_pages_m"
 
   override def afterAll(): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $AtiMirror")
-    spark.sql(s"DROP TABLE IF EXISTS $SumMirror")
+    spark.sql(s"DROP TABLE IF EXISTS $PageMirror")
     super.afterAll()
   }
 
@@ -56,12 +55,38 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       Schemas.blockFeed(org.apache.spark.sql.types.LongType))
   }
 
+  /** An empty page mirror (schema + bucket spec) at `path`. */
+  private def writeEmptyPages(name: String, path: String): Unit =
+    BucketedMirror.write(BlockIngest.atiPages(mkFeed(0 until 0)), name, path,
+      "account", buckets = 8, sortCols = Seq("account", "summary"))
+
+  /** A page mirror's rows, sorted (a multiset). */
+  private def pageRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
+
+  /** The batch answer for account 1's first page, over the ingest
+    * transforms of the full feed. Fresh frames per side: both deriving
+    * from one frame would be an ambiguous self-join on shared lineage. */
+  private def batchAnswer: Seq[(Long, String)] =
+    QueryApi.accountTransactions(
+      BlockIngest.ati(mkFeed(0 until 12)),
+      BlockIngest.summaries(mkFeed(0 until 12)),
+      lit(1L), from = 0L, limit = Some(100), ascending = true)
+      .collect().map(r => (r.getLong(0), r.getString(4))).toSeq
+
+  /** Account 1's first served page over the page mirror `name`. */
+  private def servedPage(name: String): Seq[(Long, String)] = {
+    val m = BucketedMirror.table(spark, name)
+    QueryApi.accountPageServed(m, m, lit(1L), from = 0L, limit = 100,
+      ascending = true)
+      .collect().map(r => (r.getLong(0), r.getString(4))).toSeq
+  }
+
   /** The composed foreachBatch body: conditional-insert DB writes (row
     * idempotent) + replay-safe mirror appends (batchId idempotent). */
   private def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     TransactionalSink.writeBatch(batch, url, Dialect.Derby)
-    BucketedMirror.appendOnce(BlockIngest.ati(batch), AtiMirror, batchId)
-    BucketedMirror.appendOnce(BlockIngest.summaries(batch), SumMirror, batchId)
+    BucketedMirror.appendOnce(BlockIngest.atiPages(batch), PageMirror, batchId)
   }
 
   private def startPipeline(): StreamingQuery =
@@ -77,15 +102,7 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("composed pipeline survives a mid-stream restart; served page equals batch") {
     Migrations.migrate(url, Dialect.Derby)
-    import spark.implicits._
-    // seed both mirrors empty (schema + bucket spec)
-    BucketedMirror.write(Seq.empty[(Long, Long)].toDF("account", "summary"),
-      AtiMirror, s"$root/ati_m", "account", buckets = 8,
-      sortCols = Seq("account", "summary"))
-    BucketedMirror.write(
-      Seq.empty[(Long, String, Long, Long, String)]
-        .toDF("id", "block", "timestamp", "height", "summary"),
-      SumMirror, s"$root/sum_m", "id", buckets = 8, sortCols = Seq("id"))
+    writeEmptyPages(PageMirror, s"$root/pages_m")
 
     // 6 feed files -> 6 micro-batches at maxFilesPerTrigger=1
     (0 until 6).foreach { i =>
@@ -112,37 +129,19 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // (the restart above exercises whatever replay actually happened;
     // this pins the contract deterministically)
     val full = mkFeed(0 until 12)
-    assert(!BucketedMirror.appendOnce(BlockIngest.ati(full), AtiMirror, 0L))
+    assert(!BucketedMirror.appendOnce(BlockIngest.atiPages(full), PageMirror, 0L))
 
-    spark.catalog.refreshTable(AtiMirror)
-    spark.catalog.refreshTable(SumMirror)
+    spark.catalog.refreshTable(PageMirror)
 
-    // mirrors hold exactly the batch derivation (set equality: the only
-    // legal divergence is a replayed file generation, which duplicates
-    // rows but never invents or loses them)
-    val atiMirror = BucketedMirror.table(spark, AtiMirror)
-    val sumMirror = BucketedMirror.table(spark, SumMirror)
-    val expAti = BlockIngest.ati(full).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(atiMirror.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      == expAti)
-    val expSum = BlockIngest.summaries(full).collect()
-      .map(r => (r.getLong(0), r.getString(4))).toSet
-    assert(sumMirror.select("id", "summary").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet == expSum)
+    // the mirror holds exactly the batch derivation (set equality: the
+    // only legal divergence is a replayed file generation, which
+    // duplicates rows but never invents or loses them)
+    assert(pageRows(BucketedMirror.table(spark, PageMirror)).toSet ==
+      pageRows(BlockIngest.atiPages(full)).toSet)
 
-    // the SERVED page over the streamed mirrors == the batch answer
+    // the SERVED page over the streamed mirror == the batch answer
     // over the ingest transforms (account 1 is touched by most blocks)
-    val served = QueryApi.accountPageServed(atiMirror, sumMirror,
-      lit(1L), from = 0L, limit = 100, ascending = true)
-      .collect().map(r => (r.getLong(0), r.getString(4))).toSeq
-    // fresh frames per side: both deriving from `full` would be an
-    // ambiguous self-join on the shared lineage
-    val batchAnswer = QueryApi.accountTransactions(
-      BlockIngest.ati(mkFeed(0 until 12)),
-      BlockIngest.summaries(mkFeed(0 until 12)),
-      lit(1L), from = 0L, limit = Some(100), ascending = true)
-      .collect().map(r => (r.getLong(0), r.getString(4))).toSeq
+    val served = servedPage(PageMirror)
     assert(served.nonEmpty && served == batchAnswer)
 
     // and the DB side of the same foreachBatch stayed exact
@@ -159,7 +158,7 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val saved = spark.conf.get(k)
     spark.conf.set(k, "false")
     try {
-      val p = QueryApi.accountPageIds(BucketedMirror.table(spark, AtiMirror),
+      val p = QueryApi.accountPageIds(BucketedMirror.table(spark, PageMirror),
         lit(1L), from = 0L, limit = 100, ascending = true)
         .queryExecution.executedPlan.toString
       assert(p.contains("SelectedBucketsCount: 1 out of 8"),
@@ -170,34 +169,25 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   test("online compaction mid-flight: markers carried, replay no-op, page and pruning survive") {
     // the 24/7-serving gap: compaction must NOT require stopping the
     // ingest stream. Here the stream is stopped mid-flight (checkpoint
-    // still holds undrained feed files), both mirrors are compacted,
+    // still holds undrained feed files), the page mirror is compacted,
     // and the restart drains the remainder ACROSS the compacted
     // generation. The carried markers make any replayed batch a no-op;
     // a raw write()-compaction here would wipe them and re-apply.
     import org.apache.hadoop.fs.Path
-    import spark.implicits._
-    val atiM = "soak_c_ati_m"
-    val sumM = "soak_c_sum_m"
+    val pagesM = "soak_c_pages_m"
     val feed = s"$root/feed_c"
     val ck = s"$root/ckpt_c"
     val dbUrl = s"jdbc:derby:$root/db_c;create=true"
-    val sort = Seq("account", "summary")
     try {
       Migrations.migrate(dbUrl, Dialect.Derby)
-      BucketedMirror.write(Seq.empty[(Long, Long)].toDF("account", "summary"),
-        atiM, s"$root/c_ati_m", "account", buckets = 8, sortCols = sort)
-      BucketedMirror.write(
-        Seq.empty[(Long, String, Long, Long, String)]
-          .toDF("id", "block", "timestamp", "height", "summary"),
-        sumM, s"$root/c_sum_m", "id", buckets = 8, sortCols = Seq("id"))
+      writeEmptyPages(pagesM, s"$root/c_pages_m")
       (0 until 6).foreach { i =>
         mkFeed(i * 2 until (i + 1) * 2).coalesce(1)
           .write.mode(SaveMode.Append).parquet(feed)
       }
       def applyB(batch: DataFrame, batchId: Long): Unit = {
         TransactionalSink.writeBatch(batch, dbUrl, Dialect.Derby)
-        BucketedMirror.appendOnce(BlockIngest.ati(batch), atiM, batchId)
-        BucketedMirror.appendOnce(BlockIngest.summaries(batch), sumM, batchId)
+        BucketedMirror.appendOnce(BlockIngest.atiPages(batch), pagesM, batchId)
       }
       def start(): StreamingQuery = spark.readStream
         .schema(Schemas.blockFeed(org.apache.spark.sql.types.LongType))
@@ -217,10 +207,9 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       q1.awaitTermination(120000)
 
       // MID-FLIGHT: undrained feed files remain behind the checkpoint;
-      // compact both mirrors now, while the stream is between runs
-      val atiLoc = BucketedMirror.compact(spark, atiM)
-      val sumLoc = BucketedMirror.compact(spark, sumM)
-      assert(atiLoc.endsWith("_gen1") && sumLoc.endsWith("_gen1"))
+      // compact the mirror now, while the stream is between runs
+      val atiLoc = BucketedMirror.compact(spark, pagesM)
+      assert(atiLoc.endsWith("_gen1"))
       val fs = new Path(atiLoc)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // one rewrite generation: at most one data file per bucket
@@ -233,8 +222,8 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       val carried = fs.listStatus(new Path(atiLoc, "_applied_batches"))
         .map(_.getPath.getName.toLong).toSet
       assert(carried.contains(0L), s"marker for batch 0 not carried: $carried")
-      assert(!BucketedMirror.appendOnce(BlockIngest.ati(mkFeed(0 until 2)),
-        atiM, 0L),
+      assert(!BucketedMirror.appendOnce(BlockIngest.atiPages(mkFeed(0 until 2)),
+        pagesM, 0L),
         "batch 0 was re-applied across the compaction")
 
       // restart from the same checkpoint; drain the rest into gen1
@@ -244,24 +233,13 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
       // (b) MULTISET equality with the batch derivation — a re-applied
       // batch would show up as duplicated rows that set equality hides
-      val full = mkFeed(0 until 12)
-      spark.catalog.refreshTable(atiM)
-      spark.catalog.refreshTable(sumM)
-      val gotAti = BucketedMirror.table(spark, atiM).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      val expAti = BlockIngest.ati(full).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      assert(gotAti == expAti)
-      val gotSum = BucketedMirror.table(spark, sumM)
-        .select("id", "summary").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
-      val expSum = BlockIngest.summaries(full).collect()
-        .map(r => (r.getLong(0), r.getString(4))).toSeq.sorted
-      assert(gotSum == expSum)
+      spark.catalog.refreshTable(pagesM)
+      assert(pageRows(BucketedMirror.table(spark, pagesM)) ==
+        pageRows(BlockIngest.atiPages(mkFeed(0 until 12))))
 
       // compact AGAIN on the live-appended state (gen1 -> gen2): the
       // generational rename must iterate, not nest
-      val atiLoc2 = BucketedMirror.compact(spark, atiM)
+      val atiLoc2 = BucketedMirror.compact(spark, pagesM)
       assert(atiLoc2.endsWith("_gen2") && !atiLoc2.contains("_gen1"))
       val gen2Files = fs.listStatus(new Path(atiLoc2))
         .map(_.getPath.getName).filter(_.endsWith(".parquet"))
@@ -269,15 +247,7 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         s"compaction must land one file per bucket; got:\n${gen2Files.sorted.mkString("\n")}")
 
       // served page over the twice-compacted mirror == the batch answer
-      val served = QueryApi.accountPageServed(
-        BucketedMirror.table(spark, atiM), BucketedMirror.table(spark, sumM),
-        lit(1L), from = 0L, limit = 100, ascending = true)
-        .collect().map(r => (r.getLong(0), r.getString(4))).toSeq
-      val batchAnswer = QueryApi.accountTransactions(
-        BlockIngest.ati(mkFeed(0 until 12)),
-        BlockIngest.summaries(mkFeed(0 until 12)),
-        lit(1L), from = 0L, limit = Some(100), ascending = true)
-        .collect().map(r => (r.getLong(0), r.getString(4))).toSeq
+      val served = servedPage(pagesM)
       assert(served.nonEmpty && served == batchAnswer)
 
       // (c) bucket pruning survives the relocated generations
@@ -285,56 +255,41 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       val saved = spark.conf.get(k)
       spark.conf.set(k, "false")
       try {
-        val p = QueryApi.accountPageIds(BucketedMirror.table(spark, atiM),
+        val p = QueryApi.accountPageIds(BucketedMirror.table(spark, pagesM),
           lit(1L), from = 0L, limit = 100, ascending = true)
           .queryExecution.executedPlan.toString
         assert(p.contains("SelectedBucketsCount: 1 out of 8"),
           s"served probe must still read one bucket after compaction:\n$p")
       } finally spark.conf.set(k, saved)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $atiM")
-      spark.sql(s"DROP TABLE IF EXISTS $sumM")
-    }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $pagesM")
   }
 
   test("served page tolerates a replayed generation (the marker crash window)") {
     // appendOnce's residual window: data files commit, the crash lands
     // before the marker, the batch replays — one generation's rows are
     // duplicated in the mirror. The appendOnce scaladoc claims serving
-    // reads tolerate this (ids are unique, the page probe dedups on
-    // id); simulate the window by applying the same delta under two
-    // batch ids and pin the claim.
+    // reads tolerate this (ids are unique, the served page drops
+    // repeated ids); simulate the window by applying the same delta
+    // under two batch ids and pin the claim.
     import spark.implicits._
-    val atiM = "soak_dup_ati_m"
-    val sumM = "soak_dup_sum_m"
+    val pagesM = "soak_dup_pages_m"
+    val cols = Seq("account", "summary", "block", "timestamp", "height", "body")
     try {
-      BucketedMirror.write(Seq((7L, 1L), (7L, 3L), (8L, 2L))
-        .toDF("account", "summary"),
-        atiM, s"$root/dup_ati_m", "account", buckets = 8,
+      BucketedMirror.write(Seq((7L, 1L, "b1", 10L, 0L, "s1"),
+          (7L, 3L, "b2", 20L, 1L, "s3"), (8L, 2L, "b1", 10L, 0L, "s2"))
+        .toDF(cols: _*),
+        pagesM, s"$root/dup_pages_m", "account", buckets = 8,
         sortCols = Seq("account", "summary"))
-      BucketedMirror.write(
-        Seq((1L, "b1", 10L, 0L, "s1"), (2L, "b1", 10L, 0L, "s2"),
-          (3L, "b2", 20L, 1L, "s3"))
-          .toDF("id", "block", "timestamp", "height", "summary"),
-        sumM, s"$root/dup_sum_m", "id", buckets = 8, sortCols = Seq("id"))
-      val delta = Seq((7L, 5L)).toDF("account", "summary")
-      val sumDelta = Seq((5L, "b3", 30L, 2L, "s5"))
-        .toDF("id", "block", "timestamp", "height", "summary")
+      val delta = Seq((7L, 5L, "b3", 30L, 2L, "s5")).toDF(cols: _*)
       // the replayed generation: same delta appended twice
-      Seq(0L, 1L).foreach { id =>
-        BucketedMirror.appendOnce(delta, atiM, id)
-        BucketedMirror.appendOnce(sumDelta, sumM, id)
-      }
+      Seq(0L, 1L).foreach(id => BucketedMirror.appendOnce(delta, pagesM, id))
 
-      val page = QueryApi.accountPageServed(
-        BucketedMirror.table(spark, atiM), BucketedMirror.table(spark, sumM),
+      val m = BucketedMirror.table(spark, pagesM)
+      val page = QueryApi.accountPageServed(m, m,
         lit(7L), from = 0L, limit = 100, ascending = true)
         .collect().map(r => (r.getLong(0), r.getString(4))).toSeq
       assert(page == Seq((1L, "s1"), (3L, "s3"), (5L, "s5")),
         s"duplicated generation leaked into the served page: $page")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $atiM")
-      spark.sql(s"DROP TABLE IF EXISTS $sumM")
-    }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $pagesM")
   }
 }
