@@ -844,9 +844,7 @@ object Dedup {
   def appendLshIndex(batch: DataFrame, content: Column, id: Column,
                      path: String, batchId: Long): Boolean = {
     val spark = batch.sparkSession
-    graft.sources.StoreCompaction.assertNotCompacting(spark, path)
-    if (graft.sources.StoreCompaction.isApplied(spark, path, batchId)) false
-    else {
+    graft.sources.StoreCompaction.appendOnce(spark, path, batchId) {
       val meta = spark.read.parquet(s"$path/meta").head()
       // local persist, not CacheScope: the write below materializes
       // inside this call (appendCellIndex's reasoning)
@@ -864,8 +862,6 @@ object Dedup {
         .sortWithinPartitions("band", "bucket", "doc_id")
         .write.mode("append").partitionBy("pb").parquet(s"$path/buckets")
       bb.unpersist(blocking = false)
-      graft.sources.StoreCompaction.commitMarker(spark, path, batchId)
-      true
     }
   }
 
@@ -882,8 +878,8 @@ object Dedup {
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Int =
     graft.sources.StoreCompaction.swapCompact(spark, path, "buckets") {
-      (df, out) =>
-        df.repartition(col("pb"))
+      (live, out) =>
+        spark.read.parquet(live).repartition(col("pb"))
           .sortWithinPartitions("band", "bucket", "doc_id")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("pb").parquet(out)

@@ -294,22 +294,18 @@ object Similarity {
     * empty bootstrap history and silently re-append stored ids. */
   def appendCodes(codes0: DataFrame, path: String, batchId: Long): Boolean = {
     val spark = codes0.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.StoreCompaction.assertNotCompacting(spark, path)
-    if (graft.sources.StoreCompaction.isApplied(spark, path, batchId)) false
-    else {
+    graft.sources.StoreCompaction.appendOnce(spark, path, batchId) {
+      val live = new org.apache.hadoop.fs.Path(path, "codes")
       val codes = codes0
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val novel =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(root, "codes"))) codes
+        if (!live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .exists(live)) codes
         else codes.join(
           spark.read.parquet(s"$path/codes").select("vec_id"),
           Seq("vec_id"), "left_anti")
       novel.write.mode("append").parquet(s"$path/codes")
       codes.unpersist()
-      graft.sources.StoreCompaction.commitMarker(spark, path, batchId)
-      true
     }
   }
 
@@ -330,8 +326,8 @@ object Similarity {
   def compactCodes(spark: org.apache.spark.sql.SparkSession, path: String,
                    files: Int = 1): Int =
     graft.sources.StoreCompaction.swapCompact(spark, path, "codes") {
-      (df, out) =>
-        df.repartition(files).write
+      (live, out) =>
+        spark.read.parquet(live).repartition(files).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
     }
 
@@ -345,8 +341,8 @@ object Similarity {
   def compactCellIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String): Int =
     graft.sources.StoreCompaction.swapCompact(spark, path, "cells") {
-      (df, out) =>
-        df.repartition(col("cid"))
+      (live, out) =>
+        spark.read.parquet(live).repartition(col("cid"))
           .sortWithinPartitions("vid")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("cid").parquet(out)
@@ -1387,9 +1383,7 @@ object Similarity {
   def appendCellIndex(embeddings: DataFrame, idCol: String, embCol: String,
                       path: String, batchId: Long): Boolean = {
     val spark = embeddings.sparkSession
-    graft.sources.StoreCompaction.assertNotCompacting(spark, path)
-    if (graft.sources.StoreCompaction.isApplied(spark, path, batchId)) false
-    else {
+    graft.sources.StoreCompaction.appendOnce(spark, path, batchId) {
       val qz = embeddings.select(col(idCol).as("vid"),
           quantize(col(embCol)).as("qe"))
         .withColumn("n2", dotQ(col("qe"), col("qe")))
@@ -1424,8 +1418,6 @@ object Similarity {
         .sortWithinPartitions("vid")
         .write.mode("append").partitionBy("cid").parquet(s"$path/cells")
       assigned.unpersist(blocking = false)
-      graft.sources.StoreCompaction.commitMarker(spark, path, batchId)
-      true
     }
   }
 

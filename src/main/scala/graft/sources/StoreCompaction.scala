@@ -3,75 +3,57 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** ONLINE compaction for the path-based append-only index stores
-  * ([[graft.ext.Similarity.appendCodes]]'s code history,
-  * [[graft.ext.Similarity.appendCellIndex]]'s IVF cells,
-  * [[graft.ext.Dedup.appendLshIndex]]'s LSH buckets) — the
-  * [[BucketedMirror.compact]] contract re-expressed for stores whose
-  * readers resolve a LITERAL path instead of a catalog table.
+/** The ONE replay and compaction protocol of the four append-only
+  * stores: the bucketed serving mirrors ([[BucketedMirror]]) and the
+  * three path-based index stores ([[graft.ext.Similarity.appendCodes]]'s
+  * code history, [[graft.ext.Similarity.appendCellIndex]]'s IVF cells,
+  * [[graft.ext.Dedup.appendLshIndex]]'s LSH buckets). A store is a ROOT
+  * directory holding one data subdirectory and, beside it, the
+  * `_applied_batches` replay ledger and, while a compaction runs, the
+  * [[CompactingSentinel]]. Every append goes through [[appendOnce]].
   *
-  * Why it exists: each `foreachBatch` append lands one parquet
-  * generation per micro-batch (per partition dir, for the
-  * hive-partitioned stores). A 24/7 deployment's probe degrades to
-  * thousands of small files — the btree page-split analog the mirror
-  * compactor solved in round 10; this closes the same hole for the
-  * three index stores (VERDICT r16 #4).
+  * Why compaction exists: each `foreachBatch` append lands one parquet
+  * generation per micro-batch (per bucket or partition dir), so a 24/7
+  * deployment's probe degrades to thousands of small files — the btree
+  * page-split analog. The swap never touches the ledger, so a batch
+  * replayed across it finds its marker where it was and no-ops. The
+  * ledger is compacted too (one file per micro-batch is ~3M files a
+  * year at 10 s batches): after a successful swap the contiguous
+  * batch-id prefix rolls up into one VALUE-NAMED `_watermark_<w>` file
+  * and the folded markers are deleted; the replay check is
+  * `batchId <= watermark || exists(marker)` ([[isApplied]]). The value
+  * lives in the FILE NAME, read = max over the present `_watermark_*`
+  * files, and a roll-up creates the new name BEFORE deleting the old
+  * one, so no crash point leaves the applied set unreadable.
   *
-  * The replay contract differs from the mirror's in one happy way: the
-  * `_applied_batches` markers live under the store ROOT, a SIBLING of
-  * the data subdir, so the swap never touches them — a batch replayed
-  * across the compaction finds its marker exactly where it was and
-  * no-ops without any marker-carrying step. The marker LEDGER itself is
-  * compacted here too: one file per micro-batch forever is ~3M files a
-  * year at 10 s batches — small-file pressure on exactly the
-  * maintenance path built for 24/7 deployments — so after a successful
-  * swap the contiguous batch-id prefix rolls up into a single
-  * VALUE-NAMED `_watermark_<w>` file and the folded per-batch files are
-  * deleted; the replay check everywhere is `batchId <= watermark ||
-  * exists(marker)` ([[isApplied]]). The watermark's value lives in the
-  * FILE NAME, read = max over the present `_watermark_*` files, and a
-  * roll-up creates the new name BEFORE deleting the superseded one —
-  * so there is no intermediate state (including a crash at any point
-  * of the roll-up) in which the applied set is unreadable: either the
-  * old watermark is still present, or the new one already is, or both
-  * are and max resolves them (VERDICT r18 closed the delete-then-rename
-  * window of the earlier single-file form, which could crash into a
-  * no-watermark state with the folded markers already gone).
+  * The RACE guard: an append landing DURING the rewrite would put its
+  * rows into the old generation and the swap would silently drop them.
+  * So [[swapCompact]]:
   *
-  * What remains is the RACE guard: an append landing DURING the rewrite
-  * would put its rows into the old generation (and its marker into the
-  * shared set) and the swap would silently drop them. So, mirroring the
-  * mirror:
+  *  1. raises the sentinel — [[appendOnce]] refuses loudly while it
+  *     exists, so an append STARTING inside the window fails at its
+  *     first filesystem touch;
+  *  2. snapshots the marker set BEFORE any data is read;
+  *  3. has the caller rewrite the live directory, LAYOUT-PRESERVED
+  *     (bucketing, partitioning and sorting re-stated, so pruning and
+  *     footer skipping survive), into a fresh `<sub>_compacting`
+  *     directory — the store stays readable throughout;
+  *  4. re-lists the markers and ABORTS if an append ALREADY IN FLIGHT
+  *     at sentinel-raise time landed during the rewrite;
+  *  5. swaps via two renames (live → `<sub>_old`, new → live),
+  *     re-checks the markers before the only destructive delete, rolls
+  *     up the ledger, and drops the sentinel.
   *
-  *  1. raise a `_compacting` SENTINEL at the store root — the append
-  *     paths refuse loudly while it exists ([[assertNotCompacting]]),
-  *     so an append STARTING inside the window is an error at its first
-  *     filesystem touch, not silent corruption (the r17 ADVICE hole:
-  *     an append racing the rename window used to read the absent live
-  *     dir as an empty bootstrap history and re-append stored ids);
-  *  2. snapshot the marker set BEFORE reading any data;
-  *  3. rewrite the current snapshot, LAYOUT-PRESERVED (the caller's
-  *     `rewrite` re-states the store's own partitioning/sorting, so
-  *     partition pruning and footer skipping survive verbatim), into a
-  *     fresh `<sub>_compacting` directory beside the live one — the
-  *     store stays readable throughout;
-  *  4. re-list the markers and ABORT (delete the new directory, throw)
-  *     if an append ALREADY IN FLIGHT at sentinel-raise time landed
-  *     during the rewrite;
-  *  5. swap via two renames (live → `<sub>_old`, new → live), re-check
-  *     the markers a third time before the only destructive delete,
-  *     roll up the marker ledger, and drop the sentinel.
-  *
-  * The rename pair is atomic per rename on HDFS/local but not jointly:
-  * a reader planning a scan exactly between them fails loudly
-  * (path-not-found), never silently reads half a store. Deployments
-  * call this from the same thread as the `foreachBatch` (between
-  * batches) — the mirror compactor's exact operating note — and defer
-  * old-generation deletion by a grace period if long-running
-  * concurrent readers exist. Object stores without atomic rename get
-  * the same guarantee only via their own rename semantics.
+  * The live path never changes, so a catalog table over it keeps its
+  * location and needs only a `refreshTable`. The renames are atomic
+  * one by one on HDFS/local but not jointly: a reader planning a scan
+  * between them fails loudly (path-not-found), never reads half a
+  * store. Deployments call this from the `foreachBatch` thread (between
+  * batches) and defer the old generation's deletion by a grace period
+  * if long-running readers exist; object stores without atomic rename
+  * get the guarantee only through their own rename semantics.
   */
 object StoreCompaction {
 
@@ -111,9 +93,19 @@ object StoreCompaction {
       fs.exists(new Path(markers, batchId.toString))
   }
 
+  /** The replay guard of every append path: refuse while a compaction
+    * holds the store, return false if `batchId` is already applied,
+    * else run `append` and commit the batch's marker after its data. */
+  def appendOnce(spark: SparkSession, root: String, batchId: Long)
+                (append: => Unit): Boolean = {
+    assertNotCompacting(spark, root)
+    if (isApplied(spark, root, batchId)) false
+    else { append; commitMarker(spark, root, batchId); true }
+  }
+
   /** Commit a batch's marker — AFTER its data files, so a crash between
-    * the two replays one batch (the appendOnce contract). */
-  def commitMarker(spark: SparkSession, root: String, batchId: Long): Unit = {
+    * the two replays one batch. */
+  private def commitMarker(spark: SparkSession, root: String, batchId: Long): Unit = {
     val rootP = new Path(root)
     val fs = hadoopFs(spark, rootP)
     val markers = new Path(rootP, MarkerDir)
@@ -123,7 +115,7 @@ object StoreCompaction {
 
   /** The per-batch marker names under `root` (watermark files excluded)
     * — the set a compaction snapshots and re-checks for racing appends. */
-  private[sources] def appliedMarkers(fs: FileSystem, root: Path): Set[String] = {
+  private def appliedMarkers(fs: FileSystem, root: Path): Set[String] = {
     val markers = new Path(root, MarkerDir)
     if (fs.exists(markers))
       fs.listStatus(markers).map(_.getPath.getName)
@@ -132,13 +124,12 @@ object StoreCompaction {
   }
 
   /** Refuse an append while a compaction holds the store (r17 ADVICE):
-    * without this, an append racing the rename window reads the absent
-    * live dir as an EMPTY bootstrap history and silently re-appends
-    * already-stored ids. Loud beats silent: the documented contract is
-    * single-writer, so any append seeing the sentinel is a contract
-    * violation — or a crashed compaction's debris, which the message
-    * names the fix for. */
-  def assertNotCompacting(spark: SparkSession, root: String): Unit = {
+    * an append racing the rename window would read the absent live dir
+    * as an EMPTY bootstrap history and silently re-append stored ids.
+    * The contract is single-writer, so a sentinel seen here is a
+    * contract violation or a crashed compaction's debris, which the
+    * message names the fix for. */
+  private def assertNotCompacting(spark: SparkSession, root: String): Unit = {
     val rootP = new Path(root)
     val sentinel = new Path(rootP, CompactingSentinel)
     if (hadoopFs(spark, rootP).exists(sentinel))
@@ -276,12 +267,12 @@ object StoreCompaction {
 
   /** Compact `path`/`sub` by `rewrite`, guarding against concurrent
     * appends via the `path`/_applied_batches marker set and the
-    * [[CompactingSentinel]]. `rewrite` receives the live snapshot frame
-    * and the target directory and must write the SAME rows in the
-    * store's own layout. Returns the number of data files after
-    * compaction. */
+    * [[CompactingSentinel]]. `rewrite` receives the live directory and
+    * the target directory, reads its own snapshot of the live one and
+    * must write the SAME rows there in the store's own layout. Returns
+    * the number of data files after compaction. */
   def swapCompact(spark: SparkSession, path: String, sub: String)
-                 (rewrite: (DataFrame, String) => Unit): Int = {
+                 (rewrite: (String, String) => Unit): Int = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(root, sub)
@@ -297,7 +288,7 @@ object StoreCompaction {
     val applied = listMarkers()
     val tmp = new Path(root, s"${sub}_compacting")
     fs.delete(tmp, true) // debris of an aborted prior attempt
-    try rewrite(spark.read.parquet(live.toString), tmp.toString)
+    try rewrite(live.toString, tmp.toString)
     catch {
       case t: Throwable =>
         fs.delete(tmp, true)

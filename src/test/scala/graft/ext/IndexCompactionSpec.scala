@@ -215,8 +215,8 @@ class IndexCompactionSpec extends SparkSpec {
     // reproduced directly: parquet append + marker file, exactly what
     // an append past its sentinel check does)
     val e = intercept[IllegalStateException] {
-      StoreCompaction.swapCompact(spark, root, "codes") { (df, out) =>
-        df.repartition(1).write
+      StoreCompaction.swapCompact(spark, root, "codes") { (live, out) =>
+        spark.read.parquet(live).repartition(1).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
         Similarity.binarize1Bit(
             Seq((3L, v(1, -1, -1, 1))).toDF("vec_id", "embedding"),
@@ -252,8 +252,8 @@ class IndexCompactionSpec extends SparkSpec {
     // bootstrap would read an EMPTY history and re-append stored ids —
     // now it throws at its first filesystem touch instead
     val e = intercept[IllegalStateException] {
-      StoreCompaction.swapCompact(spark, root, "codes") { (df, out) =>
-        df.repartition(1).write
+      StoreCompaction.swapCompact(spark, root, "codes") { (live, out) =>
+        spark.read.parquet(live).repartition(1).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
         Similarity.appendB1Codes(
           Seq((9L, v(1, -1, 1, -1))).toDF("vec_id", "embedding"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
@@ -41,7 +42,7 @@ class BucketedMirrorSpec extends SparkSpec with BeforeAndAfterAll {
       .as[(String, Long, Long)].collect().toSet
     assert(viaCatalog == ati.as[(String, Long, Long)].collect().toSet)
     // the files are ordinary parquet for any non-Spark reader
-    val raw = spark.read.parquet(path("ati_b"))
+    val raw = spark.read.parquet(s"${path("ati_b")}/data")
       .as[(String, Long, Long)].collect().toSet
     assert(raw == viaCatalog)
   }
@@ -51,7 +52,7 @@ class BucketedMirrorSpec extends SparkSpec with BeforeAndAfterAll {
     // clustering by bucket each writer task would write its own file
     // per bucket (up to 4 × 8)
     assert(ati.rdd.getNumPartitions > 1)
-    val files = new java.io.File(path("ati_b")).listFiles()
+    val files = new java.io.File(path("ati_b"), "data").listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(files <= 8, s"expected one file per bucket, got $files")
   }
@@ -81,31 +82,41 @@ class BucketedMirrorSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("a raw parquet read of the same path does NOT get shuffle elision") {
-    val agg = spark.read.parquet(path("ati_b")).groupBy("account").count()
+    val agg = spark.read.parquet(s"${path("ati_b")}/data").groupBy("account").count()
     val p = agg.queryExecution.executedPlan.toString
     assert(p.contains("Exchange"),
       "control: without catalog bucket metadata the shuffle must return")
   }
 
+  private def location(name: String): java.net.URI =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(name)).location
+
+  /** What every compaction leaves: the table still at `<root>/data`, at
+    * most one file per bucket there, and no swap debris or sentinel. */
+  private def assertCompacted(name: String, files: Int): Unit = {
+    val root = new java.io.File(path(name))
+    assert(new java.io.File(location(name)) == new java.io.File(root, "data"))
+    assert(files <= 8 && files == new java.io.File(root, "data").listFiles()
+      .count(_.getName.endsWith(".parquet")), s"$files data files")
+    Seq("data_compacting", "data_old", StoreCompaction.CompactingSentinel)
+      .foreach(n => assert(!new java.io.File(root, n).exists(), n))
+  }
+
   test("compact before any appendOnce: no markers to carry, elision survives") {
-    // the soak covers compaction with carried markers mid-stream; this
+    // the soak covers compaction with a rolled-up ledger mid-stream; this
     // is the other lifecycle edge — a freshly written mirror (no
     // _applied_batches directory exists at all)
     val name = "ati_compact_edge"
     try {
       BucketedMirror.write(ati, name, path(name), "account",
         buckets = 8, sortCols = Seq("account", "id"))
-      val newLoc = BucketedMirror.compact(spark, name)
-      assert(newLoc.endsWith("_gen1"))
-      assert(!new java.io.File(new java.net.URI(newLoc).getPath,
-        "_applied_batches").exists())
+      assertCompacted(name, BucketedMirror.compact(spark, name))
+      assert(!new java.io.File(path(name), "_applied_batches").exists())
       val t = BucketedMirror.table(spark, name)
       assert(t.count() == 2000)
       val p = t.groupBy("account").count().queryExecution.executedPlan.toString
       assert(!p.contains("Exchange"),
         s"bucketed groupBy must still elide the shuffle after compact:\n$p")
-      // the old generation directory is gone, the new one is the table
-      assert(!new java.io.File(path(name)).exists())
     } finally spark.sql(s"DROP TABLE IF EXISTS $name")
   }
 
@@ -120,8 +131,7 @@ class BucketedMirrorSpec extends SparkSpec with BeforeAndAfterAll {
         Seq.empty[(Long, Long, Long)].toDF("account", "id", "height"),
         name, path(name), "account", buckets = 8,
         sortCols = Seq("account", "id"))
-      val newLoc = BucketedMirror.compact(spark, name)
-      assert(newLoc.endsWith("_gen1"))
+      assertCompacted(name, BucketedMirror.compact(spark, name))
       val t = BucketedMirror.table(spark, name)
       assert(t.count() == 0 &&
         t.columns.toSeq == Seq("account", "id", "height"))

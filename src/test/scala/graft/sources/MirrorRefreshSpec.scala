@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
@@ -68,5 +70,38 @@ class MirrorRefreshSpec extends SparkSpec with BeforeAndAfterAll {
       assert(p.contains("SelectedBucketsCount: 1 out of 8"),
         s"key literal must still prune to one bucket:\n$p")
     } finally spark.conf.set(k, saved)
+  }
+
+  test("an append during a compaction refuses and writes nothing") {
+    // the sentinel a running compaction raises at the store root, next
+    // to the data directory and the replay ledger
+    val root = new java.io.File(dir, "sentinel_m")
+    BucketedMirror.write(rows(0, 100), "sentinel_m", root.getAbsolutePath, "k",
+      buckets = 8)
+    try {
+      def files(): Set[String] = org.apache.commons.io.FileUtils
+        .listFiles(root, null, true).asScala.map(_.getPath).toSet
+      assert(new java.io.File(root, StoreCompaction.CompactingSentinel)
+        .createNewFile())
+      val before = files()
+      val e = intercept[IllegalStateException] {
+        BucketedMirror.appendOnce(rows(100, 200), "sentinel_m", batchId = 0L)
+      }
+      assert(e.getMessage.contains("append refused"))
+      assert(files() == before)
+    } finally spark.sql("DROP TABLE IF EXISTS sentinel_m")
+  }
+
+  test("write clears the replay ledger") {
+    // the markers sit beside the data directory, not in it: a rewrite at
+    // the same path must still start from an empty ledger
+    val path = new java.io.File(dir, "rewrite_m").getAbsolutePath
+    try {
+      BucketedMirror.write(rows(0, 100), "rewrite_m", path, "k", buckets = 8)
+      assert(BucketedMirror.appendOnce(rows(100, 200), "rewrite_m", 0L))
+      BucketedMirror.write(rows(0, 100), "rewrite_m", path, "k", buckets = 8)
+      assert(BucketedMirror.appendOnce(rows(100, 200), "rewrite_m", 0L))
+      assert(BucketedMirror.table(spark, "rewrite_m").count() == 200)
+    } finally spark.sql("DROP TABLE IF EXISTS rewrite_m")
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -10,7 +11,7 @@ import graft.SparkSpec
 import graft.ingest.BlockIngest
 import graft.model.Schemas
 import graft.query.QueryApi
-import graft.sources.BucketedMirror
+import graft.sources.{BucketedMirror, StoreCompaction}
 
 /** The COMPOSED end-to-end soak the per-piece specs don't cover: one
   * streaming query drives feed files → ingest transforms → the
@@ -171,19 +172,42 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // ingest stream. Here the stream is stopped mid-flight (checkpoint
     // still holds undrained feed files), the page mirror is compacted,
     // and the restart drains the remainder ACROSS the compacted
-    // generation. The carried markers make any replayed batch a no-op;
-    // a raw write()-compaction here would wipe them and re-apply.
-    import org.apache.hadoop.fs.Path
+    // generation. The markers sit beside the swapped data directory and
+    // roll up into a watermark, so any replayed batch stays a no-op; a
+    // raw write()-compaction here would wipe them and re-apply.
     val pagesM = "soak_c_pages_m"
+    val mRoot = new java.io.File(s"$root/c_pages_m")
     val feed = s"$root/feed_c"
     val ck = s"$root/ckpt_c"
     val dbUrl = s"jdbc:derby:$root/db_c;create=true"
     try {
       Migrations.migrate(dbUrl, Dialect.Derby)
-      writeEmptyPages(pagesM, s"$root/c_pages_m")
+      writeEmptyPages(pagesM, mRoot.getPath)
       (0 until 6).foreach { i =>
         mkFeed(i * 2 until (i + 1) * 2).coalesce(1)
           .write.mode(SaveMode.Append).parquet(feed)
+      }
+      def location() = spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(pagesM)).location
+      val loc = location()
+      // what each compaction must leave: the catalog location unchanged,
+      // at most one file per bucket, no swap debris or sentinel, the
+      // ledger rolled up into a watermark with no per-batch marker at or
+      // below it, and batch 0 (committed before the stop: lastProgress
+      // was non-null) still a replay no-op
+      def assertCompacted(files: Int): Unit = {
+        assert(location() == loc)
+        assert(files <= 8, s"compaction must land one file per bucket; got $files")
+        Seq("data_compacting", "data_old", StoreCompaction.CompactingSentinel)
+          .foreach(n => assert(!new java.io.File(mRoot, n).exists(), n))
+        val ledger = new java.io.File(mRoot, "_applied_batches").list().toSeq
+        val wm = ledger.collect { case s"_watermark_$n" => n.toLong }
+        assert(wm.size == 1 && wm.head >= 0, s"ledger: $ledger")
+        assert(ledger.filter(_.forall(_.isDigit)).forall(_.toLong > wm.head),
+          s"ledger: $ledger")
+        assert(!BucketedMirror.appendOnce(BlockIngest.atiPages(mkFeed(0 until 2)),
+          pagesM, 0L),
+          "batch 0 was re-applied across the compaction")
       }
       def applyB(batch: DataFrame, batchId: Long): Unit = {
         TransactionalSink.writeBatch(batch, dbUrl, Dialect.Derby)
@@ -208,25 +232,9 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
       // MID-FLIGHT: undrained feed files remain behind the checkpoint;
       // compact the mirror now, while the stream is between runs
-      val atiLoc = BucketedMirror.compact(spark, pagesM)
-      assert(atiLoc.endsWith("_gen1"))
-      val fs = new Path(atiLoc)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // one rewrite generation: at most one data file per bucket
-      assert(fs.listStatus(new Path(atiLoc))
-        .count(_.getPath.getName.endsWith(".parquet")) <= 8)
-      // (a) the carried markers: batch 0 committed before the stop
-      // (lastProgress was non-null), and replaying it across the
-      // compaction must be a no-op — the exact failure write()-based
-      // compaction would cause
-      val carried = fs.listStatus(new Path(atiLoc, "_applied_batches"))
-        .map(_.getPath.getName.toLong).toSet
-      assert(carried.contains(0L), s"marker for batch 0 not carried: $carried")
-      assert(!BucketedMirror.appendOnce(BlockIngest.atiPages(mkFeed(0 until 2)),
-        pagesM, 0L),
-        "batch 0 was re-applied across the compaction")
+      assertCompacted(BucketedMirror.compact(spark, pagesM))
 
-      // restart from the same checkpoint; drain the rest into gen1
+      // restart from the same checkpoint; drain the rest on top of it
       val q2 = start()
       q2.awaitTermination(120000)
       assert(!q2.isActive)
@@ -237,20 +245,14 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(pageRows(BucketedMirror.table(spark, pagesM)) ==
         pageRows(BlockIngest.atiPages(mkFeed(0 until 12))))
 
-      // compact AGAIN on the live-appended state (gen1 -> gen2): the
-      // generational rename must iterate, not nest
-      val atiLoc2 = BucketedMirror.compact(spark, pagesM)
-      assert(atiLoc2.endsWith("_gen2") && !atiLoc2.contains("_gen1"))
-      val gen2Files = fs.listStatus(new Path(atiLoc2))
-        .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      assert(gen2Files.length <= 8,
-        s"compaction must land one file per bucket; got:\n${gen2Files.sorted.mkString("\n")}")
+      // compact AGAIN on the live-appended state: the swap must iterate
+      assertCompacted(BucketedMirror.compact(spark, pagesM))
 
       // served page over the twice-compacted mirror == the batch answer
       val served = servedPage(pagesM)
       assert(served.nonEmpty && served == batchAnswer)
 
-      // (c) bucket pruning survives the relocated generations
+      // (c) bucket pruning survives the swapped generations
       val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
       val saved = spark.conf.get(k)
       spark.conf.set(k, "false")
