@@ -2,19 +2,34 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ingest.{BlockFeed, BlockIngest}
+import graft.sources.Scratch
 
 /** Readers for the driver testdata tables and the derived reference-schema
   * tables (SURVEY §1.2) over them. All lazy DataFrame plans — Catalyst
   * prunes columns/pushes filters into the parquet scans of whatever query
   * is built on top. */
 object Tables {
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (SpreadTables(name))
-      spread(spark, s"$dir/$name.parquet",
-        spark.read.parquet(s"$dir/$name.parquet"))
-    else spark.read.parquet(s"$dir/$name.parquet")
+  /** A driver testdata table, spread by [[spread]] if it is one of
+    * [[SpreadTables]]. A single regular file is read with its schema
+    * given, so building the frame runs no Spark job: the schema is
+    * inferred (one footer-reading job) the first time a key is seen and
+    * memoized under that key. The key is the file's fingerprint as
+    * [[Scratch.key]] computes it (canonical path, length, mtime — a file
+    * regenerated in place is re-inferred) plus the session's parquet
+    * read settings at call time (`spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*`, `spark.sql.caseSensitive`), which
+    * decide the inferred types: [[events]] sets `nanosAsLong`, under
+    * which a TIMESTAMP(NANOS) column infers as a long. Directories (a
+    * Spark-written table) bypass the memo and keep the plain inferring
+    * `spark.read.parquet`. */
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val df = parquet(spark, path)
+    if (SpreadTables(name)) spread(spark, path, df) else df
+  }
 
   /** Tables whose consumers run CPU-heavy per-row kernels before their
     * first shuffle (media payload synthesis + decode, chat render,
@@ -34,7 +49,36 @@ object Tables {
     * replays the seed lineage, so the spread exchange was pure repeated
     * cost (hits: isolated min 2.6 s unspread vs 4.3 s spread). */
   def documentsSeed(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
+    parquet(s, s"$d/documents.parquet")
+
+  /** The one parquet reader of this object, with the schema memo
+    * described at [[read]]. */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    if (fileBytes(path).isEmpty) spark.read.parquet(path)
+    else {
+      val settings = spark.conf.getAll.toSeq.filter { case (k, _) =>
+        ReadSettings.exists(k.startsWith)
+      }.sorted.map { case (k, v) => s"$k=$v" }
+      val schema = schemas.computeIfAbsent(Scratch.key(path, settings: _*),
+        _ => spark.read.parquet(path).schema)
+      spark.read.schema(schema).parquet(path)
+    }
+
+  private val ReadSettings = Seq("spark.sql.parquet.",
+    "spark.sql.legacy.parquet.", "spark.sql.caseSensitive")
+
+  /** Inferred schemas by [[parquet]]'s key. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+  /** The size of `path` if it is one regular local file. */
+  private def fileBytes(path: String): Option[Long] =
+    try {
+      val file = java.nio.file.Paths.get(path)
+      if (java.nio.file.Files.isRegularFile(file))
+        Some(java.nio.file.Files.size(file))
+      else None
+    } catch { case _: Exception => None }
 
   /** Scale-adaptive scan-parallelism floor (optimization guide §2.5
     * "input skew: one huge unsplittable file … repartition immediately
@@ -53,30 +97,36 @@ object Tables {
     * construction — this is the identity and no corpus-sized input is
     * ever shuffled. Directories (a Spark-written parquet table, whose
     * `Files.size` is the inode's, not the data's) and non-local paths
-    * (no cheap size probe) skip the spread. There is
-    * deliberately NO lower size bound (r22): the spread must fire at
-    * EVERY test SF so the plan shape is scale-invariant — the bench's
-    * untimed sf0.001 JIT warm then compiles exactly the generated
-    * classes the sf0.1 timed run executes (with a floor, the warm
-    * compiled the fused unspread shape and the first timed reading
-    * paid the real plan's codegen). Broadcast-sized dimension tables
-    * never reach this code — [[SpreadTables]] gates by table. */
+    * (no cheap size probe) skip the spread. Broadcast-sized dimension
+    * tables never reach this code — [[SpreadTables]] gates by table.
+    *
+    * Width: `min(cores, ⌈bytes / SpreadGrainBytes⌉)`, and no exchange
+    * at all when that is 1. A file under one grain (the 26–63 KB
+    * `events` and `documents` of sf0.001) is read by one task that
+    * feeds its consumer directly: a fan-out there bought no parallel
+    * kernel work and cost a one-task map stage, a sort page before the
+    * repartition and one aggregation or sort page per downstream task.
+    * The trade-off: the plan shape is no longer the same at every SF —
+    * graft.Bench's untimed per-query warm at sf0.001 compiles the
+    * unspread plan for the sub-grain tables, so the first timed sf0.1
+    * reading of such a query pays the spread plan's codegen. At sf0.1
+    * every spread table is at least four grains, so on a 4-core host
+    * the sf0.1 plans are unchanged. */
   private def spread(spark: SparkSession, path: String,
                      df: DataFrame): DataFrame = {
-    val small =
-      try {
-        val file = java.nio.file.Paths.get(path)
-        java.nio.file.Files.isRegularFile(file) &&
-          java.nio.file.Files.size(file) < SpreadMaxBytes
-      } catch { case _: Exception => false }
     val cores = spark.sparkContext.defaultParallelism
-    if (small && cores > 1)
-      df.repartition(cores)
-    else df
+    val width = fileBytes(path).filter(_ < SpreadMaxBytes)
+      .map(b => math.min(cores.toLong, (b + SpreadGrainBytes - 1) / SpreadGrainBytes))
+      .getOrElse(1L).toInt
+    if (width > 1) df.repartition(width) else df
   }
 
   /** Largest single-file table [[spread]] still round-robins. */
   private val SpreadMaxBytes = 64L * 1024 * 1024
+
+  /** Bytes of file per spread partition. 128 KB, not 256 KB: the latter
+    * would narrow the 580 KB sf0.1 `documents` to 3 partitions. */
+  private val SpreadGrainBytes = 128L * 1024
 
   def region(s: SparkSession, d: String): DataFrame = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = read(s, d, "nation")

@@ -17,11 +17,12 @@ class PlanSpec extends SparkSpec {
     p.sliding(needle.length).count(_ == needle)
 
   /** Exchanges that move data FOR THE OPERATOR (hash/range): excludes
-    * the scan-parallelism floor's round-robin spread of a tiny seed
-    * table (Tables.spread, r22) — it fires at every SF precisely so
-    * these test-scale plans match the bench-scale plans, and it is the
-    * one exchange a narrow per-document pipeline is allowed. Only ONE
-    * spread is tolerated: a second round-robin exchange is a leaked
+    * the scan-parallelism floor's round-robin spread of a seed table
+    * (Tables.spread) — it fires once the single-file table spans more
+    * than one 128 KB grain (sf0.001 `embeddings`, every spread table at
+    * sf0.1, but not the 63 KB sf0.001 `documents`), and it is the one
+    * exchange a narrow per-document pipeline is allowed. Only ONE spread
+    * is tolerated: a second round-robin exchange is a leaked
     * `repartition()`, not the scan floor. */
   private def opExchanges(p: String): Int = {
     val spreads = count(p, "Exchange RoundRobinPartitioning")
@@ -63,12 +64,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text repetition: narrow per-document map — no joins, only the sort exchange") {
-    // also over documents written as a Spark parquet DIRECTORY, whose
-    // Files.size is the inode's: the scan spread must not fire there
+    // sf0.001 documents is one 128 KB grain, so no spread; sf0.1's spans
+    // five and is spread. Also over documents written as a Spark parquet
+    // DIRECTORY, whose Files.size is the inode's: the scan spread must
+    // not fire there
     val dirSf = java.nio.file.Files.createTempDirectory("trplan").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .write.parquet(s"$dirSf/documents.parquet")
-    try for ((d, spreads) <- Seq(sf -> 1, dirSf -> 0)) {
+    try for ((d, spreads) <- Seq(sf -> 0, "/root/testdata/sf0.1" -> 1, dirSf -> 0)) {
       val p = SparkEntry.queries("tr")(spark, d).queryExecution.executedPlan.toString
       assert(!p.contains("Join"), s"repetition must stay per-document:\n$p")
       assert(opExchanges(p) == 1, // the final orderBy only

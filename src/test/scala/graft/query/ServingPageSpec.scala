@@ -1,7 +1,5 @@
 package graft.query
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -66,28 +64,8 @@ class ServingPageSpec extends SparkSpec {
   }
 
   /** Spark jobs started from the served call `page` through its
-    * collect: a listener counts the job starts of one job group, read
-    * after the listener bus has delivered every event. */
-  private def servedJobs(page: => DataFrame): Int = {
-    val sc = spark.sparkContext
-    val group = s"served-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "served page")
-    try {
-      page.collect()
-      ListenerBusDrain(sc)
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
+    * collect. */
+  private def servedJobs(page: => DataFrame): Int = jobsDuring(page.collect())
 
   test("served account page runs one Spark job") {
     val (atiM, sumM) = mirrors
