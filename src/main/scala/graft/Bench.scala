@@ -285,13 +285,17 @@ object Bench {
     // timed run produces is precomputed — the same contract as the
     // existing untimed scan drains and index builds above. Skipped
     // when the bench itself targets the smallest SF (a same-data warm
-    // would be a plain repeat run) or the sibling dir is absent.
+    // would be a plain repeat run) or the sibling dir is absent. The
+    // scan spread is sized by the timed SF's files, so a table too small
+    // to spread at sf0.001 still warms the spread plan timed at sfDir.
     warmQuerySfDir(sfDir).foreach { wd =>
-      names.foreach { n =>
-        queries.get(n).foreach { fn =>
-          warm(
-            try fn(spark, wd).queryExecution.toRdd.foreach(_ => ())
-            finally CacheScope.release())
+      Tables.spreadSizedBy.withValue(Some(sfDir)) {
+        names.foreach { n =>
+          queries.get(n).foreach { fn =>
+            warm(
+              try fn(spark, wd).queryExecution.toRdd.foreach(_ => ())
+              finally CacheScope.release())
+          }
         }
       }
     }

@@ -59,8 +59,13 @@ object Tables {
       val settings = spark.conf.getAll.toSeq.filter { case (k, _) =>
         ReadSettings.exists(k.startsWith)
       }.sorted.map { case (k, v) => s"$k=$v" }
-      val schema = schemas.computeIfAbsent(Scratch.key(path, settings: _*),
-        _ => spark.read.parquet(path).schema)
+      val key = Scratch.key(path, settings: _*)
+      // no lock across the inference job; a rare duplicate is harmless
+      val schema = Option(schemas.get(key)).getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemas.putIfAbsent(key, inferred)
+        inferred
+      }
       spark.read.schema(schema).parquet(path)
     }
 
@@ -100,33 +105,37 @@ object Tables {
     * (no cheap size probe) skip the spread. Broadcast-sized dimension
     * tables never reach this code — [[SpreadTables]] gates by table.
     *
-    * Width: `min(cores, ⌈bytes / SpreadGrainBytes⌉)`, and no exchange
-    * at all when that is 1. A file under one grain (the 26–63 KB
-    * `events` and `documents` of sf0.001) is read by one task that
-    * feeds its consumer directly: a fan-out there bought no parallel
-    * kernel work and cost a one-task map stage, a sort page before the
+    * Lower bound: a file under [[SpreadMinBytes]] (the 26–65 KB
+    * `events` and `documents` of sf0.001) is read by one task that feeds
+    * its consumer directly: a fan-out there bought no parallel kernel
+    * work and cost a one-task map stage, a sort page before the
     * repartition and one aggregation or sort page per downstream task.
-    * The trade-off: the plan shape is no longer the same at every SF —
-    * graft.Bench's untimed per-query warm at sf0.001 compiles the
-    * unspread plan for the sub-grain tables, so the first timed sf0.1
-    * reading of such a query pays the spread plan's codegen. At sf0.1
-    * every spread table is at least four grains, so on a 4-core host
-    * the sf0.1 plans are unchanged. */
+    * A larger file is spread over every core, whatever the core count.
+    * The plan shape is thus not the same at every SF; graft.Bench's
+    * untimed sf0.001 JIT warm runs under [[spreadSizedBy]] the timed SF,
+    * so it compiles the plan the timed run executes. */
   private def spread(spark: SparkSession, path: String,
                      df: DataFrame): DataFrame = {
+    val sized = spreadSizedBy.value
+      .fold(path)(d => s"$d/${new java.io.File(path).getName}")
     val cores = spark.sparkContext.defaultParallelism
-    val width = fileBytes(path).filter(_ < SpreadMaxBytes)
-      .map(b => math.min(cores.toLong, (b + SpreadGrainBytes - 1) / SpreadGrainBytes))
-      .getOrElse(1L).toInt
-    if (width > 1) df.repartition(width) else df
+    if (fileBytes(sized).exists(b => b >= SpreadMinBytes && b < SpreadMaxBytes) &&
+        cores > 1) df.repartition(cores)
+    else df
   }
+
+  /** While set, [[spread]] decides by the size of the same-named file in
+    * this directory instead of the one read: a query built over sf0.001
+    * gets the exchanges it would get over that SF. */
+  private[graft] val spreadSizedBy = new scala.util.DynamicVariable[Option[String]](None)
 
   /** Largest single-file table [[spread]] still round-robins. */
   private val SpreadMaxBytes = 64L * 1024 * 1024
 
-  /** Bytes of file per spread partition. 128 KB, not 256 KB: the latter
-    * would narrow the 580 KB sf0.1 `documents` to 3 partitions. */
-  private val SpreadGrainBytes = 128L * 1024
+  /** Smallest single-file table [[spread]] round-robins: above the
+    * sf0.001 `events` and `documents`, below every sf0.1 spread table
+    * (580 KB and up). */
+  private val SpreadMinBytes = 128L * 1024
 
   def region(s: SparkSession, d: String): DataFrame = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = read(s, d, "nation")

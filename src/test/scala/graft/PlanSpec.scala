@@ -18,9 +18,9 @@ class PlanSpec extends SparkSpec {
 
   /** Exchanges that move data FOR THE OPERATOR (hash/range): excludes
     * the scan-parallelism floor's round-robin spread of a seed table
-    * (Tables.spread) — it fires once the single-file table spans more
-    * than one 128 KB grain (sf0.001 `embeddings`, every spread table at
-    * sf0.1, but not the 63 KB sf0.001 `documents`), and it is the one
+    * (Tables.spread) — it fires once the single-file table reaches
+    * 128 KB (sf0.001 `embeddings`, every spread table at sf0.1, but not
+    * the 26–65 KB sf0.001 `events` and `documents`), and it is the one
     * exchange a narrow per-document pipeline is allowed. Only ONE spread
     * is tolerated: a second round-robin exchange is a leaked
     * `repartition()`, not the scan floor. */
@@ -64,21 +64,28 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text repetition: narrow per-document map — no joins, only the sort exchange") {
-    // sf0.001 documents is one 128 KB grain, so no spread; sf0.1's spans
-    // five and is spread. Also over documents written as a Spark parquet
-    // DIRECTORY, whose Files.size is the inode's: the scan spread must
-    // not fire there
+    // sf0.001 documents (63 KB) is under the spread's 128 KB floor, so
+    // no spread; built as graft.Bench's warm builds it for a larger SF
+    // (sized by a 200 KB documents file) it gets the one spread. Also
+    // over documents written as a Spark parquet DIRECTORY, whose
+    // Files.size is the inode's: the scan spread must not fire there
     val dirSf = java.nio.file.Files.createTempDirectory("trplan").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .write.parquet(s"$dirSf/documents.parquet")
-    try for ((d, spreads) <- Seq(sf -> 0, "/root/testdata/sf0.1" -> 1, dirSf -> 0)) {
-      val p = SparkEntry.queries("tr")(spark, d).queryExecution.executedPlan.toString
+    val sized = java.nio.file.Files.createTempDirectory("trsized")
+    java.nio.file.Files.write(sized.resolve("documents.parquet"), new Array[Byte](200 * 1024))
+    try for ((d, sizedBy, spreads) <- Seq((sf, None, 0), (sf, Some(sized.toString), 1),
+                                          (dirSf, None, 0))) {
+      val p = Tables.spreadSizedBy.withValue(sizedBy) {
+        SparkEntry.queries("tr")(spark, d).queryExecution.executedPlan.toString
+      }
       assert(!p.contains("Join"), s"repetition must stay per-document:\n$p")
       assert(opExchanges(p) == 1, // the final orderBy only
         s"expected a single (sort) exchange in:\n$p")
       assert(count(p, "Exchange RoundRobinPartitioning") == spreads,
         s"expected $spreads scan spread(s) over $d in:\n$p")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirSf))
+    } finally Seq(new java.io.File(dirSf), sized.toFile)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 
   test("dsir: bucket-bounded count tables broadcast; the probe never shuffle-joins") {

@@ -13,12 +13,11 @@ import org.apache.spark.sql.types._
 /** The testdata read path of [[Tables]]: a single parquet file's schema
   * is inferred once per (file fingerprint, parquet read settings), so a
   * repeated read plans without a Spark job, a regenerated file or a
-  * changed setting is re-inferred, and the scan spread is as wide as the
-  * file's bytes allow. */
+  * changed setting is re-inferred, and the scan spread fires only for a
+  * file of at least 128 KB. */
 class TablesReadSpec extends SparkSpec {
 
   private val sf001 = "/root/testdata/sf0.001"
-  private val sf01 = "/root/testdata/sf0.1"
 
   /** Runs `body` with the session setting `key` at `value`, then puts
     * the setting back: the session is shared by every suite. */
@@ -129,18 +128,27 @@ class TablesReadSpec extends SparkSpec {
       }
   }
 
-  test("the scan spread is as wide as the file's bytes, capped at the cores") {
-    // 63 KB: one 128 KB grain, so no exchange at all
+  test("a single file of at least 128 KB is spread over every core") {
+    // 63 KB and 27 KB: under the floor, so no exchange at all
     assert(spreadWidths(Tables.documents(spark, sf001)).isEmpty)
-    // 189 KB: two grains
-    assert(spreadWidths(Tables.embeddings(spark, sf001)) == Seq(2))
-    // 580 KB: five grains, capped at the spec session's 4 cores
-    assert(spreadWidths(Tables.documents(spark, sf01)) == Seq(4))
+    assert(spreadWidths(Tables.events(spark, sf001)).isEmpty)
+    // 189 KB: the spec session's 4 cores
+    assert(spreadWidths(Tables.embeddings(spark, sf001)) == Seq(4))
+    // sized by another directory's same-named file, as graft.Bench's
+    // sf0.001 warm is sized by the SF it times
+    val sized = scratch()
+    Files.write(Path.of(sized, "documents.parquet"), new Array[Byte](200 * 1024))
+    Files.write(Path.of(sized, "embeddings.parquet"), new Array[Byte](1024))
+    Tables.spreadSizedBy.withValue(Some(sized)) {
+      assert(spreadWidths(Tables.documents(spark, sf001)) == Seq(4))
+      assert(spreadWidths(Tables.embeddings(spark, sf001)).isEmpty)
+    }
     // a Spark-written directory has no cheap size, so no spread
     val dir = scratch()
-    spark.read.parquet(s"$sf01/documents.parquet")
-      .write.parquet(s"$dir/documents.parquet")
-    try assert(spreadWidths(Tables.documents(spark, dir)).isEmpty)
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    spark.read.parquet(s"$sf001/embeddings.parquet")
+      .write.parquet(s"$dir/embeddings.parquet")
+    try assert(spreadWidths(Tables.embeddings(spark, dir)).isEmpty)
+    finally Seq(dir, sized).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 }
