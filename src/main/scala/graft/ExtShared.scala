@@ -27,7 +27,7 @@ private[graft] object ExtShared {
   //    DOUBLE are both HALF_UP (away from zero), but the JVM's
   //    `math.round` is floor(x+0.5) — WRONG for negative halves.
   //    Driver-side quantization must use BigDecimal HALF_UP
-  //    (Similarity.annIvfIndexedVec), never math.round.
+  //    (Similarity.quantizeVec), never math.round.
   // 3. Float DRIFT: never compare raw double aggregates — sum order
   //    differs per partitioning. Embedding math stays in quantized
   //    LONGs (dot products are exact integers) and casts to DOUBLE
@@ -892,7 +892,7 @@ ORDER BY pq_dist ASC, vec_id ASC
 LIMIT 10"""
 
   /** DuckDB mirror of the stride-100 cell assignment
-    * (Similarity.{centroidsOf, assignCells}) carrying qe/n2 through for
+    * (Similarity.{centroidsOf, nearestCells}) carrying qe/n2 through for
     * in-cell cosine math — shared by semdedup and smp_cell. Same
     * argmax-rounded-cosine, ties-to-smallest-cid rule as AnnIvfSql. */
   val CellsCte = """WITH qz AS (

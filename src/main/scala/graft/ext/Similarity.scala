@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -17,6 +19,47 @@ object Similarity {
   /** Quantized embedding: array<long> of round(x*1e6). */
   def quantize(emb: Column): Column =
     transform(emb, x => round(x.cast("double") * 1e6).cast("long"))
+
+  /** [[quantize]] on the driver, for a caller-supplied query vector. */
+  private[ext] def quantizeVec(v: Seq[Float]): Seq[Long] =
+    v.map(x => roundHalfUp(x.toDouble * 1e6))
+
+  /** Spark's `round` on a double: HALF_UP on the shortest decimal form,
+    * which `math.round` gets wrong for negative half-way values. */
+  private def roundHalfUp(d: Double): Long =
+    java.math.BigDecimal.valueOf(d)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+
+  /** THE quantized frame every scoring operator starts from:
+    * (vid, qe, attrs…, n2) — `qe` the [[quantize]]d embedding, `n2` its
+    * exact squared norm, computed once per vector rather than once per
+    * candidate pair. */
+  private def quantized(df: DataFrame, id: Column, emb: Column,
+                        attrs: Seq[String] = Nil): DataFrame =
+    df.select(id.as("vid") +: quantize(emb).as("qe") +: attrs.map(col): _*)
+      .withColumn("n2", dotQ(col("qe"), col("qe")))
+
+  /** A quantized frame as the QUERY side of a pair: (idAs, qv, qn2,
+    * extra…), so it joins a candidate frame (vid, qe, n2) without name
+    * clashes and [[pairCosine]] scores the pair. */
+  private def asQuery(qz: DataFrame, idAs: String,
+                      extra: Column*): DataFrame =
+    qz.select(Seq(col("vid").as(idAs), col("qe").as("qv"),
+      col("n2").as("qn2")) ++ extra: _*)
+
+  /** Exact cosine of a candidate (qe, n2) against a query (qv, qn2). */
+  private def pairCosine: Column =
+    cosineQNormed(col("qe"), col("qv"), col("n2"), col("qn2")).as("cosine")
+
+  /** THE ranked cut: per `key`, the `n` rows first by `order`, ties to
+    * the smallest `tie`, numbered in the int column `rankCol`. Spark
+    * plans the `row_number` filter as a partial WindowGroupLimit, so at
+    * most `n` rows per key and task reach the key's exchange. */
+  private def topPer(df: DataFrame, key: String, order: Column, tie: String,
+                     n: Int, rankCol: String = "rnk"): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        Window.partitionBy(key).orderBy(order, col(tie).asc)))
+      .where(col(rankCol) <= n)
 
   /** INT8 symmetric per-vector quantization — the standard 4× storage /
     * bandwidth compression applied to an embedding corpus before
@@ -117,16 +160,14 @@ object Similarity {
       k: Int, excludeSelf: Boolean = false): DataFrame = {
     val qb = qcodes.select(col("vec_id").as("q_id"),
       col("b_hi").as("__qhi"), col("b_lo").as("__qlo"))
-    val all = store.crossJoin(org.apache.spark.sql.functions.broadcast(qb))
+    val all = store.crossJoin(broadcast(qb))
       .select(col("q_id"), col("vec_id"),
         expr("CAST(bit_count(b_hi ^ __qhi) + bit_count(b_lo ^ __qlo) " +
           "AS BIGINT)").as("ham"))
     val ham = if (excludeSelf) all.where(col("vec_id") =!= col("q_id")) else all
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("ham").asc, col("vec_id").asc)
-    ham.withColumn("rnk", row_number().over(win).cast("long"))
-      .where(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "ham")
+    topPer(ham, "q_id", col("ham").asc, "vec_id", k)
+      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("vec_id"),
+        col("ham"))
   }
 
   /** Coarse-Hamming + exact rerank — the standard two-stage serving
@@ -158,21 +199,14 @@ object Similarity {
     val ck = if (coarseK > 0) coarseK else 32 * k
     require(ck >= k, "hammingRerank: coarseK must be >= k")
     val coarse = hammingTopK(corpus, probes, idCol, embCol, ck)
-    def vecs(df: DataFrame, idAs: String, pre: String) =
-      df.select(col(idCol).cast("long").as(idAs),
-          quantize(col(embCol)).as(s"${pre}qe"))
-        .withColumn(s"${pre}n2", dotQ(col(s"${pre}qe"), col(s"${pre}qe")))
-    val scored = vecs(corpus, "vec_id", "c_")
+    def vecs(df: DataFrame) = quantized(df, col(idCol).cast("long"), col(embCol))
+    val scored = vecs(corpus).withColumnRenamed("vid", "vec_id")
       .join(broadcast(coarse), "vec_id")
-      .join(broadcast(vecs(probes, "q_id", "q_")), "q_id")
-      .select(col("q_id"), col("vec_id"), col("ham"),
-        cosineQNormed(col("c_qe"), col("q_qe"), col("c_n2"), col("q_n2"))
-          .as("cosine"))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(win).cast("long"))
-      .where(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "ham", "cosine")
+      .join(broadcast(asQuery(vecs(probes), "q_id")), "q_id")
+      .select(col("q_id"), col("vec_id"), col("ham"), pairCosine)
+    topPer(scored, "q_id", col("cosine").desc, "vec_id", k)
+      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("vec_id"),
+        col("ham"), col("cosine"))
   }
 
   /** BATCH probe of the STORED code index — the (store | probe) seat
@@ -192,7 +226,7 @@ object Similarity {
     * query into the q_id exchange — k·|queries|·tasks rows shuffle, not
     * |store|·|queries|. Ties break by vec_id; output
     * (q_id, rnk, vec_id, ham). */
-  def hammingTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def hammingTopKIndexed(spark: SparkSession, path: String,
       queries: DataFrame, idCol: String, embCol: String,
       k: Int = 10): DataFrame =
     hammingTopKCore(
@@ -323,7 +357,7 @@ object Similarity {
     * single-writer-task rewrites are the one way this default
     * misbehaves at the top end. Returns the post-compaction file
     * count. */
-  def compactCodes(spark: org.apache.spark.sql.SparkSession, path: String,
+  def compactCodes(spark: SparkSession, path: String,
                    files: Int = 1): Int =
     graft.sources.StoreCompaction.swapCompact(spark, path, "codes") {
       (live, out) =>
@@ -338,14 +372,9 @@ object Similarity {
     * for footer skipping, hive `partitionBy(cid)` so every probe
     * path's partition pruning survives — pinned in PlanSpec). Returns
     * the post-compaction file count. */
-  def compactCellIndex(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Int =
+  def compactCellIndex(spark: SparkSession, path: String): Int =
     graft.sources.StoreCompaction.swapCompact(spark, path, "cells") {
-      (live, out) =>
-        spark.read.parquet(live).repartition(col("cid"))
-          .sortWithinPartitions("vid")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cid").parquet(out)
+      (live, out) => writeByCell(spark.read.parquet(live), "overwrite", out)
     }
 
   /** Per-label CENTROID DRIFT between two embedding batches — the
@@ -405,26 +434,17 @@ object Similarity {
   def matryoshkaRecall(corpus: DataFrame, probes: DataFrame, idCol: String,
       embCol: String, prefixDim: Int, k: Int): DataFrame = {
     require(prefixDim >= 1, "matryoshkaRecall: prefixDim must be >= 1")
-    import org.apache.spark.sql.expressions.Window
-    def prep(df: DataFrame) = df
-      .select(col(idCol).cast("long").as("vid"),
-        quantize(col(embCol)).as("qe"))
-      .withColumn("qp", expr(s"slice(qe, 1, $prefixDim)"))
-      .withColumn("n2", dotQ(col("qe"), col("qe")))
-      .withColumn("p2", dotQ(col("qp"), col("qp")))
-    val tb = prep(corpus)
-    val qb = broadcast(prep(probes).select(col("vid").as("q_id"),
-      col("qe").as("__qv"), col("qp").as("__pv"),
-      col("n2").as("__qn2"), col("p2").as("__qp2")))
-    val pairs = tb.crossJoin(qb)
-    def topk(scored: DataFrame, c: String) = {
-      val w = Window.partitionBy("q_id").orderBy(col(c).desc, col("vid").asc)
-      scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
-        .select("q_id", "vid")
-    }
-    val full = topk(pairs.select(col("q_id"), col("vid"),
-      cosineQNormed(col("qe"), col("__qv"), col("n2"), col("__qn2"))
-        .as("cf")), "cf")
+    def prep(df: DataFrame) =
+      quantized(df, col(idCol).cast("long"), col(embCol))
+        .withColumn("qp", expr(s"slice(qe, 1, $prefixDim)"))
+        .withColumn("p2", dotQ(col("qp"), col("qp")))
+    val qb = broadcast(asQuery(prep(probes), "q_id", col("qp").as("__pv"),
+      col("p2").as("__qp2")))
+    val pairs = prep(corpus).crossJoin(qb)
+    def topk(scored: DataFrame, c: String) =
+      topPer(scored, "q_id", col(c).desc, "vid", k).select("q_id", "vid")
+    val full = topk(pairs.select(col("q_id"), col("vid"), pairCosine),
+      "cosine")
     val pref = topk(pairs.select(col("q_id"), col("vid"),
       cosineQNormed(col("qp"), col("__pv"), col("p2"), col("__qp2"))
         .as("cp")), "cp")
@@ -465,15 +485,12 @@ object Similarity {
       "mmrSelect: need k >= 1, poolSize >= k, lambdaPct in [0, 100]")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qz = corpus.select(col(idCol).cast("long").as("vid"),
-        quantize(col(embCol)).as("qe"))
-      .withColumn("n2", dotQ(col("qe"), col("qe")))
-    val qv = broadcast(qz.where(col("vid") === queryId)
-      .select(col("qe").as("__qv"), col("n2").as("__qn2")))
+    val qz = quantized(corpus, col(idCol).cast("long"), col(embCol))
+    val qv = broadcast(asQuery(qz.where(col("vid") === queryId), "qid"))
     val pool = qz.where(col("vid") =!= queryId).crossJoin(qv)
       .select(col("vid"), col("qe"), col("n2"),
-        round(dotQ(col("qe"), col("__qv")).cast("double") /
-          sqrt(col("n2").cast("double") * col("__qn2").cast("double"))
+        round(dotQ(col("qe"), col("qv")).cast("double") /
+          sqrt(col("n2").cast("double") * col("qn2").cast("double"))
           * 1e6).cast("long").as("relq"))
       .orderBy(col("relq").desc, col("vid").asc)
       .limit(poolSize)
@@ -490,9 +507,7 @@ object Similarity {
       val (xa, xb) = (a._2, b._2)
       val n = math.min(xa.length, xb.length)
       while (i < n) { dot += xa(i) * xb(i); i += 1 }
-      java.math.BigDecimal.valueOf(
-        dot.toDouble / math.sqrt(a._3.toDouble * b._3.toDouble) * 1e6)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+      roundHalfUp(dot.toDouble / math.sqrt(a._3.toDouble * b._3.toDouble) * 1e6)
     }
     val selected = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long)] // (step, vid, score)
@@ -597,19 +612,15 @@ object Similarity {
   def bruteForceTopK(embeddings: DataFrame, idCol: String, embCol: String,
                      queryId: Long, k: Int,
                      predicate: Option[Column] = None): DataFrame = {
-    val q = embeddings.where(col(idCol) === queryId)
-      .select(quantize(col(embCol)).as("__q"))
-      .withColumn("__qn2", dotQ(col("__q"), col("__q")))
+    val q = asQuery(quantized(embeddings.where(col(idCol) === queryId),
+      col(idCol), col(embCol)), "qid")
     // filtered-ANN contract (the exact-baseline side): the candidate
     // predicate applies before scoring, so this is the recall oracle
     // for the filtered indexed probes
-    predicate.foldLeft(embeddings.where(col(idCol) =!= queryId))(
-        (df, p) => df.where(p))
+    quantized(predicate.foldLeft(embeddings.where(col(idCol) =!= queryId))(
+        (df, p) => df.where(p)), col(idCol), col(embCol))
       .crossJoin(broadcast(q))
-      .select(col(idCol), quantize(col(embCol)).as("__e"), col("__q"), col("__qn2"))
-      .select(col(idCol),
-        cosineQNormed(col("__e"), col("__q"),
-          dotQ(col("__e"), col("__e")), col("__qn2")).as("cosine"))
+      .select(col("vid").as(idCol), pairCosine)
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
   }
@@ -642,29 +653,25 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, queries: DataFrame, idCol: String,
                     embCol: String, positives: DataFrame, k: Int,
                     excludeSelf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qb = queries.select(col(idCol).as("q_id"),
-        quantize(col(embCol)).as("__qv"))
-      .withColumn("__qn2", dotQ(col("__qv"), col("__qv")))
-    val scored = corpus.select(col(idCol).as("vec_id"),
-        quantize(col(embCol)).as("__e"))
-      .withColumn("__n2", dotQ(col("__e"), col("__e")))
-      .crossJoin(broadcast(qb))
+    val scored = quantized(corpus, col(idCol), col(embCol))
+      .withColumnRenamed("vid", "vec_id")
+      .crossJoin(broadcast(asQuery(quantized(queries, col(idCol), col(embCol)),
+        "q_id")))
     val noSelf =
       if (excludeSelf) scored.where(col("vec_id") =!= col("q_id"))
       else scored
-    val win = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    noSelf
+    rankNegatives(noSelf
       .join(broadcast(positives.select("q_id", "vec_id")),
         Seq("q_id", "vec_id"), "left_anti")
-      .select(col("q_id"), col("vec_id"),
-        cosineQNormed(col("__e"), col("__qv"),
-          col("__n2"), col("__qn2")).as("cosine"))
-      .withColumn("rnk", row_number().over(win).cast("long"))
-      .where(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "cosine")
+      .select(col("q_id"), col("vec_id"), pairCosine), k)
   }
+
+  /** The per-query cut both mining tiers end on, after the positives
+    * dropped: (q_id, rnk, vec_id, cosine), rnk a long. */
+  private def rankNegatives(scored: DataFrame, k: Int): DataFrame =
+    topPer(scored, "q_id", col("cosine").desc, "vec_id", k)
+      .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("vec_id"),
+        col("cosine"))
 
   /** [[hardNegatives]] on the stored IVF cell index — the mining shape
     * that doesn't scan the corpus at all: probe the `nprobe` nearest
@@ -686,17 +693,12 @@ object Similarity {
   def hardNegativesIndexed(queries: DataFrame, idCol: String, embCol: String,
                            path: String, positives: DataFrame, k: Int,
                            nprobe: Int = 2, overscan: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val win = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    annIvfIndexedBatch(queries, idCol, embCol, path, k + overscan, nprobe)
-      .select(col("query_id").as("q_id"), col("vid").as("vec_id"),
-        col("cosine"))
-      .join(broadcast(positives.select("q_id", "vec_id")),
-        Seq("q_id", "vec_id"), "left_anti")
-      .withColumn("rnk", row_number().over(win).cast("long"))
-      .where(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "cosine")
+    rankNegatives(
+      annIvfIndexedBatch(queries, idCol, embCol, path, k + overscan, nprobe)
+        .select(col("query_id").as("q_id"), col("vid").as("vec_id"),
+          col("cosine"))
+        .join(broadcast(positives.select("q_id", "vec_id")),
+          Seq("q_id", "vec_id"), "left_anti"), k)
   }
 
   /** SEMANTIC decontamination — the embedding-space mirror of the
@@ -739,18 +741,16 @@ object Similarity {
       s"decontaminate() broadcasts the whole eval split as one array row; " +
         s"got > $maxEvalRows eval rows. Use tagNearIndex against " +
         "a prebuilt eval cell index for eval sets this large.")
-    val evalArr = eval
-      .select(quantize(col(embCol)).as("qe"))
-      .withColumn("n2", dotQ(col("qe"), col("qe")))
+    // the eval side needs no id column: it collapses to one array row
+    val evalArr = quantized(eval, lit(0L), col(embCol))
       .agg(collect_list(struct(col("qe"), col("n2"))).as("__evals"))
-    train.select(col(idCol), quantize(col(embCol)).as("__e"))
-      .withColumn("__n2", dotQ(col("__e"), col("__e")))
+    quantized(train, col(idCol), col(embCol))
       .crossJoin(broadcast(evalArr))
-      .select(col(idCol),
+      .select(col("vid").as(idCol),
         aggregate(col("__evals"), lit(-1.0d),
           (acc, ev) => greatest(acc,
-            cosineQNormed(col("__e"), ev.getField("qe"),
-              col("__n2"), ev.getField("n2")))).as("max_eval_cosine"))
+            cosineQNormed(col("qe"), ev.getField("qe"),
+              col("n2"), ev.getField("n2")))).as("max_eval_cosine"))
       .withColumn("contaminated", col("max_eval_cosine") >= threshold)
   }
 
@@ -774,28 +774,20 @@ object Similarity {
   def annLsh(embeddings: DataFrame, idCol: String, embCol: String,
              queryId: Long, k: Int, bands: Int = 8, planes: Int = 16,
              predicate: Option[Column] = None): DataFrame = {
-    // withColumn, not a narrowing select: the source's attribute
-    // columns ride `base` so a candidate predicate can reference them;
-    // Catalyst prunes them from the scan when no predicate needs them
-    val base = embeddings
-      .withColumn("__qe", quantize(col(embCol)))
-      .withColumn("__n2", dotQ(col("__qe"), col("__qe")))
-      .withColumn("__bb", lshBuckets(embeddings, "__qe", bands, planes))
-    val q = base.where(col(idCol) === queryId)
-      .select(col("__qe").as("__q"), col("__n2").as("__qn2"),
-        col("__bb").as("__qbb"))
+    def banded(df: DataFrame) = quantized(df, col(idCol), col(embCol))
+      .withColumn("bb", lshBuckets(embeddings, "qe", bands, planes))
+    val q = asQuery(banded(embeddings.where(col(idCol) === queryId)), "qid",
+      col("bb").as("qbb"))
     // filtered-ANN contract on the LSH tier: the predicate (over the
-    // SOURCE columns, which ride `base` untouched) prunes candidates
-    // before the band-intersection filter and the fused top-k — the
-    // query row itself is exempt, as on the indexed tiers
-    val cands = predicate.foldLeft(base.where(col(idCol) =!= queryId))(
-      (df, p) => df.where(p))
-    cands
+    // SOURCE columns) prunes candidates before the band-intersection
+    // filter and the fused top-k — the query row itself is exempt, as
+    // on the indexed tiers
+    banded(predicate.foldLeft(embeddings.where(col(idCol) =!= queryId))(
+        (df, p) => df.where(p)))
       .crossJoin(broadcast(q))
-      .where(exists(zip_with(col("__bb"), col("__qbb"), (x, y) => x === y),
+      .where(exists(zip_with(col("bb"), col("qbb"), (x, y) => x === y),
         b => b))
-      .select(col(idCol),
-        cosineQNormed(col("__qe"), col("__q"), col("__n2"), col("__qn2")).as("cosine"))
+      .select(col("vid").as(idCol), pairCosine)
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
   }
@@ -817,28 +809,14 @@ object Similarity {
   def annIvf(embeddings: DataFrame, idCol: String, embCol: String,
              queryId: Long, k: Int, centroidStride: Int = 100,
              nprobe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qz = embeddings.select(col(idCol).as("vid"),
-        quantize(col(embCol)).as("qe"))
-      .withColumn("n2", dotQ(col("qe"), col("qe")))
+    val qz = quantized(embeddings, col(idCol), col(embCol))
     val cents = centroidsOf(qz, centroidStride)
-    val scored = qz.crossJoin(broadcast(cents))
-      .select(col("vid"), col("qe"), col("n2"), col("cid"),
-        cosineQNormed(col("qe"), col("ce"), col("n2"), col("cn2")).as("ccos"))
-    val byCell = Window.partitionBy("vid")
-      .orderBy(col("ccos").desc, col("cid").asc)
-    val ranked = scored.withColumn("rnk", row_number().over(byCell))
-    val cells = ranked.where(col("rnk") === 1)
-      .select(col("vid"), col("qe"), col("n2"), col("cid"))
-    val qcells = ranked.where(col("vid") === queryId && col("rnk") <= nprobe)
-      .select(col("cid").as("qcid"))
     val q = qz.where(col("vid") === queryId)
-      .select(col("qe").as("qv"), col("n2").as("qn2"))
-    cells.where(col("vid") =!= queryId)
+    val qcells = nearestCells(q, cents, nprobe).select(col("cid").as("qcid"))
+    nearestCells(qz.where(col("vid") =!= queryId), cents, 1)
       .join(broadcast(qcells), col("cid") === col("qcid"))
-      .crossJoin(broadcast(q))
-      .select(col("vid").as(idCol),
-        cosineQNormed(col("qe"), col("qv"), col("n2"), col("qn2")).as("cosine"))
+      .crossJoin(broadcast(asQuery(q, "qid")))
+      .select(col("vid").as(idCol), pairCosine)
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
   }
@@ -886,8 +864,7 @@ object Similarity {
   def annPq(embeddings: DataFrame, idCol: String, embCol: String,
             queryId: Long, k: Int, m: Int = 8, subDim: Int = 8,
             centroidStride: Int = 50): DataFrame = {
-    val qz = embeddings.select(col(idCol).as("vid"),
-      quantize(col(embCol)).as("qe"))
+    val qz = quantized(embeddings, col(idCol), col(embCol))
     val cbs = pqCodebook(qz, m, subDim, centroidStride)
     val codes = pqEncode(qz, cbs, subDim)
     // ADC table: per (subspace, codebook id) the query's partial dist
@@ -923,7 +900,7 @@ object Similarity {
   /** THE PQ encoding rule — argmin quantized squared L2 per
     * (vector, subspace), ties to the smallest cid — shared by [[annPq]]
     * and [[writePqIndex]] so stored codes can never desync from the
-    * per-query formulation (the [[assignCells]] discipline). Returns
+    * per-query formulation (the [[nearestCells]] discipline). Returns
     * (vid, s, code). */
   private def pqEncode(qz: DataFrame, cbs: DataFrame,
                        subDim: Int): DataFrame =
@@ -952,8 +929,7 @@ object Similarity {
   def writePqIndex(embeddings: DataFrame, idCol: String, embCol: String,
                    path: String, m: Int = 8, subDim: Int = 8,
                    centroidStride: Int = 50): Unit = {
-    val qz = embeddings.select(col(idCol).as("vid"),
-      quantize(col(embCol)).as("qe"))
+    val qz = quantized(embeddings, col(idCol), col(embCol))
     pqCodebook(qz, m, subDim, centroidStride)
       .write.mode("overwrite").parquet(s"$path/codebook")
     val stored = embeddings.sparkSession.read.parquet(s"$path/codebook")
@@ -977,13 +953,10 @@ object Similarity {
     * join, no aggregation exchange, no window; the only distributed
     * work is the compressed-codes scan itself (PlanSpec pins zero
     * hash exchanges on this plan). */
-  def annPqIndexedVec(spark: org.apache.spark.sql.SparkSession,
+  def annPqIndexedVec(spark: SparkSession,
                       path: String, queryVec: Seq[Float], k: Int,
                       excludeVid: Option[Long] = None): DataFrame = {
-    // same HALF_UP rounding as [[quantize]] (Spark's round), which
-    // math.round would get wrong for negative half-way values
-    val qe = queryVec.map(x => java.math.BigDecimal.valueOf(x.toDouble * 1e6)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue)
+    val qe = quantizeVec(queryVec)
     val cb = spark.read.parquet(s"$path/codebook").collect()
     val m = cb.map(_.getAs[Int]("s")).max + 1
     // driver-side ADC table keyed by cid·m + s (collision-free: s < m)
@@ -1011,7 +984,7 @@ object Similarity {
     * the SOURCE table — a one-row pushed-down lookup, bounded like
     * [[annIvfIndexed]]'s — and delegated to [[annPqIndexedVec]]. Same
     * parameters as the build → results identical to [[annPq]]. */
-  def annPqIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def annPqIndexed(spark: SparkSession, path: String,
                    embeddings: DataFrame, idCol: String, embCol: String,
                    queryId: Long, k: Int): DataFrame = {
     val qRows = embeddings.where(col(idCol) === queryId)
@@ -1022,16 +995,9 @@ object Similarity {
       excludeVid = Some(queryId))
   }
 
-  private def readCodes(spark: org.apache.spark.sql.SparkSession,
-                        path: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("codes",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType))))
-    spark.read.schema(schema).parquet(s"$path/codes")
-  }
+  private def readCodes(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("vid", LongType),
+      StructField("codes", ArrayType(LongType))))).parquet(s"$path/codes")
 
   /** IVF-PQ: the canonical large-corpus ANN serving index — coarse
     * inverted cells ([[writeCellIndex]]'s assignment rule) with each
@@ -1061,34 +1027,40 @@ object Similarity {
                       path: String, coarseStride: Int = 100, m: Int = 8,
                       subDim: Int = 8, pqStride: Int = 50,
                       refineIters: Int = 0, attrCols: Seq[String] = Nil): Unit = {
-    val spark = embeddings.sparkSession
-    val qzPlan = embeddings.select(
-        col(idCol).as("vid") +: quantize(col(embCol)).as("qe") +:
-          attrCols.map(col): _*)
-      .withColumn("n2", dotQ(col("qe"), col("qe")))
     // refineIters > 0 stores the Lloyd-learned coarse quantizer
     // ([[kmeansRefine]]) instead of the raw stride sample — the probe
     // reads whatever codebook is stored, so format and pruning are
-    // identical either way ([[writeCellIndex]]'s contract, including
-    // its persist-during-refinement discipline)
-    val qz = if (refineIters > 0) qzPlan.persist() else qzPlan
-    try {
+    // identical either way ([[writeCellIndex]]'s contract)
+    refining(quantized(embeddings, col(idCol), col(embCol), attrCols),
+        refineIters) { qz =>
       refineCents(qz, centroidsOf(qz, coarseStride), refineIters)
         .write.mode("overwrite").parquet(s"$path/centroids")
-      writeIvfPqCodes(spark, qz, path, m, subDim, pqStride, attrCols)
-    } finally if (refineIters > 0) qz.unpersist()
+      writeIvfPqCodes(embeddings.sparkSession, qz, path, m, subDim, pqStride,
+        attrCols)
+    }
   }
 
-  private def writeIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
+  /** Run an index build over the quantized corpus `qz`, persisted for
+    * the build's scope only while a Lloyd refinement re-reads it (once
+    * per round plus the final assignment) — without it, `refineIters`
+    * = N re-scans and re-quantizes the corpus N+1 times. The build
+    * materializes everything before returning, so the cache is
+    * unpersisted here rather than left to CacheScope. */
+  private def refining(qz: DataFrame, refineIters: Int)(
+      build: DataFrame => Unit): Unit = {
+    val held = if (refineIters > 0) qz.persist() else qz
+    try build(held) finally if (refineIters > 0) held.unpersist()
+  }
+
+  private def writeIvfPqCodes(spark: SparkSession,
                               qz: DataFrame, path: String, m: Int,
                               subDim: Int, pqStride: Int,
                               attrCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val cents = spark.read.parquet(s"$path/centroids")
     // residual = vector − its cell's centroid, exact integer subtract;
     // persisted for the build's scope (codebook sample + encode both
     // read it), the writeCellIndex refinement pattern
-    val res = assignCells(qz, cents, attrCols)
+    val res = nearestCells(qz, cents, 1, attrCols)
       .join(broadcast(cents.select(col("cid"), col("ce"))), "cid")
       .select(col("vid") +: col("cid") +:
         zip_with(col("qe"), col("ce"), (x, y) => x - y).as("re") +:
@@ -1111,7 +1083,7 @@ object Similarity {
       // encode residuals: argmin quantized L2 per (vector, subspace),
       // ties to the smallest code — pqEncode's rule on the residual
       // frame, partial-agg absorbing the m·|codebook| candidate fan-out
-      res.crossJoin(broadcast(storedCb))
+      val codes = res.crossJoin(broadcast(storedCb))
         .select(Seq(col("vid"), col("cid"), col("s"), col("code"),
           l2Q(slice(col("re"), col("s") * subDim + 1, lit(subDim)),
             col("rse")).as("d")) ++ attrCols.map(col): _*)
@@ -1123,9 +1095,7 @@ object Similarity {
         .agg(transform(
           array_sort(collect_list(struct(col("s"), col("code")))),
           x => x.getField("code")).as("codes"))
-        .repartition(col("cid"))
-        .sortWithinPartitions("vid")
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/codes")
+      writeByCell(codes, "overwrite", s"$path/codes")
     } finally res.unpersist()
   }
 
@@ -1141,29 +1111,15 @@ object Similarity {
     * exchanges). Distances are squared L2 between the query's residual
     * and the candidate's RECONSTRUCTED residual in the shared cell —
     * ascending, smaller is nearer. */
-  def annIvfPqIndexedVec(spark: org.apache.spark.sql.SparkSession,
-                         path: String, queryVec: Seq[Float], k: Int,
-                         nprobe: Int = 2,
+  def annIvfPqIndexedVec(spark: SparkSession, path: String,
+                         queryVec: Seq[Float], k: Int, nprobe: Int = 2,
                          excludeVid: Option[Long] = None,
                          predicate: Option[Column] = None,
-                         attrFields: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
-    // same HALF_UP rounding as [[quantize]] (Spark's round), which
-    // math.round would get wrong for negative half-way values
-    val qe = queryVec.map(x => java.math.BigDecimal.valueOf(x.toDouble * 1e6)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue)
-    val qn2 = qe.map(v => v * v).sum
-    val qLit = typedlit(qe)
-    // nprobe cells WITH their centroids: the query's residual differs
-    // per cell, so the probe needs ce, not just cid
-    val probed = spark.read.parquet(s"$path/centroids")
-      .select(col("cid"), col("ce"),
-        cosineQNormed(qLit, col("ce"), lit(qn2), col("cn2")).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid").asc)
-      .limit(nprobe)
-      .select("cid", "ce").collect()
-    val qres = probed.map { r =>
-      r.getLong(0) -> qe.zip(r.getSeq[Long](1)).map { case (x, y) => x - y }
+                         attrFields: Seq[StructField] = Nil): DataFrame = {
+    val qe = quantizeVec(queryVec)
+    // the query's residual differs per probed cell
+    val qres = probeCentroids(spark, path, qe, nprobe).map { case (cid, ce) =>
+      cid -> qe.zip(ce).map { case (x, y) => x - y }
     }.toMap
     val cb = spark.read.parquet(s"$path/pqcb").collect()
     val m = cb.map(_.getAs[Int]("s")).max + 1
@@ -1200,13 +1156,11 @@ object Similarity {
     * only codes, so the query's float vector is a one-row pushed-down
     * lookup in the SOURCE table, then delegated. Same parameters as the
     * build → results mirror the declared oracle exactly. */
-  def annIvfPqIndexed(spark: org.apache.spark.sql.SparkSession,
-                      path: String, embeddings: DataFrame, idCol: String,
-                      embCol: String, queryId: Long, k: Int,
-                      nprobe: Int = 2,
+  def annIvfPqIndexed(spark: SparkSession, path: String,
+                      embeddings: DataFrame, idCol: String, embCol: String,
+                      queryId: Long, k: Int, nprobe: Int = 2,
                       predicate: Option[Column] = None,
-                      attrFields: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
+                      attrFields: Seq[StructField] = Nil): DataFrame = {
     val qRows = embeddings.where(col(idCol) === queryId)
       .select(col(embCol)).take(1)
     require(qRows.nonEmpty,
@@ -1216,39 +1170,30 @@ object Similarity {
       attrFields = attrFields)
   }
 
-  private def readIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
-                             path: String,
-                             attrFields: Seq[org.apache.spark.sql.types.StructField])
-      : DataFrame = {
+  private def readIvfPqCodes(spark: SparkSession, path: String,
+                             attrFields: Seq[StructField]): DataFrame =
     // Explicit schema: the cid PARTITION column must stay LongType so
     // the pruning predicate needs no cast (readCells discipline)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("codes",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType))) ++ attrFields ++ Seq(
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.LongType)))
-    spark.read.schema(schema).parquet(s"$path/codes")
-  }
+    spark.read.schema(StructType(Seq(StructField("vid", LongType),
+        StructField("codes", ArrayType(LongType))) ++ attrFields :+
+      StructField("cid", LongType))).parquet(s"$path/codes")
 
-  /** Nearest-centroid assignment of every vector in `qz` against a
-    * (small, broadcast) codebook: argmax quantized cosine, ties to the
-    * smallest cid — the rule shared by [[annIvf]], [[writeCellIndex]]
-    * and [[kmeansRefine]]. */
-  private def assignCells(qz: DataFrame, cents: DataFrame,
-                          attrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byVec = Window.partitionBy("vid")
-      .orderBy(col("ccos").desc, col("cid").asc)
-    val base = Seq(col("vid"), col("qe"), col("n2"), col("cid"))
-    qz.crossJoin(broadcast(cents))
-      .select(base ++ attrs.map(col) :+
-        cosineQNormed(col("qe"), col("ce"), col("n2"), col("cn2")).as("ccos"): _*)
-      .withColumn("rnk", row_number().over(byVec))
-      .where(col("rnk") === 1)
-      .select(base ++ attrs.map(col): _*)
+  /** THE assignment rule: each vector of the quantized frame `qz`
+    * ranks the (small, broadcast) codebook `cents` (cid, ce, cn2) by
+    * quantized cosine, ties to the smallest cid, and keeps its `n`
+    * nearest cells as (vid, qe, n2, cid, attrs…). At n = 1 this is the
+    * cell assignment every build, refinement, dedup and sample uses; at
+    * n = nprobe it is the probe of every frame-side query path, so
+    * stored, probed and deduped cells can never disagree.
+    * [[probeCentroids]] is the same rule for one driver-side vector. */
+  private def nearestCells(qz: DataFrame, cents: DataFrame, n: Int,
+                           attrs: Seq[String] = Nil): DataFrame = {
+    val base = Seq(col("vid"), col("qe"), col("n2"), col("cid")) ++
+      attrs.map(col)
+    topPer(qz.crossJoin(broadcast(cents)).select(base :+
+        cosineQNormed(col("qe"), col("ce"), col("n2"), col("cn2")).as("ccos"): _*),
+      "vid", col("ccos").desc, "cid", n)
+      .select(base: _*)
   }
 
   /** Lloyd (k-means) REFINEMENT of the coarse IVF codebook — turns the
@@ -1277,11 +1222,9 @@ object Similarity {
   def kmeansRefine(embeddings: DataFrame, idCol: String, embCol: String,
                    centroidStride: Int = 100, iters: Int = 1): DataFrame = {
     val qz = graft.CacheScope.persistTracked(
-      embeddings.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("qe"))
-        .withColumn("n2", dotQ(col("qe"), col("qe"))))
+      quantized(embeddings, col(idCol), col(embCol)))
     val cents = refineCents(qz, centroidsOf(qz, centroidStride), iters)
-    assignCells(qz, cents).select("vid", "cid")
+    nearestCells(qz, cents, 1).select("vid", "cid")
   }
 
   /** `iters` Lloyd rounds over an initial codebook — the loop body of
@@ -1291,7 +1234,7 @@ object Similarity {
                           iters: Int): DataFrame = {
     var cents = init
     for (_ <- 1 to iters) {
-      val means = assignCells(qz, cents)
+      val means = nearestCells(qz, cents, 1)
         .select(col("cid"), posexplode(col("qe")))
         .toDF("cid", "d", "v")
         .groupBy("cid", "d")
@@ -1319,42 +1262,34 @@ object Similarity {
     * returns identical results. */
   def writeCellIndex(embeddings: DataFrame, idCol: String, embCol: String,
                      path: String, centroidStride: Int = 100,
-                     refineIters: Int = 0, attrCols: Seq[String] = Nil): Unit = {
-    val qzPlan = embeddings.select(
-        col(idCol).as("vid") +: quantize(col(embCol)).as("qe") +:
-          attrCols.map(col): _*)
-      .withColumn("n2", dotQ(col("qe"), col("qe")))
-    // Refinement re-reads qz once per assignment round plus the final
-    // cells pass — persist it for the build's scope (unpersisted in the
-    // finally: this method materializes everything it needs before
-    // returning, unlike the lazy kmeansRefine, which defers to
-    // CacheScope). Without this, refineIters = N re-scans and
-    // re-quantizes the full corpus N+1 times.
-    val qz = if (refineIters > 0) qzPlan.persist() else qzPlan
-    try {
+                     refineIters: Int = 0, attrCols: Seq[String] = Nil): Unit =
+    refining(quantized(embeddings, col(idCol), col(embCol), attrCols),
+        refineIters) { qz =>
       // refineIters > 0 stores a Lloyd-refined codebook (the learned
       // quantizer [[kmeansRefine]] computes) instead of the raw stride
       // sample; the probe paths read whatever codebook is stored, so the
       // index format and pruning behavior are identical either way.
-      val cents = refineCents(qz, centroidsOf(qz, centroidStride), refineIters)
-      cents.write.mode("overwrite").parquet(s"$path/centroids")
+      refineCents(qz, centroidsOf(qz, centroidStride), refineIters)
+        .write.mode("overwrite").parquet(s"$path/centroids")
       // Assign against the codebook just MATERIALIZED: re-evaluating the
       // lazy refinement plan here would recompute every Lloyd round a
       // second time, and reading back also guarantees stored == used.
-      // assignCells is THE assignment rule (argmax quantized cosine,
-      // ties to smallest cid) shared with annIvf/kmeansRefine — the
-      // stored index must never desync from the in-memory assignment.
       val stored = embeddings.sparkSession.read.parquet(s"$path/centroids")
       // attrCols ride the cells as FILTERABLE columns — the deployment
       // shape of attribute-constrained ("filtered") ANN: a predicate on
       // them pushes into the pruned cell scan as an ordinary parquet
       // filter, so "neighbors among label = X" never rescans the corpus
-      assignCells(qz, stored, attrCols)
-        .repartition(col("cid"))
-        .sortWithinPartitions("vid")
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/cells")
-    } finally if (refineIters > 0) qz.unpersist()
-  }
+      writeByCell(nearestCells(qz, stored, 1, attrCols), "overwrite",
+        s"$path/cells")
+    }
+
+  /** The cid-partitioned store layout every cell and IVF-PQ code store
+    * is written in: repartitioned on cid so each writer task holds one
+    * cell, vid-sorted within files for footer skipping, hive `cid=`
+    * directories that every probe path's partition pruning reads. */
+  private def writeByCell(df: DataFrame, mode: String, out: String): Unit =
+    df.repartition(col("cid")).sortWithinPartitions("vid")
+      .write.mode(mode).partitionBy("cid").parquet(out)
 
   /** INCREMENTAL cell-index append — the ANN-index analog of
     * [[graft.sources.BucketedMirror.appendOnce]]: a fresh embedding
@@ -1384,18 +1319,15 @@ object Similarity {
                       path: String, batchId: Long): Boolean = {
     val spark = embeddings.sparkSession
     graft.sources.StoreCompaction.appendOnce(spark, path, batchId) {
-      val qz = embeddings.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("qe"))
-        .withColumn("n2", dotQ(col("qe"), col("qe")))
       // assign against the codebook AS STORED (stored == used, the
       // writeCellIndex invariant — a batch must never see a codebook
-      // the index's existing cells were not assigned with)
-      val stored = spark.read.parquet(s"$path/centroids")
-      // local persist (NOT CacheScope: the write below materializes
-      // eagerly inside this call, so the cache's life is this method —
-      // a scoped release here would wrongly drop an enclosing query's
-      // tracked frames)
-      val assigned = assignCells(qz, stored)
+      // the index's existing cells were not assigned with). Local
+      // persist (NOT CacheScope: the write below materializes eagerly
+      // inside this call, so the cache's life is this method — a scoped
+      // release here would wrongly drop an enclosing query's tracked
+      // frames)
+      val assigned = nearestCells(quantized(embeddings, col(idCol),
+          col(embCol)), spark.read.parquet(s"$path/centroids"), 1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // vid-level anti join against the index BEFORE appending: a
       // re-delivered document (same vid under a NEW batchId — the
@@ -1405,18 +1337,9 @@ object Similarity {
       // assignment against the frozen codebook puts a replayed vid in
       // the same cell as its stored copy), so the guard scans only the
       // partitions the append would touch anyway.
-      val cids = assigned.select("cid").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val novel =
-        if (cids.isEmpty) assigned
-        else assigned.join(
-          readCells(spark, path).where(col("cid").isin(cids: _*))
-            .select("vid"),
-          Seq("vid"), "left_anti")
-      novel
-        .repartition(col("cid"))
-        .sortWithinPartitions("vid")
-        .write.mode("append").partitionBy("cid").parquet(s"$path/cells")
+      writeByCell(assigned.join(probedCells(spark, path, assigned)
+          .select("vid"), Seq("vid"), "left_anti"),
+        "append", s"$path/cells")
       assigned.unpersist(blocking = false)
     }
   }
@@ -1444,27 +1367,12 @@ object Similarity {
   def tagNearIndex(batch: DataFrame, idCol: String, embCol: String,
                    path: String, threshold: Double,
                    nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
     val qz = graft.CacheScope.persistTracked(
-      batch.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("qe"))
-        .withColumn("n2", dotQ(col("qe"), col("qe"))))
-    val cents = spark.read.parquet(s"$path/centroids")
-    val byVec = Window.partitionBy("vid")
-      .orderBy(col("ccos").desc, col("cid").asc)
-    val probes = qz.crossJoin(broadcast(cents))
-      .select(col("vid"), col("qe"), col("n2"), col("cid"),
-        cosineQNormed(col("qe"), col("ce"), col("n2"), col("cn2")).as("ccos"))
-      .withColumn("rnk", row_number().over(byVec))
-      .where(col("rnk") <= nprobe)
-      .select(col("vid"), col("qe"), col("n2"), col("cid"))
-    // batch-sized driver collect of the CELL SET (bounded by the
-    // codebook, not the batch): the literal is what Catalyst prunes on
-    val cids = probes.select("cid").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val stored = readCells(spark, path).where(col("cid").isin(cids: _*))
-    val dup = probes.as("b").join(stored.as("s"),
+      quantized(batch, col(idCol), col(embCol)))
+    val probes = nearestCells(qz, spark.read.parquet(s"$path/centroids"),
+      nprobe)
+    val dup = probes.as("b").join(probedCells(spark, path, probes).as("s"),
         col("b.cid") === col("s.cid") && col("b.vid") =!= col("s.vid"))
       .where(cosineQNormed(col("b.qe"), col("s.qe"),
         col("b.n2"), col("s.n2")) >= threshold)
@@ -1483,61 +1391,73 @@ object Similarity {
     * prunes the other directories before any IO (PlanSpec pins
     * PartitionFilters on this plan). Driver-side work is bounded by the
     * codebook size and nprobe, never by the corpus. */
-  def annIvfIndexedVec(spark: org.apache.spark.sql.SparkSession, path: String,
+  def annIvfIndexedVec(spark: SparkSession, path: String,
                        queryVec: Seq[Float], k: Int, nprobe: Int = 2,
                        excludeVid: Option[Long] = None,
                        predicate: Option[Column] = None,
-                       attrFields: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
-    // same HALF_UP rounding as [[quantize]] (Spark's round), which
-    // math.round would get wrong for negative half-way values
-    val qe = queryVec.map(x => java.math.BigDecimal.valueOf(x.toDouble * 1e6)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue)
-    val qn2 = qe.map(v => v * v).sum
-    val cents = spark.read.parquet(s"$path/centroids")
-    val qLit = typedlit(qe)
-    val qcids = cents
-      .select(col("cid"),
-        cosineQNormed(qLit, col("ce"), lit(qn2), col("cn2")).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid").asc)
-      .limit(nprobe)
-      .select("cid").collect().map(_.getLong(0)).toSeq
-    val cells = readCells(spark, path, attrFields)
+                       attrFields: Seq[StructField] = Nil): DataFrame =
+    probeCellIndex(spark, path, quantizeVec(queryVec), k, nprobe, excludeVid,
+      predicate, attrFields)
+
+  /** The single-vector probe behind [[annIvfIndexedVec]] and
+    * [[annIvfIndexed]], for an already-quantized query `qe`. */
+  private def probeCellIndex(spark: SparkSession, path: String,
+      qe: Seq[Long], k: Int, nprobe: Int,
+      excludeVid: Option[Long], predicate: Option[Column],
+      attrFields: Seq[StructField]): DataFrame = {
+    val qcids = probeCentroids(spark, path, qe, nprobe).map(_._1)
     // FILTERED ANN: the attribute predicate applies INSIDE the pruned
     // cell scan — cid partition pruning AND the attr filter both reach
     // the parquet reader (PlanSpec pins PartitionFilters + PushedFilters
     // together on this plan), and the top-k stays fused. The alternative
-    // — top-k first, filter after — silently under-fills k.
-    val probed = predicate.foldLeft(
-      cells.where(col("cid").isin(qcids: _*)))((df, p) => df.where(p))
+    // — top-k first, filter after — silently under-fills k. The query
+    // row itself is NOT subject to it: "neighbors of q among label = X"
+    // doesn't require q to carry X.
+    val probed = predicate.foldLeft(readCells(spark, path, attrFields)
+      .where(col("cid").isin(qcids: _*)))((df, p) => df.where(p))
     excludeVid.fold(probed)(v => probed.where(col("vid") =!= v))
-      .select(col("vid"),
-        cosineQNormed(col("qe"), qLit, col("n2"), lit(qn2)).as("cosine"))
+      .select(col("vid"), cosineQNormed(col("qe"), typedlit(qe), col("n2"),
+        lit(qe.map(v => v * v).sum)).as("cosine"))
       .orderBy(col("cosine").desc, col("vid").asc)
       .limit(k)
   }
 
-  private def readCells(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        attrFields: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
+  /** The `nprobe` cells one driver-side query vector `qe` probes, with
+    * their centroids: [[nearestCells]]'s rule (argmax quantized cosine,
+    * ties to the smallest cid) ranked over the stored codebook and
+    * collected — driver-side work bounded by nprobe, never the corpus. */
+  private def probeCentroids(spark: SparkSession, path: String,
+      qe: Seq[Long], nprobe: Int): Seq[(Long, Seq[Long])] =
+    spark.read.parquet(s"$path/centroids")
+      .select(col("cid"), col("ce"), cosineQNormed(typedlit(qe), col("ce"),
+        lit(qe.map(v => v * v).sum), col("cn2")).as("ccos"))
+      .orderBy(col("ccos").desc, col("cid").asc)
+      .limit(nprobe)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toSeq
+
+  private def readCells(spark: SparkSession, path: String,
+                        attrFields: Seq[StructField] = Nil): DataFrame = {
     // Explicit schema so the cid PARTITION column is LongType (inference
     // would shrink it to int and force a cast into the pruning predicate).
     // attrFields name any attribute columns the index was built with
     // (writeCellIndex attrCols) that this read needs — parquet resolves
     // fields by name, so an attr-carrying index read without them simply
     // prunes the attrs at the scan.
-    val cellSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vid",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("qe",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)),
-      org.apache.spark.sql.types.StructField("n2",
-        org.apache.spark.sql.types.LongType)) ++ attrFields ++ Seq(
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.LongType)))
-    spark.read.schema(cellSchema).parquet(s"$path/cells")
+    spark.read.schema(StructType(Seq(StructField("vid", LongType),
+        StructField("qe", ArrayType(LongType)), StructField("n2", LongType)) ++
+        attrFields :+ StructField("cid", LongType)))
+      .parquet(s"$path/cells")
+  }
+
+  /** The stored cells of every cell a frame of `probes` (…, cid) names:
+    * the distinct cids collect to the driver (bounded by the codebook,
+    * not the batch) as a LITERAL `cid IN (…)` partition predicate, so
+    * Catalyst prunes every other cell directory before any IO. */
+  private def probedCells(spark: SparkSession, path: String,
+                          probes: DataFrame): DataFrame = {
+    val cids = probes.select("cid").distinct()
+      .collect().map(_.getLong(0)).toSeq
+    readCells(spark, path).where(col("cid").isin(cids: _*))
   }
 
   /** BATCH top-k probe of a [[writeCellIndex]] index with a QUERY FRAME
@@ -1557,36 +1477,18 @@ object Similarity {
     * convention). Output: (query_id, rank, vid, cosine). */
   def annIvfIndexedBatch(queries: DataFrame, idCol: String, embCol: String,
                          path: String, k: Int, nprobe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = queries.sparkSession
     val qz = graft.CacheScope.persistTracked(
-      queries.select(col(idCol).as("query_id"),
-          quantize(col(embCol)).as("qv"))
-        .withColumn("qn2", dotQ(col("qv"), col("qv"))))
-    val cents = spark.read.parquet(s"$path/centroids")
-    val byVec = Window.partitionBy("query_id")
-      .orderBy(col("ccos").desc, col("cid").asc)
-    val probes = qz.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("qv"), col("qn2"), col("cid"),
-        cosineQNormed(col("qv"), col("ce"), col("qn2"), col("cn2")).as("ccos"))
-      .withColumn("rnk", row_number().over(byVec))
-      .where(col("rnk") <= nprobe)
-      .select("query_id", "qv", "qn2", "cid")
-    // codebook-bounded driver collect: the literal Catalyst prunes on
-    val cids = probes.select("cid").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val stored = readCells(spark, path).where(col("cid").isin(cids: _*))
-    val byQ = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vid").asc)
-    probes.as("q").join(stored.as("s"),
-        col("q.cid") === col("s.cid") && col("s.vid") =!= col("q.query_id"))
-      .select(col("q.query_id"), col("s.vid"),
-        cosineQNormed(col("q.qv"), col("s.qe"),
-          col("q.qn2"), col("s.n2")).as("cosine"))
-      .withColumn("rank", row_number().over(byQ))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("vid"), col("cosine"))
+      quantized(queries, col(idCol), col(embCol)))
+    val probes = nearestCells(qz, spark.read.parquet(s"$path/centroids"),
+      nprobe)
+    val pairs = probes.as("q").join(probedCells(spark, path, probes).as("s"),
+        col("q.cid") === col("s.cid") && col("s.vid") =!= col("q.vid"))
+      .select(col("q.vid").as("query_id"), col("s.vid"),
+        cosineQNormed(col("q.qe"), col("s.qe"),
+          col("q.n2"), col("s.n2")).as("cosine"))
+    topPer(pairs, "query_id", col("cosine").desc, "vid", k, "rank")
+      .select("query_id", "rank", "vid", "cosine")
   }
 
   /** By-id convenience probe: looks the query row up IN THE INDEX (a
@@ -1597,37 +1499,16 @@ object Similarity {
     * query cost still scales with file COUNT, unlike
     * [[annIvfIndexedVec]]), then delegates. Prefer the vector variant
     * on a serving path. */
-  def annIvfIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def annIvfIndexed(spark: SparkSession, path: String,
                     queryId: Long, k: Int, nprobe: Int = 2,
                     predicate: Option[Column] = None,
-                    attrFields: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
-    val cells = readCells(spark, path, attrFields)
-    val cents = spark.read.parquet(s"$path/centroids")
-    val qRows = cells.where(col("vid") === queryId)
-      .select(col("qe"), col("n2")).take(1)
+                    attrFields: Seq[StructField] = Nil): DataFrame = {
+    val qRows = readCells(spark, path).where(col("vid") === queryId)
+      .select(col("qe")).take(1)
     require(qRows.nonEmpty,
       s"query vector $queryId is not in the cell index at $path")
-    val qe = qRows(0).getSeq[Long](0)
-    val qn2 = qRows(0).getLong(1)
-    val qLit = typedlit(qe)
-    val qcids = cents
-      .select(col("cid"),
-        cosineQNormed(qLit, col("ce"), lit(qn2), col("cn2")).as("ccos"))
-      .orderBy(col("ccos").desc, col("cid").asc)
-      .limit(nprobe)
-      .select("cid").collect().map(_.getLong(0)).toSeq
-    // predicate inside the pruned scan — [[annIvfIndexedVec]]'s
-    // filtered-ANN contract (the query row itself is NOT subject to it:
-    // "neighbors of q among label = X" doesn't require q to carry X)
-    val probed = predicate.foldLeft(
-      cells.where(col("cid").isin(qcids: _*) && col("vid") =!= queryId))(
-      (df, p) => df.where(p))
-    probed
-      .select(col("vid"),
-        cosineQNormed(col("qe"), qLit, col("n2"), lit(qn2)).as("cosine"))
-      .orderBy(col("cosine").desc, col("vid").asc)
-      .limit(k)
+    probeCellIndex(spark, path, qRows(0).getSeq[Long](0), k, nprobe,
+      Some(queryId), predicate, attrFields)
   }
 
   /** Batch ANN recall@k over a SAMPLE of query vectors — the index-QA
@@ -1646,40 +1527,23 @@ object Similarity {
                 queryIds: Seq[Long], k: Int,
                 bands: Int = 8, planes: Int = 16,
                 centroidStride: Int = 100, nprobe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val qz = graft.CacheScope.persistTracked(
-      embeddings.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("qe"))
-        .withColumn("n2", dotQ(col("qe"), col("qe")))
-        .withColumn("bb", expr(s"rhplsh(qe, $bands, $planes)")))
-    val qset = broadcast(qz.where(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("qid"), col("qe").as("qv"),
-        col("n2").as("qn2"), col("bb").as("qbb")))
-    def topk(scored: DataFrame): DataFrame = {
-      val w = Window.partitionBy("qid")
-        .orderBy(col("cosine").desc, col("vid").asc)
-      scored.withColumn("rn", row_number().over(w))
-        .where(col("rn") <= k).select("qid", "vid")
-    }
+      quantized(embeddings, col(idCol), col(embCol))
+        .withColumn("bb", lshBuckets(embeddings, "qe", bands, planes)))
+    val queries = qz.where(col("vid").isin(queryIds: _*))
+    val qset = broadcast(asQuery(queries, "qid", col("bb").as("qbb")))
+    def topk(scored: DataFrame): DataFrame =
+      topPer(scored.select(col("qid"), col("vid"), pairCosine), "qid",
+        col("cosine").desc, "vid", k).select("qid", "vid")
     val pairs = qz.crossJoin(qset).where(col("vid") =!= col("qid"))
-    def scoreQ(df: DataFrame): DataFrame = df.select(col("qid"), col("vid"),
-      cosineQNormed(col("qe"), col("qv"), col("n2"), col("qn2")).as("cosine"))
-    val bf = topk(scoreQ(pairs))
-    val lsh = topk(scoreQ(pairs.where(
-      exists(zip_with(col("bb"), col("qbb"), (x, y) => x === y), b => b))))
+    val bf = topk(pairs)
+    val lsh = topk(pairs.where(
+      exists(zip_with(col("bb"), col("qbb"), (x, y) => x === y), b => b)))
     val cents = centroidsOf(qz, centroidStride)
-    val cells = assignCells(qz, cents)
-    val qrank = Window.partitionBy("qid")
-      .orderBy(col("ccos").desc, col("cid").asc)
-    val qcells = broadcast(qset.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qv"), col("qn2"), col("cid"),
-        cosineQNormed(col("qv"), col("ce"), col("qn2"), col("cn2")).as("ccos"))
-      .withColumn("rnk", row_number().over(qrank))
-      .where(col("rnk") <= nprobe)
-      .select("qid", "qv", "qn2", "cid"))
-    val ivf = topk(scoreQ(
-      cells.join(qcells, "cid").where(col("vid") =!= col("qid"))))
+    val qcells = broadcast(
+      asQuery(nearestCells(queries, cents, nprobe), "qid", col("cid")))
+    val ivf = topk(nearestCells(qz, cents, 1).join(qcells, "cid")
+      .where(col("vid") =!= col("qid")))
     def hitsOf(m: String, cand: DataFrame): DataFrame =
       cand.join(bf, Seq("qid", "vid"))
         .groupBy("qid").agg(count(lit(1)).as("hits"))
@@ -1723,24 +1587,15 @@ object Similarity {
   def binaryRecallCurve(embeddings: DataFrame, idCol: String, embCol: String,
                         queryIds: Seq[Long], k: Int,
                         coarseKs: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(coarseKs.nonEmpty, "binaryRecallCurve: at least one coarseK")
     require(coarseKs.forall(_ >= k),
       s"binaryRecallCurve: every coarseK must be >= k=$k")
     val qz = graft.CacheScope.persistTracked(
-      embeddings.select(col(idCol).cast("long").as("vid"),
-          quantize(col(embCol)).as("qe"))
-        .withColumn("n2", dotQ(col("qe"), col("qe"))))
-    val qset = broadcast(qz.where(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("qid"), col("qe").as("qv"), col("n2").as("qn2")))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine").desc, col("vid").asc)
-    val exact = qz.crossJoin(qset).where(col("vid") =!= col("qid"))
-      .select(col("qid"), col("vid"),
-        cosineQNormed(col("qe"), col("qv"), col("n2"), col("qn2"))
-          .as("cosine"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k).select("qid", "vid")
+      quantized(embeddings, col(idCol).cast("long"), col(embCol)))
+    val qset = broadcast(asQuery(qz.where(col("vid").isin(queryIds: _*)), "qid"))
+    val exact = topPer(qz.crossJoin(qset).where(col("vid") =!= col("qid"))
+        .select(col("qid"), col("vid"), pairCosine),
+      "qid", col("cosine").desc, "vid", k).select("qid", "vid")
     val codes = graft.CacheScope.persistTracked(
       binarize1Bit(embeddings, col(idCol), col(embCol)))
     val coarse = hammingTopKCore(codes,
@@ -1774,6 +1629,35 @@ object Similarity {
         .where(col("__n") <= maxBucket).select("band", "bucket"),
       Seq("band", "bucket"))
 
+  /** The scored LSH candidate pairs behind [[knnGraph]] and
+    * [[nearDupPairs]]: (left, right, cosine) for every distinct pair
+    * sharing a bucket in ANY band with `keep(x.vid, y.vid)`. The
+    * per-band bucket self-join shuffles on uniform (band, bucket)
+    * keys, never all-pairs. The quantized base is persisted because
+    * the candidate join consumes it three times — persist, not
+    * localCheckpoint: checkpoint blocks don't survive executor loss,
+    * lineage recomputation does (see Dedup.ngramJaccard for the
+    * cache-lifetime trade-off; released via CacheScope). */
+  private def lshPairs(embeddings: DataFrame, idCol: String, embCol: String,
+      bands: Int, planes: Int, maxBucket: Int,
+      keep: (Column, Column) => Column, left: String,
+      right: String): DataFrame = {
+    val base = graft.CacheScope.persistTracked(
+      quantized(embeddings, col(idCol), col(embCol))
+        .withColumn("bb", lshBuckets(embeddings, "qe", bands, planes)))
+    val buckets = capBuckets(base.select(col("vid"),
+      posexplode(col("bb")).as(Seq("band", "bucket"))), maxBucket)
+    buckets.as("x").join(buckets.as("y"),
+        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+          keep(col("x.vid"), col("y.vid")))
+      .select(col("x.vid").as(left), col("y.vid").as(right))
+      .distinct()
+      .join(base.as("a"), col(left) === col("a.vid"))
+      .join(base.as("b"), col(right) === col("b.vid"))
+      .select(col(left), col(right),
+        cosineQNormed(col("a.qe"), col("b.qe"), col("a.n2"), col("b.n2")).as("cosine"))
+  }
+
   /** Approximate k-NN GRAPH: for EVERY vector, its `k` most similar
     * neighbours among LSH band-bucket candidates — the batch
     * construction behind semantic clustering / diversity sampling of a
@@ -1788,75 +1672,37 @@ object Similarity {
     * [[graft.ext.Dedup.minhashLsh]]; default uncapped. */
   def knnGraph(embeddings: DataFrame, idCol: String, embCol: String,
                k: Int, bands: Int = 8, planes: Int = 16,
-               maxBucket: Int = Int.MaxValue): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = graft.CacheScope.persistTracked(
-      embeddings.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("qe"))
-        .withColumn("n2", dotQ(col("qe"), col("qe")))
-        .withColumn("bb", lshBuckets(embeddings, "qe", bands, planes)))
-    val buckets = capBuckets(base.select(col("vid"),
-      posexplode(col("bb")).as(Seq("band", "bucket"))), maxBucket)
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.vid") =!= col("y.vid"))
-      .select(col("x.vid").as("src"), col("y.vid").as("dst"))
-      .distinct()
-    val bySrc = Window.partitionBy("src")
-      .orderBy(col("cosine").desc, col("dst").asc)
-    cand
-      .join(base.as("a"), col("src") === col("a.vid"))
-      .join(base.as("b"), col("dst") === col("b.vid"))
-      .select(col("src"), col("dst"),
-        cosineQNormed(col("a.qe"), col("b.qe"), col("a.n2"), col("b.n2")).as("cosine"))
-      .withColumn("rn", row_number().over(bySrc))
-      .where(col("rn") <= k)
-  }
+               maxBucket: Int = Int.MaxValue): DataFrame =
+    topPer(lshPairs(embeddings, idCol, embCol, bands, planes, maxBucket,
+        _ =!= _, "src", "dst"),
+      "src", col("cosine").desc, "dst", k, "rn")
 
   /** Embedding near-dup candidates: top-`k` most-cosine-similar pairs
     * among band-bucket collisions (pairs sharing a bucket in ANY band).
     * Candidates come only from the per-band bucket self-join — shuffles
     * on uniform (band, bucket) keys, never all-pairs; with 16 planes per
     * band the expected in-bucket join is O(bands · n²/2^16) vs the old
-    * single-band 4-plane O(n²/2^4). The quantized base is persisted
-    * because the candidate join consumes it three times. `maxBucket`
+    * single-band 4-plane O(n²/2^4). `maxBucket`
     * caps the residual quadratic hazard — a cluster of identical
     * embeddings collapses into one bucket per band regardless of the
     * plane count; same guard and trade as
     * [[graft.ext.Dedup.minhashLsh]]; default uncapped. */
   def nearDupPairs(embeddings: DataFrame, idCol: String, embCol: String,
                    k: Int, bands: Int = 8, planes: Int = 16,
-                   maxBucket: Int = Int.MaxValue): DataFrame = {
-    // persist, not localCheckpoint — checkpoint blocks don't survive
-    // executor loss; lineage recomputation does (see Dedup.ngramJaccard
-    // for the cache-lifetime trade-off; released via CacheScope)
-    val base = graft.CacheScope.persistTracked(
-      embeddings.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("qe"))
-        .withColumn("n2", dotQ(col("qe"), col("qe")))
-        .withColumn("bb", lshBuckets(embeddings, "qe", bands, planes)))
-    val buckets = capBuckets(base.select(col("vid"),
-      posexplode(col("bb")).as(Seq("band", "bucket"))), maxBucket)
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.vid") < col("y.vid"))
-      .select(col("x.vid").as("id_a"), col("y.vid").as("id_b"))
-      .distinct()
-    cand
-      .join(base.as("a"), col("id_a") === col("a.vid"))
-      .join(base.as("b"), col("id_b") === col("b.vid"))
-      .select(col("id_a"), col("id_b"),
-        cosineQNormed(col("a.qe"), col("b.qe"), col("a.n2"), col("b.n2")).as("cosine"))
+                   maxBucket: Int = Int.MaxValue): DataFrame =
+    lshPairs(embeddings, idCol, embCol, bands, planes, maxBucket, _ < _,
+        "id_a", "id_b")
       .orderBy(col("cosine").desc, col("id_a").asc, col("id_b").asc)
       .limit(k)
-  }
 
   /** SemDeDup-style SEMANTIC dedup — the embedding-space analog of
     * [[graft.ext.Dedup.keepRepresentatives]]: drop every document whose
     * embedding is within `threshold` cosine of an EARLIER (smaller-id)
     * document in the same coarse IVF cell, keep everything else. Cells
-    * come from THE shared assignment rule ([[assignCells]] over the
-    * stride codebook — stored == probed == deduped), so the pair search
+    * come from THE shared assignment rule ([[nearestCells]] over the
+    * stride codebook — the rule [[writeCellIndex]] stores and every
+    * probe ranks with, so over the same codebook the deduped cells ARE
+    * the stored and probed ones), so the pair search
     * is blocked per cell instead of corpus-wide: the self-join shuffles
     * on the cell id and each cell's candidate set is ~stride vectors,
     * never data×data. The keep rule is keep-first (a doc survives iff
@@ -1879,7 +1725,7 @@ object Similarity {
     * quadratic. CAVEAT when the cap bites, dedup is silently DISABLED
     * inside that cell (all members kept) — on a skewed corpus whose
     * dominant cluster exceeds the cap, audit cell sizes first
-    * (`assignCells` via [[cellBalanced]]'s grouping, or
+    * ([[cellBalanced]]'s grouping, or
     * `cells.groupBy("cid").count()`) and either refine the codebook
     * ([[kmeansRefine]] splits dense regions) or raise `maxCell`
     * deliberately; the cap trades per-cell recall for a bounded worst
@@ -1889,12 +1735,10 @@ object Similarity {
                threshold: Double, centroidStride: Int = 100,
                maxCell: Int = 4096): DataFrame = {
     val qz = graft.CacheScope.persistTracked(
-      embeddings.select(col(idCol).as("vid"),
-          quantize(col(embCol)).as("qe"))
-        .withColumn("n2", dotQ(col("qe"), col("qe"))))
+      quantized(embeddings, col(idCol), col(embCol)))
     // consumed three times (both pair sides + the keep anti-join)
     val cells = graft.CacheScope.persistTracked(
-      assignCells(qz, centroidsOf(qz, centroidStride)))
+      nearestCells(qz, centroidsOf(qz, centroidStride), 1))
     val eligible =
       if (maxCell == Int.MaxValue) cells
       else {
@@ -1927,17 +1771,15 @@ object Similarity {
     * the cell is the group): the corpus-curation move that flattens
     * over-represented semantic regions (boilerplate clusters, template
     * farms) instead of over-represented DOMAINS. Assignment is the
-    * shared [[assignCells]] rule; the kept n per cell are the smallest
+    * shared [[nearestCells]] rule; the kept n per cell are the smallest
     * seeded-hash ranks, deterministic and re-drawable, with the
     * rank<=n predicate pushing into WindowGroupLimit (bounded buffers,
     * no whole-cell sorts). Output: (idCol, cid). */
   def cellBalanced(embeddings: DataFrame, idCol: String, embCol: String,
                    n: Int, centroidStride: Int = 100,
                    seed: String = "cell0"): DataFrame = {
-    val qz = embeddings.select(col(idCol).as("vid"),
-        quantize(col(embCol)).as("qe"))
-      .withColumn("n2", dotQ(col("qe"), col("qe")))
-    val cells = assignCells(qz, centroidsOf(qz, centroidStride))
+    val qz = quantized(embeddings, col(idCol), col(embCol))
+    val cells = nearestCells(qz, centroidsOf(qz, centroidStride), 1)
       .select(col("vid"), col("cid"))
     Sampling.capPerGroup(cells, col("cid"), col("vid"), n, seed)
       .select(col("vid").as(idCol), col("cid"))

@@ -27,6 +27,8 @@ class CacheHygieneSpec extends SparkSpec {
     "pb",  // packBestFit's rank frame + packSequences' ranged frame
     "pm",  // materializeAtomicBins over packBestFit's rank frame
     "vkm", "vr",
+    "vbq", // annIvfIndexedBatch persists the quantized query frame
+    "sdd", // semDedup persists the quantized frame and its cells
     "hmx", // tagNearB1Codes persists the batch codes
     "cdc", // capped ngramContamination persists the exploded + capped shingle frames
     "hrc") // binaryRecallAtK persists qz and codes

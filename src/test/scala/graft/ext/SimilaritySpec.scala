@@ -206,6 +206,37 @@ class SimilaritySpec extends SparkSpec {
         threshold = 0.95, centroidStride = 4, maxCell = 3)
       .as[Long].collect().toSet
     assert(capped == (0L to 7L).toSet)
+
+    // The tie-break is one rule on every path: the stored cell, the
+    // frame probe (window ranking) and the vector probe (driver-side
+    // ranking) all put vector 3 in the smaller cid, 0 = {0, 1, 2, 3}.
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-tie").toString
+    Similarity.writeCellIndex(docs, "vec_id", "embedding", root,
+      centroidStride = 4)
+    assert(spark.read.parquet(s"$root/cells").where($"vid" === 3L)
+      .select("cid").collect().map(_.get(0).toString).toSeq == Seq("0"))
+    val batch = Similarity.annIvfIndexedBatch(docs.where($"vec_id" === 3L),
+        "vec_id", "embedding", root, k = 8, nprobe = 1)
+      .select("vid").as[Long].collect().toSet
+    assert(batch == Set(0L, 1L, 2L), s"batch probe left cell 0: $batch")
+    val byVec = Similarity.annIvfIndexedVec(spark, root,
+        Seq(0.7f, 0.7f, 0f, 0f), k = 8, nprobe = 1)
+      .select("vid").as[Long].collect().toSet
+    assert(byVec == Set(0L, 1L, 2L, 3L), s"vector probe left cell 0: $byVec")
+    graft.CacheScope.release()
+  }
+
+  test("quantizeVec equals Spark's quantize, negative half-way values included") {
+    // ±2^-7 and ±3·2^-7 scale to exact half-way points (±7812.5,
+    // ±23437.5): HALF_UP rounds -7812.5 to -7813, where math.round
+    // would give -7812
+    val v = Seq(-0.0078125f, 0.0078125f, -0.0234375f, 0.0234375f,
+      -0.7f, 0.3f, 0f, -5e-7f, 5e-7f, -1.5f)
+    val viaSpark = Seq(v.toArray).toDF("e")
+      .select(Similarity.quantize($"e")).head().getSeq[Long](0)
+    assert(Similarity.quantizeVec(v) == viaSpark)
+    assert(Similarity.quantizeVec(Seq(-0.0078125f)) == Seq(-7813L))
+    assert(math.round(-0.0078125f.toDouble * 1e6) == -7812L)
   }
 
   test("semDedup DEFAULT cap is bounded: a degenerate codebook skips, not quadratic") {
