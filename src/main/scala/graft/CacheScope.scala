@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** Query-scoped cache tracking. Several operators persist an
   * intermediate frame that multiple downstream branches consume
-  * ([[graft.ext.Dedup.ngramJaccard]], [[graft.ext.Dedup.minhashLsh]],
+  * ([[graft.ext.Dedup.minhashLsh]],
   * [[graft.ext.Similarity.knnGraph]],
   * [[graft.ext.Similarity.nearDupPairs]],
   * [[graft.ext.Packing.packSequences]],

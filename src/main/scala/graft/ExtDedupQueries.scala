@@ -90,7 +90,7 @@ object ExtDedupQueries {
       val shingles = graft.CacheScope.persistTracked(
         Dedup.hashedShingles(docs, col("text"), col("doc_id"), k = 3))
       val nearDrop = Dedup.ngramJaccardFrom(shingles, minJaccard = 0.2,
-          maxDocFreq = Int.MaxValue, prePersisted = true)
+          maxDocFreq = Int.MaxValue)
         .select(col("doc_b").as("nr_id")).distinct()
         .select(col("nr_id"), lit(true).as("__nr"))
       val semDrop = Similarity.decontaminate(

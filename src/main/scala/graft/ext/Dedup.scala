@@ -93,6 +93,27 @@ object Dedup {
         "n_shared * 1000 div n_shingles as shared_pm")
   }
 
+  /** The per-document DISTINCT hashed k-shingle stream (doc_id, n, s)
+    * that [[ngramJaccard]] and [[sharedShingleStats]] are both built on:
+    * one row per (document, distinct shingle), `s` the shingle's 60-bit
+    * hash and `n` the document's distinct-shingle count (its set size,
+    * taken on the exact strings before the explode). Exposed so the
+    * `cns` census can build and persist it once for both shingle tiers.
+    * Contract: `id` must be unique per input row (as in
+    * [[minhashSignatures]]); rows sharing an id would pair as one
+    * document with each row's own `n`. */
+  private[graft] def hashedShingles(df: DataFrame, content: Column,
+                                    id: Column, k: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    // explode an expression, not the bare `__sh` column: for a column Catalyst
+    // infers `size(__sh) > 0` and pushes it below, re-running the shingling
+    df.select(id.as("doc_id"),
+        array_distinct(Text.shingles(content, k)).as("__sh"))
+      .select(col("doc_id"), size(col("__sh")).as("n"),
+        explode(when(size(col("__sh")) > 0, col("__sh"))).as("str"))
+      .select(col("doc_id"), col("n"), Text.hash60(col("str")).as("s"))
+  }
+
   /** Near-dup candidate pairs by exact n-gram Jaccard, blocked on shared
     * shingles: explode shingles, self-join on the shingle (only docs
     * sharing one meet), count intersections, filter by Jaccard.
@@ -101,12 +122,14 @@ object Dedup {
     * not the string — 8 bytes per key through the exchange instead of
     * ~16+ characters, hashed post-explode so the md5 stays inside
     * whole-stage codegen (distinctness is taken on the exact strings
-    * first). The exploded frame is persisted across its three uses
-    * (sizes + both join sides). Hash keys are uniform unless a shingle
-    * is extremely common; at 100 TB you'd MinHash first ([[minhashLsh]])
-    * and use this as the verify step on candidates. Jaccard is emitted
-    * both as exact integers (inter/union) and a rounded double
-    * (engine-independent: integer division in IEEE).
+    * first). Shingle rows carry their document's set size `n` and the
+    * pair aggregate groups on both sides' `n`, so `union_n = n_a + n_b -
+    * inter` needs no size frame, no join on the document id, no cache.
+    * Hash keys are uniform unless a shingle is extremely common; at
+    * 100 TB you'd MinHash first ([[minhashLsh]]) and use this as the
+    * verify step on candidates. Jaccard is emitted both as exact
+    * integers (inter/union) and a rounded double (engine-independent:
+    * integer division in IEEE).
     *
     * `maxDocFreq` is the STOP-SHINGLE guard for the self-join's real
     * scale hazard: a boilerplate shingle in M documents contributes
@@ -118,61 +141,37 @@ object Dedup {
     * signal — two documents sharing only a cookie banner are not
     * near-duplicates). The default keeps every shingle — exact
     * textbook Jaccard, matching the DuckDB oracle. */
-  /** The per-document DISTINCT hashed k-shingle stream (doc_id, s) that
-    * [[ngramJaccard]] and [[sharedShingleStats]] are both built on —
-    * exposed so a composition running several shingle tiers over the
-    * same corpus (the `cns` census) can compute it once, persist it
-    * once, and feed every tier from the shared frame instead of
-    * re-scanning + re-shingling per tier. */
-  private[graft] def hashedShingles(df: DataFrame, content: Column,
-                                    id: Column, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.select(id.as("doc_id"),
-        explode(array_distinct(Text.shingles(content, k))).as("str"))
-      .select(col("doc_id"), Text.hash60(col("str")).as("s"))
-  }
-
   def ngramJaccard(df: DataFrame, content: Column, id: Column,
                    k: Int = 3, minJaccard: Double = 0.5,
                    maxDocFreq: Int = Int.MaxValue): DataFrame =
     ngramJaccardFrom(hashedShingles(df, content, id, k), minJaccard,
-      maxDocFreq, prePersisted = false)
+      maxDocFreq)
 
-  /** [[ngramJaccard]] over a pre-built [[hashedShingles]] stream.
-    * `prePersisted = true` means the caller already persisted
-    * `exploded` (and owns its release) — the uncapped path then uses
-    * it as-is instead of stacking a second cache on the same rows. */
+  /** [[ngramJaccard]] over a pre-built [[hashedShingles]] stream. It
+    * persists nothing: a caller sharing the stream persists it itself. */
   private[graft] def ngramJaccardFrom(exploded: DataFrame,
                                       minJaccard: Double,
-                                      maxDocFreq: Int,
-                                      prePersisted: Boolean): DataFrame = {
-    // persist, not localCheckpoint: checkpoint blocks are unrecoverable
-    // after executor loss (routine at cluster scale), while a persisted
-    // frame recomputes lost partitions from lineage. The cache is
-    // registered with [[graft.CacheScope]] — callers release it after
-    // materializing the result (Verify/Bench do per query).
+                                      maxDocFreq: Int): DataFrame = {
     val sh =
-      if (maxDocFreq == Int.MaxValue) {
-        if (prePersisted) exploded
-        else graft.CacheScope.persistTracked(exploded)
-      } else graft.CacheScope.persistTracked {
+      if (maxDocFreq == Int.MaxValue) exploded
+      else {
         // rows are distinct per (doc, shingle): a row count per shingle
         // IS its document frequency (partial agg — the hot key is the
-        // one being removed)
+        // one being removed); kept rows regroup per doc for the capped n
         val keep = exploded.groupBy("s").agg(count(lit(1)).as("__df"))
           .where(col("__df") <= maxDocFreq).select("s")
-        exploded.join(keep, "s")
+        exploded.join(keep, Seq("s"), "left_semi")
+          .groupBy("doc_id").agg(collect_list("s").as("__ks"))
+          .select(col("doc_id"), size(col("__ks")).as("n"),
+            explode(col("__ks")).as("s"))
       }
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val pairs = sh.as("a").join(sh.as("b"),
+    sh.as("a").join(sh.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.n").as("na"), col("b.n").as("nb"))
       .agg(count(lit(1)).as("inter"))
-    pairs
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("inter"),
-        (col("sa.n") + col("sb.n") - col("inter")).as("union_n"))
+        (col("na") + col("nb") - col("inter")).as("union_n"))
       .withColumn("jaccard",
         round(col("inter").cast("double") / col("union_n"), 6))
       .where(col("jaccard") >= minJaccard)
@@ -229,8 +228,9 @@ object Dedup {
                  k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                  minMatches: Int = 8, maxBucket: Int = Int.MaxValue): DataFrame = {
     val r = numHashes / bands
-    // persist, not localCheckpoint — see ngramJaccard (fault tolerance
-    // over cache footprint; released via CacheScope there too)
+    // persist, not localCheckpoint: a persisted frame recomputes lost
+    // partitions from lineage after executor loss, checkpoint blocks
+    // cannot; released via CacheScope once the caller materializes
     val sig = graft.CacheScope.persistTracked(
       minhashSignatures(df, content, id, k, numHashes))
     val allBuckets = sig.select(col("doc_id"),

@@ -1636,8 +1636,7 @@ object Similarity {
     * keys, never all-pairs. The quantized base is persisted because
     * the candidate join consumes it three times — persist, not
     * localCheckpoint: checkpoint blocks don't survive executor loss,
-    * lineage recomputation does (see Dedup.ngramJaccard for the
-    * cache-lifetime trade-off; released via CacheScope). */
+    * lineage recomputation does (released via CacheScope). */
   private def lshPairs(embeddings: DataFrame, idCol: String, embCol: String,
       bands: Int, planes: Int, maxBucket: Int,
       keep: (Column, Column) => Column, left: String,

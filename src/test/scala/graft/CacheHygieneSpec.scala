@@ -13,8 +13,9 @@ class CacheHygieneSpec extends SparkSpec {
 
   /** Every declared query built on a persist/checkpoint-using operator. */
   private val cacheUsers = Seq(
-    "dj", "dl", "dc", "dr",
-    "md", // dedupPairs rides ngramJaccard's persisted shingle frame
+    "dj", // uncapped ngramJaccard persists nothing; any future cache must release
+    "dl", "dc", "dr",
+    "md", // dedupPairs over capped ngramJaccard: the same, on the capped path
     "cns", // both shingle tiers share one persistTracked hashed-shingle frame
     "ms", "mp", // mpPairs persists the shared refs/urls fixture lineage (r21)
     "db", // keepBest persists the duplicate-sized withScore frame (r21)
@@ -55,6 +56,21 @@ class CacheHygieneSpec extends SparkSpec {
       "the signature frame should be persisted while the query is live")
     CacheScope.release()
     assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+  }
+
+  test("ngramJaccard caches nothing: md and dj hold no persistent RDD while live") {
+    CacheScope.release()
+    Seq("md", "dj").foreach { name =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val q = SparkEntry.queries(name)(spark, sf)
+      q.queryExecution.toRdd.foreach(_ => ())
+      val during = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(during.isEmpty, s"$name persisted while live: $during")
+      val p = q.queryExecution.executedPlan.toString
+      assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
+        s"$name plan reads a cache:\n$p")
+      CacheScope.release()
+    }
   }
 
   test("the JSONL corpus reader's split cache releases too") {

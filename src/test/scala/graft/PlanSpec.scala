@@ -887,6 +887,17 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"md:\n$p")
   }
 
+  test("md pair dedup: at most 9 Spark jobs once warm (the sizes ride the rows)") {
+    def run(): Unit = {
+      SparkEntry.queries("md")(spark, sf).queryExecution.toRdd.foreach(_ => ())
+      graft.CacheScope.release()
+    }
+    run() // warm: the first run's jobs include one-off work
+    val jobs = jobsDuring(run())
+    // 8 after the size frame and its two joins went; 16 before
+    assert(jobs <= 9, s"md ran $jobs Spark jobs")
+  }
+
   test("history-tag rows mic/mac: history never shuffles, hit set broadcasts back") {
     Seq("mic", "mac").foreach { n =>
       val p = plan(n)

@@ -47,6 +47,55 @@ class DedupSpec extends SparkSpec {
     assert(out == Seq((1L, 2L), (1L, 4L), (2L, 4L)))
   }
 
+  test("ngramJaccard sizes on the rows: inter, union_n, jaccard equal a " +
+    "Scala set reference, capped and uncapped, over struct ids") {
+    // k = 2; (2,0) repeats its shingles; (3,0) is under k words; "q r"
+    // is in 3 documents, so at maxDocFreq 2 (4,0), (4,1) and (5,0) lose
+    // every shingle, as "a b" (df 3) leaves (1,*) and (2,0) smaller sets;
+    // (6,0)-(6,1) shares 1 of 3 shingles, exactly minJaccard after round
+    val k = 2
+    val minJ = 0.333333
+    val fixture = Seq(
+      (1L, 0L, "a b c d"), (1L, 1L, "a b c e"), (2L, 0L, "a b a b a b"),
+      (3L, 0L, "x"), (4L, 0L, "q r"), (4L, 1L, "q r"), (5L, 0L, "q r"),
+      (6L, 0L, "m n o"), (6L, 1L, "m n p"))
+    val keyed = fixture.toDF("doc_id", "ref_idx", "text")
+      .select(struct($"doc_id", $"ref_idx").as("__pid"), $"text")
+    type Id = (Long, Long)
+    def reference(cap: Int): Set[(Id, Id, Long, Long, Double)] = {
+      val sets = fixture.map { case (d, r, t) =>
+        (d, r) -> t.split(" ").sliding(k).filter(_.length == k)
+          .map(_.mkString(" ")).toSet }
+      val df = sets.flatMap(_._2.toSeq).groupBy(identity)
+        .map { case (s, occ) => s -> occ.size }
+      val kept = sets.map { case (id, ss) => id -> ss.filter(df(_) <= cap) }
+      val ord = Ordering[(Long, Long)]
+      (for {
+        (a, sa) <- kept; (b, sb) <- kept if ord.lt(a, b)
+        inter = (sa & sb).size.toLong if inter > 0
+        union = (sa | sb).size.toLong
+        j = BigDecimal(inter.toDouble / union)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble if j >= minJ
+      } yield (a, b, inter, union, j)).toSet
+    }
+    def id(r: org.apache.spark.sql.Row): Id = (r.getLong(0), r.getLong(1))
+    Seq(Int.MaxValue, 2).foreach { cap =>
+      val out = Dedup.ngramJaccard(keyed, $"text", $"__pid", k = k,
+        minJaccard = minJ, maxDocFreq = cap)
+      assert(out.columns.toSeq == Seq("doc_a", "doc_b", "inter", "union_n", "jaccard"))
+      assert(out.schema.drop(2).map(_.dataType.simpleString) ==
+        Seq("bigint", "bigint", "double"))
+      val got = out.collect().map(r => (id(r.getStruct(0)), id(r.getStruct(1)),
+        r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
+      assert(got == reference(cap), s"maxDocFreq $cap")
+      assert(got.exists(p => p._1 == (6L, 0L) && p._2 == (6L, 1L) && p._5 == minJ))
+      if (cap == 2)
+        assert(!got.exists(p => Set(p._1._1, p._2._1).exists(Set(4L, 5L))),
+          "documents capped down to no shingle must not pair")
+      else assert(got.contains(((4L, 0L), (5L, 0L), 1L, 1L, 1.0)))
+    }
+  }
+
   test("identical docs have identical minhash signatures; near-dups collide") {
     val sig = Dedup.minhashSignatures(docs, $"text", $"doc_id")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap

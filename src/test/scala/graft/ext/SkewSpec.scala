@@ -174,8 +174,9 @@ class SkewSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.CacheScope.release()
-    val capped = Dedup.ngramJaccard(docs, $"text", $"doc_id",
+    val cappedDf = Dedup.ngramJaccard(docs, $"text", $"doc_id",
         k = 2, minJaccard = 0.3, maxDocFreq = 5)
+    val capped = cappedDf
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).toSet
     // uncapped: every boilerplate pair passes 0.3 (2 shared of 4+4) +
@@ -183,6 +184,12 @@ class SkewSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     // self-consistently over the informative shingles (2 of 3+3)
     assert(uncapped.size == 40 * 39 / 2 + 1 && uncapped((100L, 101L)))
     assert(capped == Set((100L, 101L, 2L, 4L, 0.5)))
+    // the document frequency stays a partial aggregate, and the capped
+    // set sizes ride on the rows: nothing is cached
+    val p = physical(cappedDf)
+    assertNoHashWindow(p, "s")
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
+      s"the capped plan must not cache:\n$p")
   }
 
   test("dedupPairs: a hot image with distinct captions yields zero " +
