@@ -130,9 +130,10 @@ object CoreQueries {
     "b2d" -> ((s, d) =>
       QueryApi.accountTransactions(Tables.ati(s, d), Tables.summaries(s, d),
         lit(Account), MaxId, Some(50), ascending = false)),
-    // B1/B2 through the SERVING mirrors (bucketed btree analog) — same
-    // oracle as the scan-based rows; the spec-level pruning/zero-Exchange
-    // claims live in ServingPageSpec.
+    // B1/B2 through the SERVING mirrors (bucketed btree analog), each page
+    // a driver-side read of the key's bucket file with no Spark job — same
+    // oracle as the scan-based rows; the no-job and one-bucket claims live
+    // in ServingPageSpec.
     "b1s" -> ((s, d) => {
       val (atiM, sumM) = graft.sources.ServingMirrors.atiSummaries(s, d)
       QueryApi.accountPageServed(atiM, sumM, lit(Account), 0L, 50,

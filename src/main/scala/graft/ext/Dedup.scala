@@ -106,12 +106,16 @@ object Dedup {
                                     id: Column, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     // explode an expression, not the bare `__sh` column: for a column Catalyst
-    // infers `size(__sh) > 0` and pushes it below, re-running the shingling
+    // infers `size(__sh) > 0` and pushes it below, re-running the shingling.
+    // `s` is non-nullable (no shingle is null, so the coalesce never fires):
+    // a nullable `s` makes a join on it infer `isnotnull(s)`, pushed below
+    // as a second md5 per row
     df.select(id.as("doc_id"),
         array_distinct(Text.shingles(content, k)).as("__sh"))
       .select(col("doc_id"), size(col("__sh")).as("n"),
         explode(when(size(col("__sh")) > 0, col("__sh"))).as("str"))
-      .select(col("doc_id"), col("n"), Text.hash60(col("str")).as("s"))
+      .select(col("doc_id"), col("n"),
+        coalesce(Text.hash60(col("str")), lit(0L)).as("s"))
   }
 
   /** Near-dup candidate pairs by exact n-gram Jaccard, blocked on shared

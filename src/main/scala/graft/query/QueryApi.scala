@@ -2,9 +2,17 @@ package graft.query
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, sources}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FileFormat,
+  HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's read surface (`DatabaseClient`, postgres.rs:309-383)
   * as DataFrame plan builders. Postgres was the optimizer/executor for
@@ -61,69 +69,90 @@ object QueryApi {
     limit.fold(sorted)(sorted.limit)
   }
 
-  /** The account page plan on the account-bucketed page mirror
-    * ([[pagePlan]]). `account` must be a LITERAL (any address type the
-    * mirror carries — long fixture or 32-byte binary). */
-  def accountPageIds(atiMirror: DataFrame, account: Column, from: Long,
-                     limit: Int, ascending: Boolean): DataFrame =
-    pagePlan(atiMirror, accountKey(account), from, limit, ascending)
-
-  /** The contract page plan on the cti page mirror, bucketed by the
-    * leading composite key `index` ([[pagePlan]]). */
-  def contractPageIds(ctiMirror: DataFrame, index: Long, subindex: Long,
-                      from: Long, limit: Int, ascending: Boolean): DataFrame =
-    pagePlan(ctiMirror, contractKey(index, subindex), from, limit, ascending)
-
-  /** The page plan over a PAGE-ORDERED mirror (index rows carrying their
-    * summary's page columns, [[graft.sources.ServingMirrors]]), in the
-    * reference row shape: bucket pruning on the key's leading literal
-    * (only that key's bucket file is read) and top-`limit` by cursor
-    * order — orderBy+limit fuse to `TakeOrderedAndProject`, so the plan
-    * has ZERO Exchange. Public through the two entries above so
-    * ServingPageSpec can pin both on the plan the serving path runs. The
-    * key must compare against LITERALS: bucket pruning evaluates the
-    * predicate against the bucket hash at planning time. */
-  private def pagePlan(pages: DataFrame, key: Column, from: Long,
-                       limit: Int, ascending: Boolean): DataFrame =
-    pages.where(key && cursor(from, ascending))
-      .orderBy(order("summary", ascending)).limit(limit)
-      .select(col("summary").as("id"), col("block"), col("timestamp"),
-        col("height"), col("body").as("summary"))
-
   /** B1/B2 SERVING path over the account page mirror ([[servedPage]]).
-    * `summariesMirror` is not read: the page mirror carries the page
-    * columns itself (the parameter stays for existing callers). */
+    * `account` must be a LITERAL of the mirror's address type (long
+    * fixture or 32-byte binary). `summariesMirror` is not read: the page
+    * mirror carries the page columns itself (the parameter stays for
+    * existing callers). */
   def accountPageServed(atiMirror: DataFrame, summariesMirror: DataFrame,
                         account: Column, from: Long, limit: Int,
                         ascending: Boolean): DataFrame =
-    servedPage(accountPageIds(atiMirror, account, from, limit, ascending))
+    servedPage(atiMirror, accountKey(account), from, limit, ascending)
 
-  /** B3 SERVING path over the contract page mirror ([[servedPage]]);
-    * `summariesMirror` is not read, as in [[accountPageServed]]. */
+  /** B3 SERVING path over the contract page mirror, bucketed by the
+    * leading composite key `index` ([[servedPage]]); `summariesMirror`
+    * is not read, as in [[accountPageServed]]. */
   def contractPageServed(ctiMirror: DataFrame, summariesMirror: DataFrame,
                          index: Long, subindex: Long, from: Long, limit: Int,
                          ascending: Boolean): DataFrame =
-    servedPage(contractPageIds(ctiMirror, index, subindex, from, limit, ascending))
+    servedPage(ctiMirror, contractKey(index, subindex), from, limit, ascending)
 
   /** The SERVING page — the btree analog of the reference's `<0.5 s`
-    * page (postgres.rs:94-99, one index-ordered read): one bucket-pruned
-    * scan of one file of the (key, summary)-sorted page mirror, the
-    * cursor pushed into its row groups — one Spark job, no shuffle.
-    *
-    * EAGER, unlike the other builders here: calling it runs that job now
-    * and returns the ≤`limit` rows as a local DataFrame, so the caller's
-    * `collect` runs no second job. Repeated ids are dropped here, in the
-    * driver: a REPLAYED mirror generation (the
-    * [[graft.sources.BucketedMirror.appendOnce]] crash window) duplicates
-    * rows until compaction, so a page can come back shorter than `limit`
-    * but never shows a row twice. A dedup inside the plan would read the
-    * whole bucket or add a stage. ServingPageSpec pins the plan, the one
-    * job and equality with the scan page; the CORRECTNESS rows
-    * `b1s`/`b2s`/`b3s` pin it against DuckDB. For the unbounded iterate
-    * surface (B4) use the scan page. */
-  private def servedPage(plan: DataFrame): DataFrame = {
-    val rows = plan.collect().toSeq.distinctBy(_.getLong(0))
-    plan.sparkSession.createDataFrame(rows.asJava, plan.schema)
+    * page (postgres.rs:94-99, one index-ordered read) over a PAGE-ORDERED
+    * mirror ([[graft.sources.ServingMirrors]]), read in the driver with NO
+    * Spark job (a job's fixed cost was nearly all of a page's allocation).
+    * The page predicate is only analyzed. The key literal picks its bucket
+    * by Spark's bucket hash, and that bucket's files in the relation's file
+    * index (not a directory listing, which could see a half-committed
+    * append) go through the relation's Parquet reader with the key and
+    * cursor pushed down, so row groups are pruned as in a scan. Surviving
+    * rows are ordered by `summary` in the cursor's direction and cut at
+    * `limit`, then repeated ids are dropped: a REPLAYED mirror generation
+    * ([[graft.sources.BucketedMirror.appendOnce]]'s crash window) can
+    * shorten a page but never shows a row twice. Returns a local DataFrame.
+    * ServingPageSpec pins the zero jobs, the one bucket and equality with
+    * the scan page; CORRECTNESS `b1s`/`b2s`/`b3s` pin it against DuckDB. */
+  private def servedPage(mirror: DataFrame, key: Column, from: Long,
+                         limit: Int, ascending: Boolean): DataFrame = {
+    val spark = mirror.sparkSession
+    val (cond, scan) = mirror.where(key && cursor(from, ascending))
+      .queryExecution.analyzed match { case Filter(c, child) => (c, child) }
+    val rel = EliminateSubqueryAliases(scan) match {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+      case p => throw new IllegalArgumentException(s"not a page mirror table:\n$p")
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case _ => Seq(e)
+    }
+    // (comparison, column, literal) per conjunct; filters take Scala values
+    val bounds = conjuncts(cond).collect {
+      case c @ BinaryComparison(a: Attribute, v) if v.foldable => (c, a, v.eval())
+    }
+    val filters = bounds.collect {
+      case (_: EqualTo, a, v) =>
+        sources.EqualTo(a.name, convertToScala(v, a.dataType))
+      case (_: GreaterThanOrEqual, a, v) =>
+        sources.GreaterThanOrEqual(a.name, convertToScala(v, a.dataType))
+      case (_: LessThanOrEqual, a, v) =>
+        sources.LessThanOrEqual(a.name, convertToScala(v, a.dataType))
+    }
+    val bucket = rel.bucketSpec.flatMap(spec => bounds.collectFirst {
+      case (_: EqualTo, a, v) if spec.bucketColumnNames == Seq(a.name) =>
+        BucketingUtils.getBucketIdFromValue(a, spec.numBuckets, v)
+    })
+    val read = rel.fileFormat.buildReaderWithPartitionValues(spark, rel.dataSchema,
+      rel.partitionSchema, rel.dataSchema, filters,
+      rel.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConfWithOptions(rel.options))
+    val keep = Predicate.createInterpreted(BindReferences.bindReference(cond, scan.output))
+    val rows = for {
+      dir <- rel.location.listFiles(Nil, Nil)
+      f <- dir.files if bucket.forall(BucketingUtils.getBucketId(f.getPath.getName).contains)
+      it = read(PartitionedFileUtil.getPartitionedFile(f, f.getPath, dir.values, 0, f.getLen))
+      // copy: the vectorized reader reuses its row
+      row <- try it.filter(keep.eval).map(_.copy()).toVector
+        finally it match { case c: java.io.Closeable => c.close(); case _ => }
+    } yield row
+    val ord = scan.output.map(_.name).zipWithIndex.toMap
+    val byCursor = rows.sortBy(_.getLong(ord("summary")))
+    val page = (if (ascending) byCursor else byCursor.reverse).take(limit)
+      .distinctBy(_.getLong(ord("summary")))
+    val out = Seq("summary" -> "id", "block" -> "block", "timestamp" -> "timestamp",
+      "height" -> "height", "body" -> "summary")
+      .map { case (c, as) => (ord(c), rel.schema(c).copy(name = as)) }
+    spark.createDataFrame(page.map(r => Row.fromSeq(out.map { case (i, f) =>
+      convertToScala(r.get(i, f.dataType), f.dataType) })).asJava, StructType(out.map(_._2)))
   }
 
   /** B5 — row decode: project fields out of the JSON envelope, SILENTLY

@@ -98,11 +98,11 @@ object BucketedMirror {
     * Honest bound: the marker commits AFTER the data files, so a crash
     * BETWEEN the two replays one batch's rows into the mirror — the
     * same at-least-once tail every non-transactional file sink has.
-    * The serving reads tolerate it (the served page drops repeated ids
-    * in the driver, so a duplicated generation can shorten a page below
-    * `limit` but never surfaces a row twice; StreamingSoakSpec pins
-    * this), and the periodic compaction squashes it; a deployment
-    * needing exact files would anti-join the delta on the unique id
+    * The serving reads tolerate it (the served page, read in the driver,
+    * drops repeated ids after its `limit` cut, so a duplicated generation
+    * can shorten a page below `limit` but never surfaces a row twice;
+    * StreamingSoakSpec pins this), and the periodic compaction squashes
+    * it; a deployment needing exact files would anti-join the delta on the unique id
     * instead, at the cost of a mirror scan per batch. The DB sink beside
     * this call needs no marker: its conditional inserts
     * ([[graft.streaming.TransactionalSink]]) are row-idempotent. */

@@ -11,13 +11,14 @@ import graft.ingest.BlockIngest
   * `index`, each row carrying its summary's page columns
   * ([[graft.ingest.BlockIngest.atiPages]]) and sorted by (key, summary)
   * within its bucket — the reference's index-ordered `ati ⋈ summaries`
-  * read as one bucket-pruned scan of one file. The storage cost: a
+  * served from one bucket file, read in the driver without a Spark job
+  * ([[graft.query.QueryApi.accountPageServed]]). The storage cost: a
   * summary is copied once per affected key (about 1.2 `ati` rows per
   * summary on the ingest feed).
   *
   * Mirrors are built ONCE per scale directory: the write is the
-  * once-per-refresh cost that buys every subsequent page query a pruned
-  * scan (see [[BucketedMirror]] for the 100 TB sizing notes — at
+  * once-per-refresh cost that buys every subsequent page query a
+  * one-bucket read (see [[BucketedMirror]] for the 100 TB sizing notes — at
   * deployment the bucket count tracks the cluster, not this fixture 16).
   * The CATALOG is the memo — a process-local map would outlive a
   * restarted session's catalog and hand back table names that no longer

@@ -47,6 +47,15 @@ class DedupSpec extends SparkSpec {
     assert(out == Seq((1L, 2L), (1L, 4L), (2L, 4L)))
   }
 
+  test("ngramJaccard hashes each shingle row once: no inferred null check re-runs md5") {
+    for (cap <- Seq(Int.MaxValue, 2)) {
+      val p = Dedup.ngramJaccard(docs, $"text", $"doc_id", k = 3, minJaccard = 0.5,
+        maxDocFreq = cap).queryExecution.optimizedPlan.toString
+      assert(p.contains("hash60_md5") && !p.contains("isnotnull(hash60_md5"),
+        s"maxDocFreq $cap:\n$p")
+    }
+  }
+
   test("ngramJaccard sizes on the rows: inter, union_n, jaccard equal a " +
     "Scala set reference, capped and uncapped, over struct ids") {
     // k = 2; (2,0) repeats its shingles; (3,0) is under k words; "q r"

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
@@ -17,33 +17,10 @@ import graft.model.Schemas
   * binary addresses.
   */
 class BinaryAddressSpec extends SparkSpec {
+  import BinaryAddressSpec.addr
   import scala.jdk.CollectionConverters._
 
-  /** 32-byte address: 29 shared prefix bytes (from `base`) + 3 alias
-    * bytes — alias 0 is the canonical address of its class. */
-  private def addr(base: Int, alias: Int): Array[Byte] = {
-    val a = new Array[Byte](32)
-    (0 until 29).foreach(i => a(i) = ((base + i) % 127).toByte)
-    a(29) = ((alias >> 16) & 0xff).toByte
-    a(30) = ((alias >> 8) & 0xff).toByte
-    a(31) = (alias & 0xff).toByte
-    a
-  }
-
-  private def feed: DataFrame = {
-    val rows = Seq(
-      // height 0: sender = canonical A, affects alias A#1 (same class)
-      // twice (dedup) and canonical B
-      Row(0L, 0, "h0", 0L, """{"k":0}""", false, addr(10, 0),
-        Seq(addr(10, 1), addr(10, 1), addr(20, 0)),
-        Seq.empty[Row], Seq.empty[Row], null),
-      // height 1: protocol event affecting alias B#7
-      Row(1L, 0, "h1", 1000L, """{"s":1}""", true, null,
-        Seq(addr(20, 7)), Seq.empty[Row], Seq.empty[Row],
-        Seq(Row(0, 0, "pk-bin", true)))
-    )
-    spark.createDataFrame(rows.asJava, Schemas.blockFeed(BinaryType))
-  }
+  private def feed: DataFrame = BinaryAddressSpec.feed(spark)
 
   test("fan-out and per-summary dedup work on 32-byte binary addresses") {
     val ati = BlockIngest.ati(feed).collect()
@@ -79,5 +56,42 @@ class BinaryAddressSpec extends SparkSpec {
     assert(kb.length == 1)
     assert(kb.head.getAs[Array[Byte]]("address").toSeq == addr(20, 7).toSeq)
     assert(kb.head.getAs[String]("public_key") == "pk-bin")
+  }
+}
+
+/** The 32-byte address fixture, shared with the serving-page spec. */
+object BinaryAddressSpec {
+  import scala.jdk.CollectionConverters._
+
+  /** 32-byte address: 29 shared prefix bytes (from `base`) + 3 alias
+    * bytes — alias 0 is the canonical address of its class. */
+  def addr(base: Int, alias: Int): Array[Byte] = {
+    val a = new Array[Byte](32)
+    (0 until 29).foreach(i => a(i) = ((base + i) % 127).toByte)
+    a(29) = ((alias >> 16) & 0xff).toByte
+    a(30) = ((alias >> 8) & 0xff).toByte
+    a(31) = (alias & 0xff).toByte
+    a
+  }
+
+  /** Heights 0 and 1 are the spec's two blocks. Each of `more` further
+    * heights h has one summary from canonical A affecting canonical B and
+    * alias B#(h % 2 * 7), so B#0 gets a row per height (deduped when
+    * h is even). */
+  def feed(spark: SparkSession, more: Int = 0): DataFrame = {
+    val rows = Seq(
+      // height 0: sender = canonical A, affects alias A#1 (same class)
+      // twice (dedup) and canonical B
+      Row(0L, 0, "h0", 0L, """{"k":0}""", false, addr(10, 0),
+        Seq(addr(10, 1), addr(10, 1), addr(20, 0)),
+        Seq.empty[Row], Seq.empty[Row], null),
+      // height 1: protocol event affecting alias B#7
+      Row(1L, 0, "h1", 1000L, """{"s":1}""", true, null,
+        Seq(addr(20, 7)), Seq.empty[Row], Seq.empty[Row],
+        Seq(Row(0, 0, "pk-bin", true)))
+    ) ++ (2 until 2 + more).map(h =>
+      Row(h.toLong, 0, s"h$h", 1000L * h, s"""{"k":$h}""", false, addr(10, 0),
+        Seq(addr(20, 0), addr(20, h % 2 * 7)), Seq.empty[Row], Seq.empty[Row], null))
+    spark.createDataFrame(rows.asJava, Schemas.blockFeed(BinaryType))
   }
 }

@@ -18,8 +18,8 @@ import graft.sources.{BucketedMirror, StoreCompaction}
   * transactional DB sink AND the bucketed serving mirrors in the same
   * `foreachBatch` (the deployment shape: "indexer writes, proxy reads"
   * with the mirror as the read side), across many micro-batches with a
-  * MID-STREAM stop/restart. After recovery the SERVED page — one
-  * bucket-pruned scan of the page mirror
+  * MID-STREAM stop/restart. After recovery the SERVED page — a
+  * driver-side read of the key's bucket files of the page mirror
   * ([[BlockIngest.atiPages]] deltas) — must equal the pure batch
   * derivation over the full feed, and a re-delivered batch must be a
   * mirror no-op ([[BucketedMirror.appendOnce]]).
@@ -81,6 +81,19 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     QueryApi.accountPageServed(m, m, lit(1L), from = 0L, limit = 100,
       ascending = true)
       .collect().map(r => (r.getLong(0), r.getString(4))).toSeq
+  }
+
+  /** The executed plan of account 1's rows in mirror `name`, with
+    * auto-disabling of bucketed scans off: file-level bucket pruning
+    * applies either way, and the pinned conf shows it as
+    * `SelectedBucketsCount`. */
+  private def keyProbePlan(name: String): String = {
+    val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val saved = spark.conf.get(k)
+    spark.conf.set(k, "false")
+    try BucketedMirror.table(spark, name).where(col("account") === 1L)
+      .queryExecution.executedPlan.toString
+    finally spark.conf.set(k, saved)
   }
 
   /** The composed foreachBatch body: conditional-insert DB writes (row
@@ -154,17 +167,10 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(rs.getLong(1) == 24L) // 12 heights x 2 items
     } finally c.close()
 
-    // streamed-in generations must still bucket-prune the served probe
-    val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val saved = spark.conf.get(k)
-    spark.conf.set(k, "false")
-    try {
-      val p = QueryApi.accountPageIds(BucketedMirror.table(spark, PageMirror),
-        lit(1L), from = 0L, limit = 100, ascending = true)
-        .queryExecution.executedPlan.toString
-      assert(p.contains("SelectedBucketsCount: 1 out of 8"),
-        s"served probe must read one bucket after streamed appends:\n$p")
-    } finally spark.conf.set(k, saved)
+    // streamed-in generations must still bucket-prune a key probe
+    val p = keyProbePlan(PageMirror)
+    assert(p.contains("SelectedBucketsCount: 1 out of 8"),
+      s"a key probe must read one bucket after streamed appends:\n$p")
   }
 
   test("online compaction mid-flight: markers carried, replay no-op, page and pruning survive") {
@@ -253,16 +259,9 @@ class StreamingSoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(served.nonEmpty && served == batchAnswer)
 
       // (c) bucket pruning survives the swapped generations
-      val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val saved = spark.conf.get(k)
-      spark.conf.set(k, "false")
-      try {
-        val p = QueryApi.accountPageIds(BucketedMirror.table(spark, pagesM),
-          lit(1L), from = 0L, limit = 100, ascending = true)
-          .queryExecution.executedPlan.toString
-        assert(p.contains("SelectedBucketsCount: 1 out of 8"),
-          s"served probe must still read one bucket after compaction:\n$p")
-      } finally spark.conf.set(k, saved)
+      val p = keyProbePlan(pagesM)
+      assert(p.contains("SelectedBucketsCount: 1 out of 8"),
+        s"a key probe must still read one bucket after compaction:\n$p")
     } finally spark.sql(s"DROP TABLE IF EXISTS $pagesM")
   }
 

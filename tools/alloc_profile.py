@@ -15,6 +15,20 @@ those from S to S seconds after the earliest sample, and prints two tables:
   CATEGORIES; a sample no frame matches is `other`, and its top N
   allocation sites are listed after the tables.
 
+`broadcast blockify` (serializing a broadcast value into its blocks) is
+split by the broadcast's caller: the first frame below the blockify frame
+that matches one of BLOCKIFY_CALLERS names the row, so a cut in Spark jobs
+and a cut in broadcast joins or file scans show up in different rows:
+
+- `broadcast blockify: task binary`: the serialized RDD and closure of a
+  stage, broadcast once per submitted stage
+  (`DAGScheduler.submitMissingTasks`);
+- `broadcast blockify: broadcast join`: the build side of a broadcast join
+  (`BroadcastExchangeExec`);
+- `broadcast blockify: Hadoop conf`: the Hadoop configuration a file scan
+  ships to its tasks (`SerializableConfiguration.broadcast`);
+- `broadcast blockify: other`: any other caller.
+
 A sample's weight is what its thread allocated since its previous
 sample, so small categories are attributed statistically, not exactly.
 
@@ -52,6 +66,25 @@ CATEGORIES = [
                   "org.apache.spark.sql.execution.QueryExecution."]),
 ]
 
+# (row suffix, substrings of "package.Class.method") for the callers of a
+# `broadcast blockify` sample: the nearest matching frame below the
+# blockify frame decides.
+BLOCKIFY_CALLERS = [
+    ("task binary", ["org.apache.spark.scheduler.DAGScheduler.submitMissingTasks"]),
+    ("broadcast join", ["org.apache.spark.sql.execution.exchange.BroadcastExchangeExec"]),
+    ("Hadoop conf", ["org.apache.spark.util.SerializableConfiguration"]),
+]
+
+
+def matching(frames, categories):
+    """(index, name) of the first frame that matches one of `categories`,
+    or None."""
+    for i, f in enumerate(frames):
+        for cat, needles in categories:
+            if any(n in f for n in needles):
+                return i, cat
+    return None
+
 
 def frame_name(frame):
     m = frame.get("method") or {}
@@ -60,11 +93,14 @@ def frame_name(frame):
 
 
 def category(frames):
-    for f in frames:
-        for cat, needles in CATEGORIES:
-            if any(n in f for n in needles):
-                return cat
-    return "other"
+    hit = matching(frames, CATEGORIES)
+    if hit is None:
+        return "other"
+    i, cat = hit
+    if cat == "broadcast blockify":
+        caller = matching(frames[i + 1:], BLOCKIFY_CALLERS)
+        return f"{cat}: {caller[1] if caller else 'other'}"
+    return cat
 
 
 def samples(path):
