@@ -36,7 +36,10 @@ import graft.model.Schemas
   *    the store is addressed by name through options;
   *  - a height range is split into `partitions` contiguous sub-ranges,
   *    one [[PartitionReader]] each — the per-partition fetch is the
-  *    `MAX_NODE_REQUESTS`-style bounded parallelism (main.rs:37).
+  *    `MAX_NODE_REQUESTS`-style bounded parallelism (main.rs:37);
+  *  - a reader serializes feed rows with its executor thread's
+  *    serializer: one encoder per JVM and one serializer per executor
+  *    thread, so a micro-batch derives and generates none.
   *
   * Usage:
   * {{{
@@ -167,13 +170,26 @@ private final class BlockMicroBatchStream(storeName: String, startHeight: Long,
 private final case class HeightRangePartition(storeName: String, from: Long, until: Long)
     extends InputPartition
 
+/** The feed rows of one height range as Catalyst rows. A serializer
+  * reuses its output row, so every row is copied before it is handed
+  * out; that copy is also what lets the readers of one executor thread
+  * share the thread's serializer. */
 private final class BlockRangeReader(p: HeightRangePartition)
     extends PartitionReader[InternalRow] {
-  private val serializer = ExpressionEncoder[FeedRow]().createSerializer()
+  private val serializer = BlockRangeReader.serializers.get()
   private val it = BlockStores.get(p.storeName).blocks(p.from, p.until)
   private var cur: InternalRow = _
   override def next(): Boolean =
     if (it.hasNext) { cur = serializer(it.next()).copy(); true } else false
   override def get(): InternalRow = cur
   override def close(): Unit = ()
+}
+
+private object BlockRangeReader {
+  // Deriving the encoder (Scala reflection) and generating its
+  // serializer's projection cost megabytes; pay them once per JVM and
+  // once per executor thread, not once per reader.
+  private lazy val encoder = ExpressionEncoder[FeedRow]()
+  private val serializers: ThreadLocal[ExpressionEncoder.Serializer[FeedRow]] =
+    ThreadLocal.withInitial(() => encoder.createSerializer())
 }

@@ -4,6 +4,8 @@ import java.math.BigInteger
 import java.sql.{Connection, PreparedStatement, SQLException}
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.ingest.BlockIngest
@@ -18,7 +20,12 @@ import graft.ingest.BlockIngest
   * of the feed ([[blockRows]]): per feed row its summary, the deduped
   * affected accounts and contracts, the mint/burn deltas and the
   * key-binding address — the same `BlockIngest` columns the batch
-  * derivations explode. One feed scan, one shuffle.
+  * derivations explode. One feed scan, one shuffle. The writer reads
+  * that frame's own RDD, converting each row with one interpreted
+  * converter: no second plan, no SQL execution of its own (inside a
+  * stream its jobs run under the batch's execution), no Row
+  * deserializer generated per task. AQE coalesces a small batch's
+  * shuffle into one writer task.
   *
   * **Per-block atomic visibility.** That projection is repartitioned by
   * `height` so a single task owns every row of a block (the guarantee
@@ -44,13 +51,12 @@ import graft.ingest.BlockIngest
   *    statement update counts from `executeBatch` say which deltas are
   *    NEW; only those fold into the running supply (BigInteger
   *    arithmetic — NUMERIC(80,0) analog), so replays add nothing twice.
-  *    The supply read-modify-write is an optimistic CAS
+  *    The supply read-modify-write is a CAS
   *    (`UPDATE … WHERE total_supply = <read value>`, savepoint-guarded
-  *    insert race) so two partitions touching the same token converge
-  *    when they do not deadlock. Open: two partitions that both read a
-  *    hot token's row hold S locks and deadlock on the upgrade to X
-  *    (Derby SQLState 40001); the task fails and its retry can deadlock
-  *    again, so a large backfill with a hot token aborts;
+  *    insert race). A block applies its supplies in token-key order
+  *    and takes each token row's X lock (a no-op `UPDATE`) before it
+  *    reads it, so two partitions on a hot token queue on the row
+  *    instead of both holding S locks and deadlocking on the upgrade;
   *  - key bindings are reduced to the LATEST snapshot per (address,
   *    BLOCK) — the last row per address in id order — per block, not per
   *    batch, so every block transaction carries its own snapshot and the
@@ -90,10 +96,18 @@ object TransactionalSink extends Serializable {
     * the serving DB with per-block atomicity. Pure function of the
     * batch — usable from foreachBatch (streaming) or directly (batch
     * backfill, A13). */
-  def writeBatch(feedBatch: DataFrame, url: String, dialect: Dialect): Unit =
-    blockRows(feedBatch).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) writePartition(rows, url, dialect)
+  def writeBatch(feedBatch: DataFrame, url: String, dialect: Dialect): Unit = {
+    val qe = blockRows(feedBatch).queryExecution
+    val toRow = CatalystTypeConverters.createToScalaConverter(qe.analyzed.schema)
+    // Outside a stream no execution encloses the write; the tasks still
+    // get the session's SQL confs.
+    SQLExecution.withSQLConfPropagated(qe.sparkSession) {
+      qe.toRdd.foreachPartition { rows =>
+        // `toRdd` reuses its row: convert each one before it is buffered
+        if (rows.hasNext) writePartition(rows.map(toRow(_).asInstanceOf[Row]), url, dialect)
+      }
     }
+  }
 
   /** One connection per partition; one transaction (commit) per block. */
   private def writePartition(rows: Iterator[Row], url: String, dialect: Dialect): Unit = {
@@ -155,7 +169,7 @@ object TransactionalSink extends Serializable {
       "cis2 delta executeBatch returned SUCCESS_NO_INFO; exact update " +
         "counts are required (disable driver batch rewriting, e.g. " +
         "pgjdbc reWriteBatchedInserts)")
-    val acc = scala.collection.mutable.LinkedHashMap.empty[(Long, Long, String), BigInteger]
+    val acc = scala.collection.mutable.HashMap.empty[(Long, Long, String), BigInteger]
     deltaRows.zip(inserted).foreach { case ((_, d), n) =>
       if (n == 1) {
         val key = (d.getAs[Long]("index"), d.getAs[Long]("subindex"), d.getAs[String]("token_id"))
@@ -163,7 +177,8 @@ object TransactionalSink extends Serializable {
         acc.updateWith(key)(cur => Some(cur.getOrElse(BigInteger.ZERO).add(v)))
       }
     }
-    acc.foreach { case (key, d) => applySupply(c, st, key, d) }
+    // In token-key order, so two blocks lock their tokens in one order.
+    acc.toSeq.sortBy(_._1).foreach { case (key, d) => applySupply(c, st, key, d) }
 
     // Latest snapshot per address in this block: the rows are in id
     // order, so the last one per address wins.
@@ -204,20 +219,24 @@ object TransactionalSink extends Serializable {
     if (r.isNullAt(i)) Nil else r.getSeq[T](i)
   }
 
-  /** Optimistic read-modify-write of one token's running supply:
-    * compare-and-swap on the read value (two concurrent block
-    * transactions on the same token converge — the loser's UPDATE
-    * matches 0 rows and retries); the first-insert race is
-    * savepoint-guarded so a PK violation degrades to a retry instead of
-    * poisoning the block transaction. */
+  /** Read-modify-write of one token's running supply. The no-op
+    * `UPDATE` takes the row's X lock first, and only a row it locked is
+    * read, so a concurrent block transaction on the same token waits for
+    * this one's commit instead of reading under an S lock it cannot
+    * upgrade. A row the lock missed is inserted; the insert is
+    * savepoint-guarded, so losing the first-insert race (a PK violation)
+    * degrades to a retry instead of poisoning the block transaction.
+    * The write stays a compare-and-swap on the read value. */
   private def applySupply(c: Connection, st: BlockStatements,
                           key: (Long, Long, String), d: BigInteger): Unit = {
     val (i, s, t) = key
     var done = false
     while (!done) {
-      val rs = bind(st.selTok, i, s, t).executeQuery()
-      if (rs.next()) {
+      if (bind(st.lockTok, i, s, t).executeUpdate() == 1) {
+        val rs = bind(st.selTok, i, s, t).executeQuery()
+        rs.next()
         val cur = rs.getString(1)
+        rs.close()
         done = bind(st.updTok, new BigInteger(cur).add(d).toString, i, s, t, cur).executeUpdate() == 1
       } else {
         val sp = c.setSavepoint()
@@ -228,7 +247,6 @@ object TransactionalSink extends Serializable {
           case _: SQLException => c.rollback(sp) // lost the insert race; retry as update
         }
       }
-      rs.close()
     }
   }
 
@@ -262,6 +280,9 @@ object TransactionalSink extends Serializable {
       Seq("summary", "seq", "idx", "subidx", "token_id", "delta"),
       Seq("summary", "seq"))
 
+    val lockTok: PreparedStatement = c.prepareStatement(
+      """UPDATE cis2_tokens SET total_supply = total_supply
+        |WHERE idx = ? AND subidx = ? AND token_id = ?""".stripMargin)
     val selTok: PreparedStatement = c.prepareStatement(
       "SELECT total_supply FROM cis2_tokens WHERE idx = ? AND subidx = ? AND token_id = ?")
     val updTok: PreparedStatement = c.prepareStatement(
@@ -281,7 +302,7 @@ object TransactionalSink extends Serializable {
 
     def close(): Unit = {
       Seq(insSummary, insAti, insCti, insDelta).foreach(_.close())
-      Seq(selTok, updTok, insTok, delBindings, insBinding).foreach(_.close())
+      Seq(lockTok, selTok, updTok, insTok, delBindings, insBinding).foreach(_.close())
     }
   }
 }

@@ -92,6 +92,28 @@ class BlockHeightSourceSpec extends SparkSpec {
       Array(ReadLimit.minRows(2, 1000), ReadLimit.maxRows(7)))) == 7)
   }
 
+  test("a warm thread's second reader allocates under 1 MB") {
+    // one encoder per JVM and one serializer per executor thread: a
+    // reader derives no encoder and generates no projection
+    BlockStores.register("alloc-store", new MemStore(7))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val thread = Thread.currentThread().getId
+    def drain(): Long = {
+      val before = mx.getThreadAllocatedBytes(thread)
+      val r = new BlockRangeReader(HeightRangePartition("alloc-store", 0L, 8L))
+      var heights = 0L
+      while (r.next()) heights += r.get().getLong(0)
+      r.close()
+      val bytes = mx.getThreadAllocatedBytes(thread) - before
+      assert(heights == 2 * (0L until 8L).sum)
+      bytes
+    }
+    drain()
+    val bytes = drain()
+    assert(bytes < (1L << 20), s"$bytes bytes")
+  }
+
   test("startFromStore: height source through the per-block sink to the DB") {
     // the full A1→A10 path over the native source: store → micro-batches
     // → TransactionalSink (per-block transactions) → Derby, with

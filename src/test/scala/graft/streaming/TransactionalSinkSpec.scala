@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.types.LongType
 
 import graft.SparkSpec
@@ -15,7 +18,9 @@ import graft.model.Schemas
   * and contracts inside one row, a `transfer` between a `mint` and a
   * `burn` (the delta `seq` is the event's position), an account creation
   * without a sender, and a supply beyond Decimal(38). Plus the pin on
-  * the write frame: one feed scan, one Exchange. */
+  * the write frame: one feed scan, one Exchange; the pin on the write:
+  * no SQL execution of its own; and two hot tokens written by four
+  * concurrent writers. */
 class TransactionalSinkSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
@@ -110,6 +115,55 @@ class TransactionalSinkSpec extends SparkSpec {
 
     TransactionalSink.writeBatch(feed(all), url, Dialect.Derby) // full replay
     assertTablesEqual(url, feed(all))
+  }
+
+  test("a warm write outside a stream starts no SQL execution of its own") {
+    val url = s"jdbc:derby:${Files.createTempDirectory("graft-sink-exec")}/db;create=true"
+    Migrations.migrate(url, Dialect.Derby)
+    // the three blocks unshuffled, so the height shuffle is the only one
+    val f = spark.createDataFrame(rows.asJava, Schemas.blockFeed(LongType))
+    TransactionalSink.writeBatch(f, url, Dialect.Derby) // warm
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => starts.incrementAndGet()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      // the height shuffle's map stage and the write: two jobs, and the
+      // frame's RDD is written without a plan or execution of its own
+      assert(jobsDuring(TransactionalSink.writeBatch(f, url, Dialect.Derby)) == 2)
+      ListenerBusDrain(sc)
+      assert(starts.get == 0)
+    } finally sc.removeSparkListener(l)
+    assertTablesEqual(url, f)
+  }
+
+  test("blocks of many partitions on two hot tokens commit without a deadlock") {
+    // 4 writers (coalescing off, or AQE folds a small batch into one
+    // task), every block minting the same two tokens, in alternating
+    // event order: each block locks the token rows in key order before
+    // reading them, so the writers queue on the rows
+    val hot = (0L until 200L).map { h =>
+      val mints = Seq("hot-a", "hot-b").map(t => ev(3, t, "mint", (h + 1).toString))
+      Row(h, 0, s"h$h", 1000L * h, s"""{"k":$h}""", false, h % 7, Seq(h % 7),
+        Seq(Row(3L, 0L)), if (h % 2 == 0) mints else mints.reverse, null)
+    }
+    val f = spark.createDataFrame(hot.asJava, Schemas.blockFeed(LongType)).repartition(4)
+    val url = s"jdbc:derby:${Files.createTempDirectory("graft-sink-hot")}/db;create=true"
+    Migrations.migrate(url, Dialect.Derby)
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      assert(TransactionalSink.blockRows(f).queryExecution.toRdd.getNumPartitions >= 4)
+      TransactionalSink.writeBatch(f, url, Dialect.Derby)
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assertTablesEqual(url, f)
+    assert(q(url, "SELECT total_supply FROM cis2_tokens") == Seq.fill(2)(Seq((200 * 201 / 2).toString)))
   }
 
   test("the write frame scans the feed once and shuffles once, by height") {

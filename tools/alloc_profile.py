@@ -2,7 +2,8 @@
 """Heap allocation by thread and by cause, from a JFR recording.
 
 Usage: python3 tools/alloc_profile.py <recording.jfr> [--from S] [--to S]
-                                      [--top N]
+                                      [--top N] [--stack-depth N]
+                                      [--within FRAME]...
 
 Sums the `weight` of every `jdk.ObjectAllocationSample` event (the bytes
 the JVM attributes to that sample) in the recording, optionally only
@@ -29,6 +30,11 @@ and a cut in broadcast joins or file scans show up in different rows:
   ships to its tasks (`SerializableConfiguration.broadcast`);
 - `broadcast blockify: other`: any other caller.
 
+Each `--within FRAME` adds a row to a last table: the MB and share of
+the samples with any frame on their stack that contains FRAME (for
+example `graft.sources.BlockRangeReader` or `SparkPlanInfo`), wherever it
+sits on the stack. The rows may overlap.
+
 A sample's weight is what its thread allocated since its previous
 sample, so small categories are attributed statistically, not exactly.
 
@@ -37,8 +43,15 @@ Record a running JVM (a perfbench workload, a graft.Bench run) with
     jcmd <pid> JFR.start settings=profile filename=/tmp/run.jfr
     jcmd <pid> JFR.stop                       # or let the JVM exit
 
-The `profile` settings sample allocations at up to 300 events/s with
-64-frame stacks. Needs the JDK's `jfr` tool on PATH.
+The `profile` settings sample allocations at up to 300 events/s. JFR
+keeps 64 frames of each stack by default, which cuts Spark task stacks
+short: an executor task's allocation site can sit more than 64 frames
+above its `Executor$TaskRunner.run`, and such a sample then matches no
+frame below the cut. In one whole `ingest` run, 434 of the 1,184 MB of
+executor-task samples had stacks deeper than 64 frames. Record deep stacks by
+starting the JVM with `-XX:FlightRecorderOptions:stackdepth=512`, and
+print them with `--stack-depth 512` (default 64). Needs the JDK's `jfr`
+tool on PATH.
 """
 import argparse
 import collections
@@ -103,11 +116,11 @@ def category(frames):
     return cat
 
 
-def samples(path):
+def samples(path, stack_depth):
     """Yields (startTime, thread name, frame names, weight) per sample,
     decoding `jfr print --json` one event at a time."""
     proc = subprocess.Popen(
-        ["jfr", "print", "--json", "--stack-depth", "64",
+        ["jfr", "print", "--json", "--stack-depth", str(stack_depth),
          "--events", "jdk.ObjectAllocationSample", path],
         stdout=subprocess.PIPE, text=True)
     dec = json.JSONDecoder()
@@ -166,16 +179,23 @@ def main():
                     help="seconds after the earliest sample to stop counting at")
     ap.add_argument("--top", type=int, default=10,
                     help="rows of the thread and `other` site tables")
+    ap.add_argument("--stack-depth", type=int, default=64,
+                    help="frames per stack that `jfr print` keeps")
+    ap.add_argument("--within", action="append", default=[], metavar="FRAME",
+                    help="also total the samples with a frame containing FRAME "
+                         "on their stack (repeatable)")
     a = ap.parse_args()
 
     rows = [(seconds(ts) if ts else 0.0, thread, category(frames),
-             frames[0] if frames else "?", w)
-            for ts, thread, frames, w in samples(a.recording)]
+             frames[0] if frames else "?",
+             [f for f in a.within if any(f in fr for fr in frames)], w)
+            for ts, thread, frames, w in samples(a.recording, a.stack_depth)]
     t0 = min((r[0] for r in rows), default=0.0)
     by_thread = collections.Counter()
     by_cat = collections.Counter()
     other = collections.Counter()
-    for t, thread, cat, site, w in rows:
+    within = collections.Counter({f: 0.0 for f in a.within})
+    for t, thread, cat, site, hits, w in rows:
         if (a.start is not None and t - t0 < a.start) or \
                 (a.end is not None and t - t0 > a.end):
             continue
@@ -183,6 +203,8 @@ def main():
         by_cat[cat] += w
         if cat == "other":
             other[site] += w
+        for f in hits:
+            within[f] += w
     total = sum(by_cat.values())
     if not total:
         sys.exit("no jdk.ObjectAllocationSample events in the window")
@@ -190,6 +212,8 @@ def main():
     table("category", by_cat, total)
     if other and a.top:
         table("`other` allocation site", other, total, a.top)
+    if within:
+        table("samples within frame", within, total)
 
 
 if __name__ == "__main__":
