@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** A7 as an EXPLICIT stateful streaming operator: the CIS-2 running
   * token supply via `flatMapGroupsWithState` — the pure-streaming
-  * counterpart of [[TransactionalSink]]'s serving-DB CAS merge, for
+  * counterpart of [[TransactionalSink]]'s serving-DB supply merge, for
   * consumers that want the live supply as a STREAM (dashboards, alert
   * rules) rather than a table.
   *

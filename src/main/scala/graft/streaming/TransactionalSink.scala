@@ -51,12 +51,13 @@ import graft.ingest.BlockIngest
   *    statement update counts from `executeBatch` say which deltas are
   *    NEW; only those fold into the running supply (BigInteger
   *    arithmetic — NUMERIC(80,0) analog), so replays add nothing twice.
-  *    The supply read-modify-write is a CAS
-  *    (`UPDATE … WHERE total_supply = <read value>`, savepoint-guarded
-  *    insert race). A block applies its supplies in token-key order
-  *    and takes each token row's X lock (a no-op `UPDATE`) before it
-  *    reads it, so two partitions on a hot token queue on the row
-  *    instead of both holding S locks and deadlocking on the upgrade;
+  *    A block applies its supplies in token-key order and takes each
+  *    token row's X lock (a no-op `UPDATE`) before it reads it, so two
+  *    partitions on a hot token queue on the row instead of both holding
+  *    S locks and deadlocking on the upgrade; the lock is held until
+  *    commit, so the write after the read is a plain `UPDATE`, and a
+  *    token's first mint is a savepoint-guarded insert that retries from
+  *    the lock when another transaction inserted the row first;
   *  - key bindings are reduced to the LATEST snapshot per (address,
   *    BLOCK) — the last row per address in id order — per block, not per
   *    batch, so every block transaction carries its own snapshot and the
@@ -223,10 +224,11 @@ object TransactionalSink extends Serializable {
     * `UPDATE` takes the row's X lock first, and only a row it locked is
     * read, so a concurrent block transaction on the same token waits for
     * this one's commit instead of reading under an S lock it cannot
-    * upgrade. A row the lock missed is inserted; the insert is
+    * upgrade. The lock is held until commit, so the write needs no
+    * compare-and-swap. A row the lock missed is inserted; the insert is
     * savepoint-guarded, so losing the first-insert race (a PK violation)
-    * degrades to a retry instead of poisoning the block transaction.
-    * The write stays a compare-and-swap on the read value. */
+    * degrades to a retry from the lock instead of poisoning the block
+    * transaction. */
   private def applySupply(c: Connection, st: BlockStatements,
                           key: (Long, Long, String), d: BigInteger): Unit = {
     val (i, s, t) = key
@@ -237,7 +239,8 @@ object TransactionalSink extends Serializable {
         rs.next()
         val cur = rs.getString(1)
         rs.close()
-        done = bind(st.updTok, new BigInteger(cur).add(d).toString, i, s, t, cur).executeUpdate() == 1
+        bind(st.updTok, new BigInteger(cur).add(d).toString, i, s, t).executeUpdate()
+        done = true
       } else {
         val sp = c.setSavepoint()
         try {
@@ -287,7 +290,7 @@ object TransactionalSink extends Serializable {
       "SELECT total_supply FROM cis2_tokens WHERE idx = ? AND subidx = ? AND token_id = ?")
     val updTok: PreparedStatement = c.prepareStatement(
       """UPDATE cis2_tokens SET total_supply = ?
-        |WHERE idx = ? AND subidx = ? AND token_id = ? AND total_supply = ?""".stripMargin)
+        |WHERE idx = ? AND subidx = ? AND token_id = ?""".stripMargin)
     val insTok: PreparedStatement = c.prepareStatement(
       "INSERT INTO cis2_tokens (idx, subidx, token_id, total_supply) VALUES (?, ?, ?, ?)")
 

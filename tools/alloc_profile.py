@@ -2,8 +2,7 @@
 """Heap allocation by thread and by cause, from a JFR recording.
 
 Usage: python3 tools/alloc_profile.py <recording.jfr> [--from S] [--to S]
-                                      [--top N] [--stack-depth N]
-                                      [--within FRAME]...
+                                      [--top N] [--within FRAME]...
 
 Sums the `weight` of every `jdk.ObjectAllocationSample` event (the bytes
 the JVM attributes to that sample) in the recording, optionally only
@@ -49,9 +48,9 @@ short: an executor task's allocation site can sit more than 64 frames
 above its `Executor$TaskRunner.run`, and such a sample then matches no
 frame below the cut. In one whole `ingest` run, 434 of the 1,184 MB of
 executor-task samples had stacks deeper than 64 frames. Record deep stacks by
-starting the JVM with `-XX:FlightRecorderOptions:stackdepth=512`, and
-print them with `--stack-depth 512` (default 64). Needs the JDK's `jfr`
-tool on PATH.
+starting the JVM with `-XX:FlightRecorderOptions:stackdepth=512`; this tool
+reads up to STACK_DEPTH frames of each stack, which is every frame such a
+recording holds. Needs the JDK's `jfr` tool on PATH.
 """
 import argparse
 import collections
@@ -60,6 +59,10 @@ import json
 import re
 import subprocess
 import sys
+
+# Frames per stack that `jfr print` emits; a recording holds no more than
+# the depth it was recorded with, so one constant serves every recording.
+STACK_DEPTH = 512
 
 # (category, substrings of "package.Class.method"), in no order: the
 # nearest matching frame to the allocation site decides.
@@ -116,11 +119,11 @@ def category(frames):
     return cat
 
 
-def samples(path, stack_depth):
+def samples(path):
     """Yields (startTime, thread name, frame names, weight) per sample,
     decoding `jfr print --json` one event at a time."""
     proc = subprocess.Popen(
-        ["jfr", "print", "--json", "--stack-depth", str(stack_depth),
+        ["jfr", "print", "--json", "--stack-depth", str(STACK_DEPTH),
          "--events", "jdk.ObjectAllocationSample", path],
         stdout=subprocess.PIPE, text=True)
     dec = json.JSONDecoder()
@@ -179,8 +182,6 @@ def main():
                     help="seconds after the earliest sample to stop counting at")
     ap.add_argument("--top", type=int, default=10,
                     help="rows of the thread and `other` site tables")
-    ap.add_argument("--stack-depth", type=int, default=64,
-                    help="frames per stack that `jfr print` keeps")
     ap.add_argument("--within", action="append", default=[], metavar="FRAME",
                     help="also total the samples with a frame containing FRAME "
                          "on their stack (repeatable)")
@@ -189,7 +190,7 @@ def main():
     rows = [(seconds(ts) if ts else 0.0, thread, category(frames),
              frames[0] if frames else "?",
              [f for f in a.within if any(f in fr for fr in frames)], w)
-            for ts, thread, frames, w in samples(a.recording, a.stack_depth)]
+            for ts, thread, frames, w in samples(a.recording)]
     t0 = min((r[0] for r in rows), default=0.0)
     by_thread = collections.Counter()
     by_cat = collections.Counter()
